@@ -133,39 +133,38 @@ def test_random_split_disjoint_exhaustive(spark, orders):
     assert 0.5 < n_train / n_all < 0.7
 
 
-def test_sql_build_bit_identical_to_default(spark, orders):
-    """The pure-JVM build variant must produce exactly the same
-    filters as the mapInPandas fold."""
-    from mrbf_spark.bloom.core import build_bloom_filters_sql
-
-    a = {
-        r["key"]: (r["n"], r["m"], r["k"], r["words"])
-        for r in build_bloom_filters(orders, "o_orderpriority", "o_orderkey", 0.05).collect()
-    }
-    b = {
-        r["key"]: (r["n"], r["m"], r["k"], r["words"])
-        for r in build_bloom_filters_sql(orders, "o_orderpriority", "o_orderkey", 0.05).collect()
-    }
-    assert a == b
+# sha256 over the sorted (key, n, m, k, words) rows of the filters
+# built on SF_SMOKE orders (o_orderpriority → o_orderkey), recorded
+# from the pandas-fold build before the Arrow-fold rewrite. Any change
+# to sizing, hashing, bit layout or the merge shows up here.
+_PINNED_FILTER_DIGESTS = {
+    ("spark-murmur3", 0.05): "91ba0328e6fb5e585616ffd236c48401418bfb3ba6203b2029973b9ad287b544",
+    ("spark-murmur3", 0.01): "9029fd2edcf368d9a8bc4468e67b00c4ae434701bc26c3b774f0de4a022affad",
+    ("spark-murmur3", 1e-4): "74c5511a4d84b480cfc583c0cd042fafd587e2f86dcb21134ab7d8e0bf3d9aa7",
+    ("hadoop-murmur2", 0.01): "7efb722b18b0b457669b38159520e623d4cd4068c1e8d0322a73ffc4caaef618",
+}
 
 
-def test_sparse_and_dense_builds_bit_identical(spark, orders):
-    """Forcing sparse partials, forcing dense partials, and the
-    adaptive default must all produce exactly the same filter tables —
-    the representation is a shuffle/memory optimization, never a
-    semantic one. Run at two p (small m → adaptive goes dense; big m →
-    adaptive goes sparse) so both adaptive branches are exercised."""
-    for p in (0.05, 0.0001):
-        built = {
-            rep: {
-                r["key"]: (r["n"], r["m"], r["k"], r["words"])
-                for r in build_bloom_filters(
-                    orders, "o_orderpriority", "o_orderkey", p, representation=rep
-                ).collect()
-            }
-            for rep in ("auto", "dense", "sparse")
-        }
-        assert built["auto"] == built["dense"] == built["sparse"], f"p={p}"
+def _filter_digest(filters) -> str:
+    import hashlib
+    import json
+
+    rows = sorted(
+        (r["key"], r["n"], r["m"], r["k"], list(r["words"])) for r in filters.collect()
+    )
+    return hashlib.sha256(json.dumps(rows).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("flavor, p", sorted(_PINNED_FILTER_DIGESTS))
+def test_filters_bit_identical_to_pin(spark, orders, flavor, p):
+    """The built filters are pinned bit for bit, both on the table as
+    loaded (one partition) and spread over 37 partitions: the filter
+    is a function of the rows, never of how they are partitioned."""
+    for layout, src in (("as-loaded", orders), ("repartition(37)", orders.repartition(37))):
+        got = _filter_digest(
+            build_bloom_filters(src, "o_orderpriority", "o_orderkey", p, flavor=flavor)
+        )
+        assert got == _PINNED_FILTER_DIGESTS[(flavor, p)], (flavor, p, layout)
 
 
 def test_sparse_partials_shrink_shuffle(spark, orders):
