@@ -8,8 +8,8 @@ windows) the north star mandates.
 
 Design rules (see SURVEY.md §7):
 - DataFrame/SQL first; Catalyst plans everything; RDDs nowhere.
-- Bloom filters are packed ``array<long>`` bit words, built with
-  per-partition partial bitsets OR-merged JVM-side — never a
+- Bloom filters are packed ``array<long>`` bit words, built with a
+  per-partition Arrow word fold and a JVM ``bit_or`` merge — never a
   ``collect_list`` of indexes (the reference's ``extend_list`` concat
   is the anti-pattern this replaces).
 - Broadcast joins for small dims / filter tables; AQE on.

@@ -167,57 +167,108 @@ def test_filters_bit_identical_to_pin(spark, orders, flavor, p):
         assert got == _PINNED_FILTER_DIGESTS[(flavor, p)], (flavor, p, layout)
 
 
-def test_sparse_partials_shrink_shuffle(spark, orders):
-    """At a low fp target (big m) the sparse representation must
-    actually be chosen: every partial from the forced-sparse fold must
-    carry fewer index entries than the dense word count it replaces."""
-    from mrbf_spark.bloom.core import num_bits, num_hashes, _partition_partials
+def test_fold_emits_bounded_rows_on_thin_slices(spark, orders):
+    """Map-side combine shape on the normal scale case, many thin
+    partitions (256 slices of the smoke table) at a low fp target
+    (big m): per (partition, key) the fold emits at most
+    min(nwords, k·rows) word rows — one per distinct set word — and
+    the total stays far below shipping a dense bitset per slice."""
+    import numpy as np
+    import pyarrow as pa
 
-    import pyspark.sql.functions as F
+    from mrbf_spark.bloom.core import _fold_words, hash_indexes_col, num_bits, num_hashes
 
     p = 0.0001
     k = num_hashes(p)
-    counts = {
-        r["o_orderpriority"]: r["count"]
-        for r in orders.groupBy("o_orderpriority").count().collect()
-    }
-    m_by_key = {kk: num_bits(n, p) for kk, n in counts.items()}
-    keyed = orders.select(
-        F.col("o_orderpriority").cast("string").alias("__key"),
-        F.col("o_orderkey").cast("string").alias("__value"),
-    )
-    from mrbf_spark.bloom.core import hash_indexes_col
-
+    counts = orders.groupBy("o_orderpriority").count().collect()
+    nwords = np.array([(num_bits(r["count"], p) + 63) >> 6 for r in counts], dtype=np.int64)
     sizes = spark.createDataFrame(
-        [(kk, int(m)) for kk, m in m_by_key.items()], "__key string, m bigint"
+        [(kid, r["o_orderpriority"], num_bits(r["count"], p)) for kid, r in enumerate(counts)],
+        "__kid int, o_orderpriority string, m bigint",
     )
-    hashed = keyed.join(F.broadcast(sizes), "__key").select(
-        "__key", hash_indexes_col(F.col("__value"), F.col("m"), k).alias("__indexes")
+    hashed = (
+        orders.join(F.broadcast(sizes), "o_orderpriority")
+        .select(
+            "__kid",
+            hash_indexes_col(F.col("o_orderkey").cast("string"), F.col("m"), k).alias("__indexes"),
+        )
+        .repartition(256)
+        .cache()
     )
-    # Sparse wins when a partition's index count for a key is under
-    # nwords/2 ≈ 0.15·n_key — i.e. when each partition holds ≪1% of a
-    # key's rows, the normal shape on a many-executor cluster. Force
-    # that shape here (256 slices of the tiny smoke table).
-    hashed = hashed.repartition(256)
-    partials = hashed.mapInPandas(
-        _partition_partials(m_by_key, k, "auto"),
-        "key string, words array<long>, idxs array<long>",
-    ).collect()
-    assert partials, "no partials produced"
-    n_sparse = sum(1 for r in partials if r["idxs"] is not None)
-    # the adaptive fold must pick sparse for the overwhelming majority
-    # of thin slices (a slice that collects ≥3 rows of one key may
-    # legitimately densify — that's the adaptivity working, not a bug)
-    assert n_sparse >= 0.9 * len(partials), (n_sparse, len(partials))
-    shuffled_cells = sum(
-        len(r["idxs"]) if r["idxs"] is not None else len(r["words"]) for r in partials
+    rows_in = {
+        (r["pid"], r["__kid"]): r["count"]
+        for r in hashed.groupBy(F.spark_partition_id().alias("pid"), "__kid").count().collect()
+    }
+    fold = _fold_words(nwords)
+
+    def tagged(batches):
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        for b in fold(batches):
+            yield b.append_column("pid", pa.array(np.full(b.num_rows, pid, dtype=np.int32)))
+
+    out = (
+        hashed.mapInArrow(tagged, "__kid int, widx int, word long, pid int")
+        .groupBy("pid", "__kid")
+        .agg(F.count(F.lit(1)).alias("rows"), F.min("word").alias("w0"), F.max("word").alias("w1"))
+        .collect()
     )
-    dense_cells = sum(((m_by_key[r["key"]] + 63) >> 6) for r in partials)
-    # and the partial shuffle must be far below the all-dense cost
-    assert shuffled_cells < 0.5 * dense_cells, (shuffled_cells, dense_cells)
-    for r in partials:
-        if r["idxs"] is not None:
-            assert list(r["idxs"]) == sorted(set(r["idxs"]))  # canonical form
+    hashed.unpersist()
+    assert {(r["pid"], r["__kid"]) for r in out} == set(rows_in)
+    for r in out:
+        bound = min(int(nwords[r["__kid"]]), k * rows_in[(r["pid"], r["__kid"])])
+        assert r["rows"] <= bound, (r, bound)
+        assert r["w0"] != 0 and r["w1"] != 0
+    emitted = sum(r["rows"] for r in out)
+    dense = sum(int(nwords[kid]) for _, kid in rows_in)
+    assert emitted < 0.5 * dense, (emitted, dense)
+
+
+@pytest.mark.parametrize("slack", [0, 1 << 20])
+def test_fold_kernel_matches_scatter_reference(monkeypatch, slack):
+    """The Arrow fold, run directly on record batches (one of them
+    empty), equals a plain per-key bit scatter — with and without
+    re-reducing the pending words after every batch."""
+    import numpy as np
+    import pyarrow as pa
+
+    import mrbf_spark.bloom.core as core
+
+    monkeypatch.setattr(core, "_COMPACT_SLACK", slack)
+    rng = np.random.default_rng(7)
+    m = np.array([130, 7000, 64], dtype=np.int64)
+    nwords = (m + 63) >> 6
+    k = 4
+    batches, expect = [], [np.zeros(w, dtype=np.int64) for w in nwords]
+    for n in (50, 0, 300, 1):
+        kid = rng.integers(0, len(m), n).astype(np.int32)
+        idx = [rng.integers(0, m[c], k) for c in kid]
+        for c, ix in zip(kid, idx):
+            np.bitwise_or.at(expect[c], ix >> 6, np.left_shift(np.int64(1), ix & 63))
+        batches.append(
+            pa.RecordBatch.from_arrays(
+                [pa.array(kid, pa.int32()), pa.array([list(ix) for ix in idx], pa.list_(pa.int64()))],
+                names=["__kid", "__indexes"],
+            )
+        )
+    got = [np.zeros(w, dtype=np.int64) for w in nwords]
+    for b in core._fold_words(nwords)(iter(batches)):
+        for c, w, word in zip(*(b.column(i).to_numpy() for i in range(3))):
+            assert word != 0 and got[c][w] == 0  # one row per distinct word
+            got[c][w] = word
+    for g, e in zip(got, expect):
+        assert np.array_equal(g, e)
+
+
+def test_key_cardinality_guard(spark, orders, monkeypatch):
+    """Above MAX_FILTER_KEYS distinct keys the build fails loudly,
+    naming the key column and its distinct count."""
+    import mrbf_spark.bloom.core as core
+
+    monkeypatch.setattr(core, "MAX_FILTER_KEYS", 3)
+    with pytest.raises(ValueError, match=r"'o_orderpriority' has 5 distinct"):
+        build_bloom_filters(orders, "o_orderpriority", "o_orderkey", 0.01)
 
 
 def test_probe_nonbroadcast_path(spark, orders, monkeypatch):

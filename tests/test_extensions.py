@@ -1890,22 +1890,6 @@ def test_streaming_equals_batch(spark):
     assert len(stream_rows) > 0
 
 
-def test_broadcast_probe_equals_join_probe(spark):
-    """The J2 broadcast-dict probe path must agree with the broadcast-
-    join probe row for row."""
-    from mrbf_spark.bloom import build_bloom_filters, probe_bloom_filters
-    from mrbf_spark.bloom.core import probe_bloom_filters_broadcast
-
-    orders = load_table(spark, SF_SMOKE, "orders")
-    filters = build_bloom_filters(orders, "o_orderpriority", "o_orderkey", 0.05).cache()
-    filters.count()
-    a = probe_bloom_filters(orders, "o_orderpriority", "o_orderkey", filters, k=5)
-    b = probe_bloom_filters_broadcast(orders, "o_orderpriority", "o_orderkey", filters)
-    ra = {(r["o_orderkey"], r["bloom_hit"]) for r in a.select("o_orderkey", "bloom_hit").collect()}
-    rb = {(r["o_orderkey"], r["bloom_hit"]) for r in b.select("o_orderkey", "bloom_hit").collect()}
-    assert ra == rb and len(ra) > 0
-
-
 def test_stateful_streaming_user_totals(spark):
     """applyInPandasWithState end-to-end: final per-user counts must
     equal the batch groupBy."""

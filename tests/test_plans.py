@@ -72,11 +72,26 @@ def test_bloom_probe_path_is_jvm_only_broadcast(spark):
     ).filter(F.col("bloom_hit") == 1)
     plan = physical_plan(probed)
     assert "BroadcastHashJoin" in plan
-    # the cached filter build contains Python (mapInPandas); the live
-    # probe section must not — strip the cached-relation subtree first
+    # the cached filter build contains Python (its mapInArrow fold);
+    # the live probe section must not — strip the cached-relation
+    # subtree first
     live = plan.split("InMemoryTableScan")[0]
     assert "Python" not in live
     assert "SortMergeJoin" not in live
+
+
+def test_bloom_build_has_one_python_stage_and_no_round_robin(spark):
+    """The build is one mapInArrow fold per input partition feeding a
+    JVM bit_or merge: exactly one Python stage, no pandas stage, and
+    no round-robin repartition of the input rows."""
+    orders = load_table(spark, SF_SMOKE, "orders")
+    # a p no other test caches, so the plan is never an InMemoryTableScan
+    plan = physical_plan(build_bloom_filters(orders, "o_orderpriority", "o_orderkey", 0.03))
+    assert plan.count("MapInArrow") == 1
+    assert "MapInPandas" not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "RoundRobinPartitioning" not in plan
+    assert "partial_bit_or" in plan
 
 
 def test_topk_uses_window_not_global_sort(spark):
