@@ -97,7 +97,7 @@ def _or_reduce(gid: np.ndarray, word: np.ndarray) -> tuple[np.ndarray, np.ndarra
     sorted distinct ids and their merged words."""
     if len(gid) == 0:
         return gid, word
-    order = np.argsort(gid, kind="stable")
+    order = np.argsort(gid)
     gid, word = gid[order], word[order]
     starts = np.flatnonzero(np.r_[True, gid[1:] != gid[:-1]])
     return gid[starts], np.bitwise_or.reduceat(word, starts)
