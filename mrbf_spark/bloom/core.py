@@ -17,17 +17,18 @@ Spark-first design decisions (vs. the reference's RDD/MR pipeline):
 - **Bit storage**: packed ``array<long>`` of ceil(m/64) words
   (8× smaller than the reference's list[bool] pickle,
   bloomfilters_builder.py:100), directly broadcastable.
-- **Build = Arrow fold per input partition, JVM ``bit_or`` merge.**
-  The reference concatenates per-key index lists in the reduce
-  (``extend_list``, bloomfilters_builder.py:44-54) — O(n·k) ints
-  shuffled per key, the anti-pattern at 100 TB. Here one
+- **Build = Arrow fold per input partition, JVM ``bit_or`` merge,
+  driver assembly.** The reference concatenates per-key index lists in
+  the reduce (``extend_list``, bloomfilters_builder.py:44-54) — O(n·k)
+  ints shuffled per key, the anti-pattern at 100 TB. Here one
   ``mapInArrow`` stage folds each input partition (the map-side
   combiner): it ORs the partition's bits into 64-bit words with one
   numpy sort + ``bitwise_or.reduceat`` and emits one
   (key, word index, word) row per distinct set word. A JVM
   ``groupBy(key, widx).agg(bit_or)`` — partial aggregation on the map
-  side, final after the shuffle — merges those rows, and each key's
-  word array is assembled once from its merged words.
+  side, final after the shuffle — merges those rows; the driver
+  scatters the merged words into one local Arrow filter table, the
+  place every probe broadcasts it from anyway.
 - **Probe = broadcast hash join** (the J1/J2 collapse): filters are a
   tiny table (one row per key), so ``probe.join(broadcast(filters))``
   replaces both the reference's driver-collect-and-broadcast
@@ -41,10 +42,11 @@ batch. No raw row and no partial bitset is shuffled: the fold emits
 (partition, key), and no task ever collects a list of partials. Fold
 memory per task is bounded by the distinct words it has seen
 (≤ Σ_keys m/64, compacted as batches arrive), never a dense
-n_keys × m/8. The full m/8 bytes of a key exist once, in the row that
-IS the output. The driver holds one (key, count) row per key — per-key
-filters only make sense for low-cardinality keys (the reference has 10
-ratings), and ``MAX_FILTER_KEYS`` fails the build loudly above that.
+n_keys × m/8. The driver holds one (key, count) row per key, then the
+merged words (≤ Σ m/64 rows: the bytes a broadcast probe ships from it
+anyway). Per-key filters only make sense for low-cardinality keys (the
+reference has 10 ratings); ``MAX_FILTER_KEYS`` and
+``BROADCAST_CEILING_BYTES`` fail the build loudly right after the counts.
 """
 
 from __future__ import annotations
@@ -68,6 +70,10 @@ FILTER_SCHEMA = "key string, n bigint, m bigint, k int, words array<long>"
 # a high-cardinality key column (an id, not a category) must fail here
 # instead of exhausting the driver.
 MAX_FILTER_KEYS = 1 << 16
+
+# Filter-word byte ceiling: the build refuses to assemble more on the
+# driver, and the "auto" probe broadcasts only filter tables below it.
+BROADCAST_CEILING_BYTES = 512 * 1024 * 1024
 
 # Output of the per-partition fold: one row per distinct set word.
 _WORD_SCHEMA = "__kid int, widx int, word long"
@@ -164,16 +170,19 @@ def build_bloom_filters(
     flavor: str = "spark-murmur3",
 ) -> DataFrame:
     """Build one Bloom filter per distinct `key_col` value over the
-    string form of `value_col`. Returns FILTER_SCHEMA rows.
+    string form of `value_col`. Returns FILTER_SCHEMA rows as a local
+    table (a LocalTableScan): the build runs eagerly, here.
 
     Counts (driver): per-key counts → (n, m, k). This is the
     reference's linecount job (util/count-number-of-keys.py:33-38)
     folded into groupBy().count() + a one-row-per-key collect; raises
-    ValueError above MAX_FILTER_KEYS keys.
+    ValueError above MAX_FILTER_KEYS keys or BROADCAST_CEILING_BYTES
+    of filter words.
     Fold: hash every row (codegen), then one mapInArrow stage ORs each
     input partition's bits into (key, widx, word) rows (_fold_words).
-    Merge: JVM bit_or per (key, widx), then each key's dense word
-    array is assembled once from its merged words.
+    Merge: JVM bit_or per (key, widx); the driver scatters the merged
+    words into each key's dense word array, as the reference's builder
+    finishes its filters there (bloomfilters_builder.py:100).
     """
     spark = df.sparkSession
     k = num_hashes(p)
@@ -183,53 +192,52 @@ def build_bloom_filters(
     ).filter(F.col("__key").isNotNull() & F.col("__value").isNotNull())
 
     counts = keyed.groupBy("__key").count().collect()  # one row per key: tiny by design
-    if not counts:
-        return spark.createDataFrame([], FILTER_SCHEMA)
     if len(counts) > MAX_FILTER_KEYS:
         raise ValueError(
             f"build_bloom_filters: key column {key_col!r} has {len(counts)} distinct"
             f" values, above MAX_FILTER_KEYS={MAX_FILTER_KEYS}; per-key filters need a"
             " low-cardinality key"
         )
+    keys = [r["__key"] for r in counts]
     n = np.array([r["count"] for r in counts], dtype=np.int64)
     m = np.array([num_bits(int(c), p) for c in n], dtype=np.int64)
-    # An Arrow table becomes a LocalTableScan: broadcasting it needs no
-    # Spark job and no Python worker (a list of tuples would be a
-    # Python RDD, scanned once per broadcast).
-    sizes = spark.createDataFrame(
-        pa.table(
-            {
-                "__kid": pa.array(np.arange(len(counts), dtype=np.int32)),
-                "__key": pa.array([r["__key"] for r in counts], pa.string()),
-                "n": pa.array(n),
-                "m": pa.array(m),
-            }
+    nwords = (m + 63) >> 6
+    offsets = np.concatenate(([0], np.cumsum(nwords)))
+    if offsets[-1] * 8 > BROADCAST_CEILING_BYTES:  # also keeps offsets in int32
+        raise ValueError(
+            f"build_bloom_filters: filters over key column {key_col!r} need"
+            f" {offsets[-1] * 8} bytes of words, above BROADCAST_CEILING_BYTES="
+            f"{BROADCAST_CEILING_BYTES}; raise p or use fewer keys"
         )
-    )
 
-    hashed = keyed.join(F.broadcast(sizes), "__key").select(
-        "__kid", _indexes_col(F.col("__value"), F.col("m"), k, flavor).alias("__indexes")
-    )
-    words = (
-        hashed.mapInArrow(_fold_words((m + 63) >> 6), _WORD_SCHEMA)
-        .groupBy("__kid", "widx")
-        .agg(F.bit_or("word").alias("word"))
-    )
-    return (
-        words.groupBy("__kid")
-        .agg(F.map_from_entries(F.collect_list(F.struct("widx", "word"))).alias("__wmap"))
-        .join(F.broadcast(sizes), "__kid")
-        .select(
-            F.col("__key").alias("key"),
-            "n",
-            "m",
-            F.lit(k).cast("int").alias("k"),
-            F.expr(
-                "transform(sequence(0, int((m + 63) / 64) - 1),"
-                " i -> coalesce(__wmap[i], 0L))"
-            ).alias("words"),
+    flat = np.zeros(offsets[-1], dtype=np.int64)
+    if keys:
+        # An Arrow table is a LocalTableScan, so no Python worker scans
+        # it; its broadcast is still one small Spark job.
+        sizes = spark.createDataFrame(
+            pa.table({"__kid": np.arange(len(keys), dtype=np.int32), "__key": keys, "m": m})
         )
+        hashed = keyed.join(F.broadcast(sizes), "__key").select(
+            "__kid", _indexes_col(F.col("__value"), F.col("m"), k, flavor).alias("__indexes")
+        )
+        merged = (
+            hashed.mapInArrow(_fold_words(nwords), _WORD_SCHEMA)
+            .groupBy("__kid", "widx")
+            .agg(F.bit_or("word").alias("word"))
+            .toArrow()
+        )
+        kid, widx, word = (merged[c].to_numpy() for c in ("__kid", "widx", "word"))
+        flat[offsets[kid] + widx] = word
+    table = pa.table(
+        {
+            "key": pa.array(keys, pa.string()),
+            "n": n,
+            "m": m,
+            "k": np.full(len(keys), k, dtype=np.int32),
+            "words": pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), pa.array(flat)),
+        }
     )
+    return spark.createDataFrame(table, FILTER_SCHEMA)
 
 
 # Probe expression: all k hash positions set ⇒ membership "maybe".
@@ -238,12 +246,6 @@ _PROBE_EXPR = (
     "forall(__indexes, i ->"
     " (element_at(words, int(shiftright(i, 6)) + 1) & shiftleft(1L, int(i & 63))) != 0)"
 )
-
-
-# Above this many bitset bytes the filter table stops being a sane
-# broadcast (executor memory × fan-out); the probe falls back to a
-# plain key join and Catalyst picks the shuffle strategy.
-BROADCAST_CEILING_BYTES = 512 * 1024 * 1024
 
 
 def probe_bloom_filters(

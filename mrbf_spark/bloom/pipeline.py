@@ -69,9 +69,7 @@ def bloom_fp_pipeline(
     from .sizing import num_hashes
 
     train, test = train_test_split(df, seed=seed)
-    # scoped_cache: released when the next catalog query begins, not
-    # pinned for the session (r3 ADVICE cache-hygiene pattern).
-    filters = scoped_cache(build_bloom_filters(train, key_col, value_col, p))
+    filters = build_bloom_filters(train, key_col, value_col, p)
     probed = probe_bloom_filters(
         test, key_col, value_col, filters, k=num_hashes(p), broadcast=True
     )

@@ -114,14 +114,8 @@ def decontaminate_docs(
     if eval_grams is None:
         eval_grams = doc_ngrams(eval_docs, n).select("g").distinct()
     if filters is None:
-        # scoped_cache, not .cache(): released when the next catalog
-        # query starts instead of pinning executor storage for the
-        # session (the r3 ADVICE leak pattern, fixed as in
-        # bloom_queries).
-        filters = scoped_cache(
-            build_bloom_filters(
-                eval_grams.withColumn("__g", F.lit("eval")), "__g", "g", p
-            )
+        filters = build_bloom_filters(
+            eval_grams.withColumn("__g", F.lit("eval")), "__g", "g", p
         )
     survivors = probe_bloom_filters(
         corpus_grams.withColumn("__g", F.lit("eval")),
@@ -191,10 +185,8 @@ def decontaminate_cut(
     if eval_grams is None:
         eval_grams = doc_ngrams(eval_docs, n).select("g").distinct()
     if filters is None:
-        filters = scoped_cache(
-            build_bloom_filters(
-                eval_grams.withColumn("__g", F.lit("eval")), "__g", "g", p
-            )
+        filters = build_bloom_filters(
+            eval_grams.withColumn("__g", F.lit("eval")), "__g", "g", p
         )
     toks_arr = F.split(F.col("text"), " ")
     pos_grams = corpus.select(
@@ -634,10 +626,8 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval_grams = (
         doc_ngrams(eval_docs, NGRAM_N).select("g").distinct().localCheckpoint()
     )
-    shared_filters = scoped_cache(
-        build_bloom_filters(
-            eval_grams.withColumn("__g", F.lit("eval")), "__g", "g", P
-        )
+    shared_filters = build_bloom_filters(
+        eval_grams.withColumn("__g", F.lit("eval")), "__g", "g", P
     )
     ng = decontaminate_docs(
         corpus, eval_docs, eval_grams=eval_grams, filters=shared_filters

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..bloom import build_bloom_filters, fp_report, probe_bloom_filters
 from ..bloom.sizing import num_hashes
 from ..bloom.pipeline import bloom_fp_pipeline, deterministic_split
-from ..registry import register, scoped_cache
+from ..registry import register
 from ..tables import load_table
 
 P = 0.01
@@ -35,7 +35,7 @@ def bloom_sizing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # never miss. (Unregistered builder; see `bloom_build_invariants`.)
 def bloom_no_false_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    filters = scoped_cache(build_bloom_filters(orders, "o_orderpriority", "o_orderkey", P))
+    filters = build_bloom_filters(orders, "o_orderpriority", "o_orderkey", P)
     probed = probe_bloom_filters(
         orders, "o_orderpriority", "o_orderkey", filters, k=num_hashes(P), broadcast=True
     )
@@ -63,7 +63,7 @@ def bloom_no_false_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bloom_build_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    filters = scoped_cache(build_bloom_filters(orders, "o_orderpriority", "o_orderkey", P))
+    filters = build_bloom_filters(orders, "o_orderpriority", "o_orderkey", P)
     probed = probe_bloom_filters(
         orders, "o_orderpriority", "o_orderkey", filters, k=num_hashes(P), broadcast=True
     )
@@ -107,7 +107,7 @@ def bloom_fp_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bloom_split_fp_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     train, test = deterministic_split(orders)
-    filters = scoped_cache(build_bloom_filters(train, "o_orderpriority", "o_orderkey", P))
+    filters = build_bloom_filters(train, "o_orderpriority", "o_orderkey", P)
     probed = probe_bloom_filters(
         test, "o_orderpriority", "o_orderkey", filters, k=num_hashes(P), broadcast=True
     )
@@ -161,10 +161,8 @@ def bloom_semijoin_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT")
-    filters = scoped_cache(
-        build_bloom_filters(
-            urgent.withColumn("__g", F.lit("urgent")), "__g", "o_orderkey", P
-        )
+    filters = build_bloom_filters(
+        urgent.withColumn("__g", F.lit("urgent")), "__g", "o_orderkey", P
     )
     # Stage 1: bloom prune — codegen'd probe, no shuffle of lineitem.
     # broadcast=True (not "auto"): per-key filters are small by this

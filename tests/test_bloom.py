@@ -95,7 +95,16 @@ def test_unknown_keys_skipped(spark, orders):
 
 
 def test_filter_table_shape(spark, orders):
+    from pyspark.sql.types import StructType
+
+    from mrbf_spark.bloom.core import FILTER_SCHEMA
+
     filters = build_bloom_filters(orders, "o_orderpriority", "o_orderkey", 0.01)
+    # parquet round trips, the CLI test subcommand and the stream probe
+    # read these columns by name and type
+    assert [(f.name, f.dataType) for f in filters.schema] == [
+        (f.name, f.dataType) for f in StructType.fromDDL(FILTER_SCHEMA)
+    ]
     rows = filters.collect()
     assert {r["key"] for r in rows} == {
         "1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"
@@ -269,6 +278,26 @@ def test_key_cardinality_guard(spark, orders, monkeypatch):
     monkeypatch.setattr(core, "MAX_FILTER_KEYS", 3)
     with pytest.raises(ValueError, match=r"'o_orderpriority' has 5 distinct"):
         build_bloom_filters(orders, "o_orderpriority", "o_orderkey", 0.01)
+
+
+def test_filter_bytes_ceiling(spark, orders, monkeypatch):
+    """Filters whose words would exceed BROADCAST_CEILING_BYTES fail
+    right after the counts, naming the key column, the byte total and
+    the ceiling, before any fold work runs."""
+    import mrbf_spark.bloom.core as core
+
+    p = 0.01
+    counts = orders.groupBy("o_orderpriority").count().collect()
+    need = sum((core.num_bits(r["count"], p) + 63) // 64 * 8 for r in counts)
+    monkeypatch.setattr(core, "BROADCAST_CEILING_BYTES", need - 1)
+    with monkeypatch.context() as mp:
+        mp.setattr(type(orders), "mapInArrow", None)  # a fold attempt would fail differently
+        with pytest.raises(
+            ValueError, match=rf"'o_orderpriority' need {need} bytes .*_BYTES={need - 1};"
+        ):
+            build_bloom_filters(orders, "o_orderpriority", "o_orderkey", p)
+    monkeypatch.setattr(core, "BROADCAST_CEILING_BYTES", need)  # exactly at it still builds
+    assert build_bloom_filters(orders, "o_orderpriority", "o_orderkey", p).count() == 5
 
 
 def test_probe_nonbroadcast_path(spark, orders, monkeypatch):

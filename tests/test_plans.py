@@ -65,33 +65,42 @@ def test_bloom_probe_path_is_jvm_only_broadcast(spark):
     filter probe. No Python stage, no shuffle of the probe table."""
     orders = load_table(spark, SF_SMOKE, "orders")
     filters = build_bloom_filters(orders, "o_orderpriority", "o_orderkey", 0.05)
-    filters = filters.cache()
-    filters.count()
     probed = probe_bloom_filters(
         orders, "o_orderpriority", "o_orderkey", filters, k=5
     ).filter(F.col("bloom_hit") == 1)
     plan = physical_plan(probed)
     assert "BroadcastHashJoin" in plan
-    # the cached filter build contains Python (its mapInArrow fold);
-    # the live probe section must not — strip the cached-relation
-    # subtree first
-    live = plan.split("InMemoryTableScan")[0]
-    assert "Python" not in live
-    assert "SortMergeJoin" not in live
+    # the filter table is a local table, so the whole plan is JVM-only
+    assert "Python" not in plan
+    assert "SortMergeJoin" not in plan
 
 
-def test_bloom_build_has_one_python_stage_and_no_round_robin(spark):
-    """The build is one mapInArrow fold per input partition feeding a
-    JVM bit_or merge: exactly one Python stage, no pandas stage, and
-    no round-robin repartition of the input rows."""
+def test_bloom_build_has_one_python_stage_and_no_round_robin(spark, monkeypatch):
+    """The build collects one mapInArrow fold per input partition
+    feeding a JVM bit_or merge: exactly one Python stage, no pandas
+    stage, and no round-robin repartition of the input rows. What it
+    returns is a bare local table: no Python, no Exchange."""
     orders = load_table(spark, SF_SMOKE, "orders")
-    # a p no other test caches, so the plan is never an InMemoryTableScan
-    plan = physical_plan(build_bloom_filters(orders, "o_orderpriority", "o_orderkey", 0.03))
+    collected = []
+    to_arrow = type(orders).toArrow
+
+    def spy(df):
+        collected.append(physical_plan(df))
+        return to_arrow(df)
+
+    monkeypatch.setattr(type(orders), "toArrow", spy)
+    filters = build_bloom_filters(orders, "o_orderpriority", "o_orderkey", 0.03)
+    monkeypatch.undo()
+    assert len(collected) == 1
+    plan = collected[0]
     assert plan.count("MapInArrow") == 1
     assert "MapInPandas" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "RoundRobinPartitioning" not in plan
     assert "partial_bit_or" in plan
+    out = physical_plan(filters)
+    assert out.startswith("LocalTableScan") and len(out.strip().splitlines()) == 1
+    assert "Python" not in out and "Exchange" not in out
 
 
 def test_topk_uses_window_not_global_sort(spark):
