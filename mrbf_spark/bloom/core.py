@@ -254,7 +254,6 @@ def probe_bloom_filters(
     value_col: str,
     filters: DataFrame,
     *,
-    hit_col: str = "bloom_hit",
     k: int | None = None,
     broadcast: bool | str = "auto",
     flavor: str = "spark-murmur3",
@@ -266,8 +265,9 @@ def probe_bloom_filters(
 
     Inner join ⇒ rows whose key has no filter are dropped — the
     reference's skip-unknown-keys semantics
-    (BloomFilterMapper.java:89-93, bloomfilters_util.py:75-76).
-    Returns the input columns plus an integer `hit_col` (1 = maybe
+    (BloomFilterMapper.java:89-93, bloomfilters_util.py:75-76); an
+    empty filter table yields zero rows.
+    Returns the input columns plus an integer `bloom_hit` (1 = maybe
     present, 0 = definitely absent). Pass `k` (from sizing.num_hashes)
     to skip the driver-side lookup action.
 
@@ -275,18 +275,18 @@ def probe_bloom_filters(
     "auto" (default) broadcasts only while the total bitset size is
     under BROADCAST_CEILING_BYTES.
 
-    Driver-action budget: when both `k` and the auto size-check are
-    needed they come from ONE combined agg over the one-row-per-key
-    filter table (max(k) + sum(m) in a single job — r1 spent two jobs
-    here, one per scalar; VERDICT r1 #4). Pass `k` AND an explicit
-    broadcast flag to skip the action entirely (the catalog paths do).
+    Driver-action budget: when `k` or the auto size-check is needed,
+    both come from ONE agg over the one-row-per-key filter table
+    (max(k) + sum(m) in a single job). Pass `k` AND an explicit
+    broadcast flag to skip the action entirely (the catalog and stream
+    paths do).
     """
     if k is None or broadcast == "auto":
         stats = filters.agg(
             F.max("k").alias("k"), F.sum("m").alias("total_bits")
         ).collect()[0]
         if k is None:
-            k = int(stats["k"])
+            k = int(stats["k"] or 1)  # an empty table joins no rows; any k plans
         if broadcast == "auto":
             broadcast = (int(stats["total_bits"] or 0) >> 3) <= BROADCAST_CEILING_BYTES
     probe = df.withColumn("__key", F.col(key_col).cast("string")).withColumn(
@@ -300,12 +300,12 @@ def probe_bloom_filters(
         joined.withColumn(
             "__indexes", _indexes_col(F.col("__value"), F.col("m"), k, flavor)
         )
-        .withColumn(hit_col, F.expr(_PROBE_EXPR).cast("int"))
+        .withColumn("bloom_hit", F.expr(_PROBE_EXPR).cast("int"))
         .drop("__key", "__value", "__indexes", "m", "words")
     )
 
 
-def fp_report(probed: DataFrame, key_col: str, hit_col: str = "bloom_hit") -> DataFrame:
+def fp_report(probed: DataFrame, key_col: str) -> DataFrame:
     """Per-key (false_positives, total_tests, fp_rate) over a probe of
     values known to be absent — the tester's output shape
     (bloomfilters_tester.py:94-112, TesterResultsWritable.java:18-20).
@@ -313,7 +313,7 @@ def fp_report(probed: DataFrame, key_col: str, hit_col: str = "bloom_hit") -> Da
     return (
         probed.groupBy(F.col(key_col).cast("string").alias("key"))
         .agg(
-            F.sum(hit_col).cast("long").alias("false_positives"),
+            F.sum("bloom_hit").cast("long").alias("false_positives"),
             F.count(F.lit(1)).alias("total_tests"),
         )
         .withColumn("fp_rate", F.col("false_positives") / F.col("total_tests"))

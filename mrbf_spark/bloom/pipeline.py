@@ -31,20 +31,6 @@ def train_test_split(
     return train, test
 
 
-def deterministic_split(
-    df: DataFrame, key_col: str = "o_orderkey", buckets: int = 10, train_buckets: int = 6
-) -> tuple[DataFrame, DataFrame]:
-    """Content-deterministic ~60/40 split on a unique integer key — the
-    oracle-checkable twin of :func:`train_test_split`. randomSplit is
-    partition-order dependent (unpredictable from SQL, and unstable
-    across readers with different partitioning), while ``key % 10 < 6``
-    is reproducible by any engine — which is also what you want from a
-    train/eval split of a 100 TB corpus: membership survives re-reads,
-    re-partitioning, and engine swaps."""
-    pred = (F.col(key_col) % buckets) < train_buckets
-    return df.filter(pred), df.filter(~pred)
-
-
 def half_up_key(col) -> F.Column:
     """Half-up rounding key — floor(x + 0.5), NOT round() (banker's /
     half-even in some engines). Reproduces bloomfilters_util.py:98 and

@@ -194,19 +194,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_dedup(index, new_docs)
 
 
-# Survivor set (the actual dedup output a pipeline consumes).
-# Unregistered builder: the registered `dedup_exact` already carries
-# the survivor ids as keep_id (this is its doc_id projection), and
-# `curation_pipeline` exercises the semi-join consumption path.
-def dedup_exact_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.groupBy(fingerprint_col(F.col("text")).alias("fingerprint"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-
-
 # ------------------------------------------------------------- shingles
 
 # Word n-gram shingles as a JVM expression: tokens → sliding windows.
@@ -1131,21 +1118,6 @@ def simhash_pairs(d: DataFrame) -> DataFrame:
         .withColumn("hamming", hamming.cast("int"))
         .filter(F.col("hamming") <= _SIMHASH_HAMMING)
         .select("doc_a", "doc_b", "hamming")
-    )
-
-
-# ------------------------------------------------------- n-gram jaccard
-
-
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-3-gram Jaccard over LSH candidates at a lower
-    threshold — the precision pass after minhash recall. Unregistered
-    builder: identical to the registered `dedup_minhash_lsh` (which
-    runs at threshold 0.2 and carries exact jaccard per pair) —
-    guaranteed=True pinned so the identity holds on ANY corpus, not
-    just under the auto route's budget."""
-    return minhash_candidates(
-        load_table(spark, sf_dir, "documents"), threshold=0.2, guaranteed=True
     )
 
 

@@ -2,8 +2,8 @@
 rule-based filter battery (Rae et al. 2021, "Scaling Language Models:
 Methods, Analysis & Insights from Training Gopher", App. A) that every
 large-scale pretraining curation pipeline runs before model-based
-scoring. Complements the repo's heuristic quality_score
-(functions/text.py): that one is a weighted score, this one is the
+scoring. Complements the repo's heuristic `quality_lang` signals
+(functions/text.py): those are continuous scores, this one is the
 published hard-threshold rule set, reported per rule so a pipeline can
 audit WHY a document was dropped.
 

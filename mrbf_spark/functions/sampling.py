@@ -67,15 +67,6 @@ def corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- seeded stratified Bernoulli sample per language (sampleBy) —
-# kept as the library form; row membership is RNG-partition-dependent,
-# so its invariants (rate ≈ fraction, subset) are pinned in tests.
-def stratified_sample_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    sampled = d.sampleBy("lang", SAMPLE_FRACTIONS, seed=SAMPLE_SEED)
-    return sampled.groupBy("lang").agg(F.count(F.lit(1)).alias("n_sampled"))
-
-
 # --- registered form (hash-matched, r2 VERDICT #4): systematic
 # stratified sampling — keep a row iff doc_id % 100 < rate·100 for its
 # stratum. Content-deterministic membership is reproducible from SQL

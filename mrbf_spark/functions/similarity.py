@@ -85,12 +85,6 @@ def _ldot_sql(a: str, b: str) -> str:
     return f"(CAST({_ldot_int_sql(a, b)} AS DOUBLE) / 1000000000.0)"
 
 
-def norms_df(emb: DataFrame) -> DataFrame:
-    return emb.select(
-        "vec_id", _decimal_dot(F.col("embedding"), F.col("embedding")).alias("nrm")
-    )
-
-
 def cosine_pairs(
     queries: DataFrame, corpus: DataFrame, dot: str = "jvm"
 ) -> DataFrame:

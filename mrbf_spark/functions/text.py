@@ -256,22 +256,6 @@ def quality_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", *quality_lang_cols())
 
 
-def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-only projection (unregistered builder; the registered
-    catalog entry is the merged `quality_lang`)."""
-    return quality_lang(spark, sf_dir).select(
-        "doc_id", "stopword_ratio", "mean_token_len", "length_prior"
-    )
-
-
-def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID-only projection (unregistered builder; see
-    `quality_lang`)."""
-    return quality_lang(spark, sf_dir).select(
-        "doc_id", "score_en", "score_de", "score_es", "lang_guess"
-    )
-
-
 # Builder since r4: the per-doc fingerprint rides in `token_stats`'s
 # profile (same scan, same column name), so the standalone projection
 # left the catalog to free a slot for dedup_incremental.
@@ -417,17 +401,6 @@ def repetition_stats_df(d: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
         (F.col("n_distinct").cast("double") / F.col("n_tokens")).alias("distinct_ratio"),
         (F.col("top_token_n").cast("double") / F.col("n_tokens")).alias("top_token_frac"),
         (F.col("top_bigram_n").cast("double") / F.col("n_bigrams")).alias("top_bigram_frac"),
-    )
-
-
-def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-ish vs whitespace token counts (unregistered builder; the
-    registered catalog entry is the merged `token_stats`)."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.regexp_count(F.col("text"), F.lit(_BPE_ISH)).cast("long").alias("n_bpe_tokens"),
-        token_count_col(F.col("text")).alias("n_ws_tokens"),
     )
 
 

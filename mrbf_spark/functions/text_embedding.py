@@ -48,23 +48,6 @@ TE_SALT = "temb"
 TEXT_SEM_TAU = 0.8
 
 
-def _shingle_col(text: Column) -> Column:
-    """Word-bigram shingles ('tok_i tok_i+1'); a 1-token doc yields
-    its lone token."""
-    toks = F.split(F.lower(text), " ")
-    bigrams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 1),
-        lambda i: F.concat_ws(
-            " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-        ),
-    )
-    return F.explode(
-        F.when(F.size(toks) >= 2, bigrams).otherwise(
-            F.array(F.element_at(toks, 1))
-        )
-    )
-
-
 def _slot_col(tok: Column, dim: int = TE_DIM) -> Column:
     """Hashed feature slot of one shingle (shared by the grouped batch
     embedding and the r7 per-row streaming twin)."""
@@ -85,8 +68,8 @@ def _sign_col(tok: Column) -> Column:
 
 
 def _bigrams_col(text: Column) -> Column:
-    """The UN-exploded bigram array behind _shingle_col (the per-row
-    form the streaming twin folds over)."""
+    """Word-bigram shingles ('tok_i tok_i+1') as a per-row array; a
+    1-token doc yields its lone token."""
     toks = F.split(F.lower(text), " ")
     bigrams = F.transform(
         F.sequence(F.lit(1), F.size(toks) - 1),

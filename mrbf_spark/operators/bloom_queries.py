@@ -1,13 +1,13 @@
 """Bloom-filter pipeline as catalog queries (SURVEY.md §2 B2).
 
-The sizing query is fully SQL-expressible (the linecount job + the
-closed-form geometry), so it gets a real hash-matched oracle.
-`bloom_no_false_negatives` encodes the reference's hard invariant
-("there can never be false negatives", spec PDF) as its oracle: the
-expected output is literally zero misses per key. The split/fp entry
-combines a deterministic (SQL-reproducible) split with bounded-boolean
-fp reporting so it hash-matches too; the statistical fp_rate ≈ p
-checks stay in tests/test_bloom.py over the seeded random split.
+`bloom_build_invariants` pairs the closed-form sizing (the linecount
+job + the geometry, fully SQL-expressible) with the reference's hard
+invariant ("there can never be false negatives", spec PDF), so its
+oracle is exact: per-key (n, m, k) and literally zero misses per key.
+The split/fp entry combines a deterministic (SQL-reproducible) split
+with bounded-boolean fp reporting so it hash-matches too; the
+statistical fp_rate ≈ p checks stay in tests/test_bloom.py over the
+seeded random split.
 """
 
 from __future__ import annotations
@@ -16,32 +16,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..bloom import build_bloom_filters, fp_report, probe_bloom_filters
 from ..bloom.sizing import num_hashes
-from ..bloom.pipeline import bloom_fp_pipeline, deterministic_split
+from ..bloom.pipeline import bloom_fp_pipeline
 from ..registry import register
 from ..tables import load_table
 
 P = 0.01
-
-
-# --- A1 + sizing math (bloomfilters_util.py:15,27): per-key n → (m, k).
-# (Unregistered builder; see `bloom_build_invariants`.)
-def bloom_sizing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    filters = build_bloom_filters(orders, "o_orderpriority", "o_orderkey", P)
-    return filters.select("key", "n", "m", "k")
-
-
-# --- spec invariant: probing the train set against its own filters can
-# never miss. (Unregistered builder; see `bloom_build_invariants`.)
-def bloom_no_false_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    filters = build_bloom_filters(orders, "o_orderpriority", "o_orderkey", P)
-    probed = probe_bloom_filters(
-        orders, "o_orderpriority", "o_orderkey", filters, k=num_hashes(P), broadcast=True
-    )
-    return probed.groupBy(F.col("o_orderpriority").alias("key")).agg(
-        F.sum(1 - F.col("bloom_hit")).cast("long").alias("false_negatives")
-    )
 
 
 # --- sizing geometry + the no-false-negatives spec invariant in ONE
@@ -106,7 +85,8 @@ def bloom_fp_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bloom_split_fp_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    train, test = deterministic_split(orders)
+    train_rows = F.col("o_orderkey") % 10 < 6
+    train, test = orders.filter(train_rows), orders.filter(~train_rows)
     filters = build_bloom_filters(train, "o_orderpriority", "o_orderkey", P)
     probed = probe_bloom_filters(
         test, "o_orderpriority", "o_orderkey", filters, k=num_hashes(P), broadcast=True

@@ -68,18 +68,6 @@ def filter_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(path).select("key", "n", "m", "k")
 
 
-# --- (ext) ORC round-trip: Spark's second native columnar format (no
-# extra jars) — the filter table survives write→read bit-identically,
-# same check shape as the parquet persistence path. No oracle (DuckDB
-# has no ORC reader); pinned by test_orc_roundtrip_bit_identical.
-def filter_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    filters = build_bloom_filters(orders, "o_orderpriority", "o_orderkey", 0.01)
-    path = scratch(sf_dir, "filters_orc")
-    filters.write.mode("overwrite").orc(path)
-    return spark.read.orc(path)
-
-
 # --- M8: output formatting — the reference's "rating\tcount" text
 # render (count-number-of-keys.py:37, TesterResultsWritable.java:45-49).
 def formatted_output(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,16 +3,18 @@ Structured Streaming pipeline — the streaming half of the semi-join
 pruning story (e.g. drop already-seen document ids from an ingest
 stream before the expensive exact dedup).
 
-Static-stream joins are Catalyst-native: the static side is planned
-once (broadcast here) and every micro-batch probes against it with the
-same codegen'd bit-test expression the batch probe uses.
+Static-stream joins are Catalyst-native: the stream goes through the
+batch `probe_bloom_filters` unchanged — the static side is broadcast
+once and every micro-batch runs the same bit-test expression. That
+`forall` is a higher-order function, so it is evaluated outside
+whole-stage codegen (ROADMAP Open item 1).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..bloom.core import hash_indexes_col, _PROBE_EXPR
+from ..bloom.core import probe_bloom_filters
 from ..tables import load_events_stream
 
 
@@ -26,21 +28,14 @@ def streaming_bloom_probe(
     value_col: str = "user_id",
     query_name: str = "bloom_stream",
 ):
-    """readStream(events) → broadcast-join the static filter table →
+    """readStream(events) → broadcast-probe the static filter table →
     per-key hit/miss counts → memory sink. Returns the started query.
+    With `k` given and broadcast forced, the probe runs no action, so
+    it plans on a stream.
     """
     raw = load_events_stream(spark, f"{sf_dir}/events.parque[t]")
-    probe = raw.withColumn("__key", F.col(key_col).cast("string")).withColumn(
-        "__value", F.col(value_col).cast("string")
-    )
-    joined = probe.join(
-        F.broadcast(filters.select(F.col("key").alias("__key"), "m", "words")), "__key"
-    )
-    probed = (
-        joined.withColumn("__indexes", hash_indexes_col(F.col("__value"), F.col("m"), k))
-        .withColumn("bloom_hit", F.expr(_PROBE_EXPR).cast("int"))
-    )
-    counts = probed.groupBy(F.col("__key").alias("key")).agg(
+    probed = probe_bloom_filters(raw, key_col, value_col, filters, k=k, broadcast=True)
+    counts = probed.groupBy(F.col(key_col).cast("string").alias("key")).agg(
         F.sum("bloom_hit").cast("long").alias("hits"),
         F.count(F.lit(1)).alias("n"),
     )

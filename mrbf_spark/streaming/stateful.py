@@ -68,10 +68,9 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str, query_name: str = "u
 # state variables (Value/Map/ListState), timers, TTL — the successor
 # to applyInPandasWithState above. The runtime needs `protobuf` for
 # its state-server wire format, which this environment doesn't ship,
-# so the operator degrades to an actionable ImportError there (same
-# declared-surface pattern as sources/connectors.py); the semantics
-# are still pinned by test_tws_matches_batch_when_available, which
-# runs wherever protobuf exists.
+# so the operator degrades to an actionable ImportError there; the
+# semantics are still pinned by test_tws_matches_batch_when_available,
+# which runs wherever protobuf exists.
 def tws_available() -> bool:
     try:
         import google.protobuf  # noqa: F401

@@ -121,6 +121,12 @@ def test_empty_input_yields_empty_filters(spark, orders):
     empty = orders.filter(F.lit(False))
     filters = build_bloom_filters(empty, "o_orderpriority", "o_orderkey", 0.01)
     assert filters.count() == 0
+    # Probing with the defaults (k looked up, broadcast "auto") skips
+    # every row: no filter, no key, no probe.
+    probed = probe_bloom_filters(orders, "o_orderpriority", "o_orderkey", filters)
+    assert probed.count() == 0
+    assert probed.columns == orders.columns + ["bloom_hit"]
+    assert fp_report(probed, "o_orderpriority").count() == 0
 
 
 def test_half_up_key(spark):

@@ -1,14 +1,12 @@
 """Comparison mode vs Spark's built-in Bloom sketch
 (df.stat.bloomFilter, spark.util.sketch.BloomFilter) — SURVEY §7 B4:
 our packed-bitset filters must behave statistically like the JVM
-sketch at the same geometry, and connector stubs must fail with
-actionable messages rather than stack traces.
+sketch at the same geometry.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
 from mrbf_spark.bloom import build_bloom_filters, probe_bloom_filters
 from mrbf_spark.bloom.pipeline import train_test_split
@@ -50,12 +48,3 @@ def test_fp_rate_comparable_to_spark_native_sketch(spark):
     sigma = (n_test * p * (1 - p)) ** 0.5
     for name, fp in (("ours", ours_fp), ("native", native_fp)):
         assert abs(fp - n_test * p) < 5 * sigma, f"{name}: fp={fp}, n={n_test}, p={p}"
-
-
-def test_connector_stubs_raise_actionable_errors(spark):
-    from mrbf_spark.sources.connectors import read_delta, read_iceberg
-
-    with pytest.raises(NotImplementedError, match="delta"):
-        read_delta(spark, "/tmp/nope")
-    with pytest.raises(NotImplementedError, match="iceberg"):
-        read_iceberg(spark, "db.tbl")
