@@ -3,7 +3,7 @@ data-processing capabilities of the reference repo
 ``Fabi8997/map-reduce-bloom-filter`` (a Hadoop/Spark-RDD per-key Bloom
 filter pipeline), re-expressed Spark-first on the DataFrame/SQL stack,
 plus the large-scale training-data-pipeline operators (dedup,
-similarity search, text analysis, multimodal plumbing, streaming
+similarity search, text analysis, multimodal plumbing, event-time
 windows) the north star mandates.
 
 Design rules (see SURVEY.md §7):

@@ -278,8 +278,8 @@ def probe_bloom_filters(
     Driver-action budget: when `k` or the auto size-check is needed,
     both come from ONE agg over the one-row-per-key filter table
     (max(k) + sum(m) in a single job). Pass `k` AND an explicit
-    broadcast flag to skip the action entirely (the catalog and stream
-    paths do).
+    broadcast flag to skip the action entirely (the catalog paths
+    do).
     """
     if k is None or broadcast == "auto":
         stats = filters.agg(

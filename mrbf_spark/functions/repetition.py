@@ -197,7 +197,7 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
     # cache the one-scan unit explosion: five consumers (counts, the
     # coverage occurrence join, the token lookup, and their branches)
     # would otherwise each re-derive every unit kind. Scoped — the
-    # caller (driver harness / stream step) releases.
+    # caller releases.
     ex = scoped_cache(_exploded_units(base))
     # ... and MATERIALIZE it (r10, VERDICT r9 next-round #4): the
     # consumers all sit under ONE action, so a lazy cache is raced —

@@ -21,7 +21,6 @@ from ..tables import load_table
 UPWEIGHTED = ("src0", "src1", "src2")
 UPWEIGHT = 3
 
-SAMPLE_SEED = 42
 SAMPLE_FRACTIONS = {"en": 1.0, "de": 0.5, "fr": 0.5, "es": 0.5, "zh": 0.25}
 
 # shard/consistent-sample knobs (defined up here: the sampling_suite
@@ -181,9 +180,7 @@ _TEMP_SQL = f"""
 def temperature_rates(docs: DataFrame, stratum: str = "lang") -> DataFrame:
     """Per-stratum replication rates (stratum, __base, __tfrac) from a
     census of `docs` — the tiny broadcast side of the temperature
-    rule, exposed separately (r7) so the STREAMING twin can freeze the
-    rates from a static snapshot and replicate an unbounded stream
-    against them (streaming/sampling_stream.py)."""
+    rule."""
     counts = docs.groupBy(stratum).agg(F.count(F.lit(1)).alias("n_s"))
     # the empty-partition window runs over the ≤|strata|-row AGG
     # OUTPUT (a driver-sized frame), not the corpus — bounded by the

@@ -366,24 +366,6 @@ def bottomk_sample(
     )
 
 
-def bottomk_merge(a: DataFrame, b: DataFrame, k: int = QSK_K) -> DataFrame:
-    """merge(sample(A), sample(B)) = union, dedupe on row identity
-    (the hash IS the row id — same discipline as kmv_merge's
-    distinct), re-take k smallest — equals sample(A ∪ B) exactly even
-    for OVERLAPPING inputs (hash collisions aside, 2^-60), which is
-    what makes the streaming maintainer's replay convergent."""
-    u = (
-        a.select("grp", "h", "value")
-        .unionByName(b.select("grp", "h", "value"))
-        .dropDuplicates(["grp", "h"])
-    )
-    w = Window.partitionBy("grp").orderBy("h")
-    return (
-        u.select("grp", "h", "value", F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= k)
-    )
-
-
 def sample_median(sample: DataFrame) -> DataFrame:
     """(grp, est): the rank-⌈m/2⌉ smallest sampled VALUE (discrete
     median — integer rank semantics, bit-identical across engines; no

@@ -49,8 +49,7 @@ TEXT_SEM_TAU = 0.8
 
 
 def _slot_col(tok: Column, dim: int = TE_DIM) -> Column:
-    """Hashed feature slot of one shingle (shared by the grouped batch
-    embedding and the r7 per-row streaming twin)."""
+    """Hashed feature slot of one shingle."""
     return F.pmod(_h60(tok, TE_SALT), F.lit(dim)).cast("long")
 
 
@@ -65,45 +64,6 @@ def _sign_col(tok: Column) -> Column:
         == 0,
         F.lit(1),
     ).otherwise(F.lit(-1))
-
-
-def _bigrams_col(text: Column) -> Column:
-    """Word-bigram shingles ('tok_i tok_i+1') as a per-row array; a
-    1-token doc yields its lone token."""
-    toks = F.split(F.lower(text), " ")
-    bigrams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 1),
-        lambda i: F.concat_ws(
-            " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-        ),
-    )
-    return F.when(F.size(toks) >= 2, bigrams).otherwise(
-        F.array(F.element_at(toks, 1))
-    )
-
-
-def row_text_embedding_col(text: Column, dim: int = TE_DIM) -> Column:
-    """MAP-ONLY twin of text_hash_embeddings: the same signed hashed
-    bigram-count vector computed entirely inside the row (a dim-wide
-    transform folding the bigram array) — no explode, no groupBy, so
-    it runs on an unbounded STREAM with zero state. O(dim·n_bigrams)
-    expression work per row vs the batch path's two shuffles; the
-    batch path stays right for corpus-wide embedding (the fold
-    re-reads the bigram array dim times), this one for per-row online
-    classification. Bit-equality with the batch embedding is
-    test-pinned (integer counts, same slot/sign hashes)."""
-    bigrams = _bigrams_col(text)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: F.aggregate(
-            bigrams,
-            F.lit(0).cast("long"),
-            lambda acc, b: acc
-            + F.when(_slot_col(b, dim) == i.cast("long"), _sign_col(b)).otherwise(
-                F.lit(0)
-            ),
-        ).cast("double"),
-    )
 
 
 def text_hash_embeddings(docs: DataFrame, dim: int = TE_DIM) -> DataFrame:

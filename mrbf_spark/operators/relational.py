@@ -407,7 +407,7 @@ def date_trunc_month(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- sessionization (gap > 30 min ⇒ new session) via lag + cumsum —
-# the batch twin of streaming session windows.
+# the lag/cumsum formulation of `session_window_agg`'s session windows.
 @register(
     "sessionization",
     """
@@ -1913,9 +1913,8 @@ def stats_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- temporal join family: as-of (running last_value vs DuckDB's
 # native ASOF JOIN) + bucketed interval-containment range join +
-# interval attribution join (batch twin of the watermarked
-# stream-stream join in streaming/join_stream.py — the stream==batch
-# test pins that the streaming path emits these exact pairs).
+# interval attribution join (`clicks_to_purchases` in
+# streaming/join_stream.py).
 @register(
     "temporal_joins",
     f"""

@@ -1,36 +1,25 @@
-"""Stream-stream interval join — attribution (click → purchase within
-a horizon), the canonical two-stream operator a training-data /
-analytics ingest needs and the reference (batch-only, SURVEY.md §2.8)
-has no answer to.
+"""Batch interval join over `events`: click → purchase attribution
+within a horizon (the reference has no event-time operators,
+SURVEY.md §2.8).
 
-Semantics: inner join of two event streams on user_id with the
-purchase inside [click_ts, click_ts + horizon). With BOTH sides
-watermarked and the join range bounded by the event-time condition,
-Spark's state store provably evicts rows once the watermark passes
-their join horizon — bounded state at any input volume (the unbounded
--state error is what you get if either bound is missing).
-
-Scale: state ≈ events within (watermark delay + horizon) per side,
-partitioned by user_id; the join itself is a state-store hash lookup
-per input row — no batch-style shuffle of history.
-
-The batch twin (`clicks_to_purchases`) is the same join condition on
-the static table, so tests assert stream == batch row-for-row.
+Semantics: inner join of clicks and purchases on user_id with the
+purchase inside [click_ts, click_ts + JOIN_HORIZON). It is the
+interval part of the `temporal_joins` entry, hash-matched against the
+DuckDB oracle.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..tables import load_events_stream, load_table
+from ..tables import load_table
 
 JOIN_HORIZON = "30 minutes"
-_WATERMARK = "10 minutes"
 
 
 def clicks_to_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin: every (click, purchase) pair per user with the
-    purchase within JOIN_HORIZON after the click."""
+    """Every (click, purchase) pair per user with the purchase within
+    JOIN_HORIZON after the click."""
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"),
@@ -48,52 +37,3 @@ def clicks_to_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("purchase_ts") < F.col("click_ts") + F.expr(f"INTERVAL {JOIN_HORIZON}"))
     )
 
-
-def streaming_clicks_to_purchases(
-    spark: SparkSession, src_dir: str, query_name: str = "attrib_out"
-):
-    """readStream twice over the same events directory → watermark both
-    sides → interval inner join → memory sink (append). Returns the
-    started StreamingQuery; callers processAllAvailable() then read
-    `SELECT * FROM {query_name}`."""
-    def stream():
-        return load_events_stream(spark, src_dir)
-
-    clicks = (
-        stream()
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", _WATERMARK)
-    )
-    purchases = (
-        stream()
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", _WATERMARK)
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            < F.col("click_ts") + F.expr(f"INTERVAL {JOIN_HORIZON}")
-        ),
-    ).select(
-        "user_id", "click_id", "click_ts", "purchase_id", "purchase_ts", "purchase_value"
-    )
-    return (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )

@@ -1,18 +1,18 @@
-"""Event-time windowing over `events` — batch twins (oracle-checked)
-plus the real Structured Streaming path (SURVEY.md §2.8: the reference
-has no streaming; this is the north-star extension).
+"""Batch event-time windows over `events`: tumbling, sliding and
+session windows, each checked against a DuckDB oracle (the reference
+has no event-time operators, SURVEY.md §2.8).
 
-The batch queries use the same F.window expressions the streaming
-query uses, so the streaming test can assert stream == batch.
+Tumbling and sliding windows use `F.window`, whose epoch-aligned starts
+are exactly DuckDB's `time_bucket`; sessions use `F.session_window`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..exprs import dsum, dsum_sql
 from ..registry import builder, register
-from ..tables import load_events_stream, load_table
+from ..tables import load_table
 
 
 # --- tumbling window (5 min): Spark window() starts are epoch-aligned,
@@ -149,27 +149,3 @@ def session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-def streaming_tumbling_counts(spark: SparkSession, sf_dir: str, query_name: str = "stream_out"):
-    """The REAL Structured Streaming pipeline: readStream over the
-    events parquet, watermark + tumbling window, memory sink.
-
-    Returns the started StreamingQuery; callers processAllAvailable()
-    then read `SELECT * FROM {query_name}`. On a cluster the source
-    swaps for Kafka/files and the sink for a real table — the middle
-    (watermark + window + agg) is the engine surface.
-    """
-    # FileStreamSource requires a directory or glob, not a bare file.
-    ev = load_events_stream(spark, f"{sf_dir}/events.parque[t]")
-    agg = (
-        ev.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "total_value")
-    )
-    return (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )

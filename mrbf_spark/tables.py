@@ -150,69 +150,6 @@ def _read_nanos_events(spark: SparkSession, path: str) -> DataFrame:
         raise
 
 
-def load_events_stream(
-    spark: SparkSession, path: str, options: dict[str, str] | None = None
-) -> DataFrame:
-    """``readStream`` over an events parquet path/glob with the same
-    vintage-adaptive ``ts`` normalization as the batch loader.
-
-    FileStreamSource needs an explicit schema, and the right raw type for
-    ``ts`` depends on the data vintage — so probe the batch footer first
-    (cheap, driver-side schema read only) and declare the matching raw
-    schema, then normalize to a session-TZ ``timestamp``.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    if _parquet_ts_unit(path) == "ns":
-        # Nanos vintage: the stream must read ts as int64 nanos.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ts_type = "bigint"
-    else:
-        try:
-            probe = spark.read.parquet(path)
-            ts_type = dict(probe.dtypes).get("ts", "")
-        except Exception as exc:
-            # Footer probe inconclusive: only the nanos signature falls
-            # back to the conf; any other failure (missing/corrupt
-            # path) propagates — declaring a LongType ts schema for it
-            # would just defer the error to a confusing stream-start
-            # failure (ADVICE r3).
-            if not _is_nanos_error(exc):
-                raise
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            ts_type = "bigint"
-
-    if ts_type == "bigint":
-        raw_ts: T.DataType = T.LongType()
-    elif ts_type == "timestamp":
-        raw_ts = T.TimestampType()
-    else:  # timestamp_ntz — current testdata vintage
-        raw_ts = T.TimestampNTZType()
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", raw_ts),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    raw = (
-        spark.readStream.options(**(options or {}))
-        .schema(schema)
-        .format("parquet")
-        .load(path)
-    )
-    if ts_type == "bigint":
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if ts_type != "timestamp":
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
-
-
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 

@@ -2,7 +2,8 @@
 lineage-safe .checkpoint() handoff must produce byte-identical output
 to the default localCheckpoint path, for both the prefix-sum packer
 and the curate chain; and asking for reliable without a checkpoint
-dir must fail loudly with the one-line fix."""
+dir must fail loudly with the one-line fix. Also the scoped-cache
+registry's release."""
 
 from __future__ import annotations
 
@@ -61,3 +62,18 @@ def test_curate_reliable_identical(spark, ckpt_dir):
     release_scoped_caches()
     assert census_a == census_b
     assert rows_a == rows_b and len(rows_a) > 0
+
+
+def test_release_scoped_caches_drains_the_registry(spark):
+    """registry.release_scoped_caches: every scoped_cache'd frame is
+    unpersisted and the list drains (the non-catalog-path hygiene the
+    stress/bench loops rely on)."""
+    from mrbf_spark import registry
+
+    df = registry.scoped_cache(spark.range(100))
+    df.count()
+    assert df.storageLevel.useMemory
+    assert len(registry._SCOPED_CACHES) >= 1
+    registry.release_scoped_caches()
+    assert registry._SCOPED_CACHES == []
+    assert not df.storageLevel.useMemory

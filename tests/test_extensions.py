@@ -1,6 +1,6 @@
 """Semantics tests for the north-star extensions: dedup recall,
-similarity correctness, multimodal plumbing shape, and the
-stream==batch equivalence for windowed aggregation."""
+similarity correctness, multimodal plumbing shape, and the Bloom
+probe on a stream equal to the batch probe."""
 
 from __future__ import annotations
 
@@ -1083,53 +1083,6 @@ def test_dedup_exact_priority_keeper(spark):
     assert out[20] == (20, 2)
 
 
-def test_stratified_sample_rates_and_subset(spark):
-    """sampleBy: every sampled row comes from the source table, the
-    en stratum (fraction 1.0) is complete, and each stratum's rate is
-    within a binomial-plausible band of its fraction."""
-    from mrbf_spark.functions.sampling import SAMPLE_FRACTIONS, SAMPLE_SEED
-
-    d = load_table(spark, SF_SMOKE, "documents")
-    sampled = d.sampleBy("lang", SAMPLE_FRACTIONS, seed=SAMPLE_SEED)
-    assert sampled.join(d, "doc_id", "left_anti").count() == 0
-    totals = {r["lang"]: r["n"] for r in d.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
-    got = {r["lang"]: r["n"] for r in sampled.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert got.get("en") == totals["en"]
-    for lang, frac in SAMPLE_FRACTIONS.items():
-        if frac in (0.0, 1.0) or lang not in totals:
-            continue
-        n, k = totals[lang], got.get(lang, 0)
-        sd = (n * frac * (1 - frac)) ** 0.5
-        assert abs(k - n * frac) <= 4 * sd + 1, (lang, k, n)
-
-
-def test_streaming_incremental_dedup_matches_batch(spark):
-    """The stateless stream-static classification must agree with the
-    batch dedup_incremental entry: 'dup_of_history' row-for-row (same
-    hist_id keeper), and 'candidate_new' exactly where the batch says
-    'new' or 'dup_in_batch'."""
-    from mrbf_spark.catalog import queries
-    from mrbf_spark.streaming.dedup_stream import streaming_incremental_dedup
-
-    q = streaming_incremental_dedup(spark, SF_SMOKE, query_name="inc_dedup_t")
-    try:
-        q.processAllAvailable()
-        got = {r["doc_id"]: r for r in spark.sql("SELECT * FROM inc_dedup_t").collect()}
-    finally:
-        q.stop()
-    batch = {
-        r["doc_id"]: r
-        for r in queries()["dedup_incremental"](spark, SF_SMOKE).collect()
-    }
-    assert set(got) == set(batch)
-    for doc_id, b in batch.items():
-        s = got[doc_id]
-        if b["status"] == "dup_of_history":
-            assert s["status"] == "dup_of_history" and s["hist_id"] == b["keep_id"]
-        else:
-            assert s["status"] == "candidate_new" and s["hist_id"] is None
-
-
 def test_curate_corpus_drops_each_planted_defect_exactly(spark):
     """End-to-end curation over a corpus with one planted defect per
     stage: the census must attribute each drop to its stage and the
@@ -1407,126 +1360,6 @@ def test_dense_topk_indexed_embeds_only_the_query(spark, tmp_path):
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "documents.parquet" not in plan, "probe re-scans the corpus"
     assert probe.count() == 5
-
-
-@pytest.mark.slow
-def test_streaming_semdedup_matches_exact_reference(spark):
-    """The stateless semi/anti stream-static classification must agree
-    with an exact numpy replay: every streamed vector appears exactly
-    once, its cell matches the fixed-point argmax against the HISTORY
-    centroids, and it is 'dup_of_history' iff some kept history
-    representative in its cell has cosine ≥ τ."""
-    import numpy as np
-
-    from mrbf_spark.functions.similarity import (
-        FIXED_SCALE,
-        _flat_centroids,
-        semdedup_verdicts,
-    )
-    from mrbf_spark.registry import release_scoped_caches
-    from mrbf_spark.streaming.dedup_stream import _SEM_SPLIT, streaming_semdedup
-
-    # τ=0.35 (not the 0.5 default): the sf0.001 embeddings have no
-    # cross-split pair above 0.5 cosine — measured, max is 0.479 —
-    # and the test needs BOTH branches to fire
-    tau = 0.35
-    q = streaming_semdedup(
-        spark, SF_SMOKE, query_name="semdedup_stream_t", tau=tau
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM semdedup_stream_t").collect()
-    finally:
-        q.stop()
-    got = {r["vec_id"]: (r["cell"], r["status"]) for r in rows}
-    assert len(got) == len(rows)  # semi/anti branches partition the stream
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    hist = emb.filter(F.pmod(F.col("vec_id"), F.lit(10)) < _SEM_SPLIT)
-    cent = _flat_centroids(hist)
-    keep_ids = {
-        r["vec_id"]
-        for r in semdedup_verdicts(hist, tau=tau, centroids=cent)
-        .filter("keep")
-        .collect()
-    }
-    release_scoped_caches()
-    vecs = {
-        r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
-        for r in emb.collect()
-    }
-
-    def fdot(a, b):
-        return int(np.trunc(a * b * FIXED_SCALE).astype(np.int64).sum())
-
-    def cell_of(v):
-        return int(np.argmax([fdot(v, c) for c in cent]))
-
-    reps_by_cell: dict[int, list[np.ndarray]] = {}
-    for rid in keep_ids:
-        reps_by_cell.setdefault(cell_of(vecs[rid]), []).append(vecs[rid])
-
-    stream_ids = [i for i in vecs if i % 10 >= _SEM_SPLIT]
-    assert set(got) == set(stream_ids)
-    n_dup = 0
-    for i in stream_ids:
-        v = vecs[i]
-        c = cell_of(v)
-        nrm = np.sqrt(fdot(v, v) / FIXED_SCALE)
-        is_dup = any(
-            (fdot(v, r) / FIXED_SCALE) / (nrm * np.sqrt(fdot(r, r) / FIXED_SCALE))
-            >= tau
-            for r in reps_by_cell.get(c, [])
-        )
-        want = "dup_of_history" if is_dup else "candidate_new"
-        assert got[i] == (c, want), (i, got[i], (c, want))
-        n_dup += is_dup
-    # both branches actually fire on the testdata
-    assert 0 < n_dup < len(stream_ids), n_dup
-
-
-def test_checkpointed_ingest_exactly_once_across_restart(spark, tmp_path):
-    """File→file streaming with a checkpoint must deliver each input
-    row exactly once across a stop/restart: drain half the input,
-    restart the query on the same checkpoint with the rest added, and
-    confirm the sink equals the batch read with zero duplicates; a
-    third idle restart adds nothing."""
-    import os
-    import shutil
-
-    from mrbf_spark.streaming.ingest import checkpointed_ingest
-
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "n_chars")
-    staged = str(tmp_path / "staged")
-    docs.repartition(4).write.parquet(staged)
-    parts = sorted(
-        p for p in os.listdir(staged) if p.endswith(".parquet")
-    )
-    assert len(parts) == 4
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for p in parts[:2]:
-        shutil.copy(os.path.join(staged, p), os.path.join(src, p))
-
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    schema = spark.read.parquet(staged).schema
-
-    q = checkpointed_ingest(spark, src, schema, out, ckpt)
-    q.awaitTermination()
-    first = spark.read.parquet(out).count()
-    assert 0 < first < docs.count()
-
-    for p in parts[2:]:
-        shutil.copy(os.path.join(staged, p), os.path.join(src, p))
-    q2 = checkpointed_ingest(spark, src, schema, out, ckpt)
-    q2.awaitTermination()
-    got = spark.read.parquet(out).groupBy("doc_id").count()
-    assert got.filter(F.col("count") > 1).count() == 0  # no duplicates
-    assert got.count() == docs.count()  # no loss
-
-    q3 = checkpointed_ingest(spark, src, schema, out, ckpt)  # idle restart
-    q3.awaitTermination()
-    assert spark.read.parquet(out).count() == docs.count()
 
 
 def test_perplexity_buckets_match_duckdb(spark):
@@ -1843,152 +1676,37 @@ def test_global_shuffle_shard_layout_and_writer(spark, tmp_path):
         assert got == pos_order[s], f"shard {s} order mismatch"
 
 
-def test_streaming_dedup_drops_replayed_events(spark, tmp_path):
-    """Feed the events table TWICE (a replayed ingest); the streaming
-    dedup must emit each event_id exactly once, matching the batch
-    distinct count."""
-    import shutil
-
-    from mrbf_spark.streaming.dedup_stream import streaming_dedup_events
-
-    src = tmp_path / "events_dup"
-    src.mkdir()
-    shutil.copy(f"{SF_SMOKE}/events.parquet", src / "part-0.parquet")
-    shutil.copy(f"{SF_SMOKE}/events.parquet", src / "part-1.parquet")
-
-    q = streaming_dedup_events(spark, str(src), query_name="t_dedup_stream")
-    try:
-        q.processAllAvailable()
-        out = spark.sql(
-            "SELECT COUNT(*) AS n, COUNT(DISTINCT event_id) AS d FROM t_dedup_stream"
-        ).collect()[0]
-    finally:
-        q.stop()
-    n_events = load_table(spark, SF_SMOKE, "events").count()
-    assert out["n"] == out["d"] == n_events
-
-
-def test_streaming_equals_batch(spark):
-    """The REAL Structured Streaming path (readStream → watermark →
-    tumbling window → memory sink) must produce exactly the batch
-    twin's result."""
-    from mrbf_spark.streaming.windows import (
-        streaming_tumbling_counts,
-        window_tumbling,
-    )
-
-    q = streaming_tumbling_counts(spark, SF_SMOKE, query_name="t_stream_eq")
-    try:
-        q.processAllAvailable()
-        stream_rows = {
-            tuple(r) for r in spark.sql("SELECT * FROM t_stream_eq").collect()
-        }
-    finally:
-        q.stop()
-    batch_rows = {tuple(r) for r in window_tumbling(spark, SF_SMOKE).collect()}
-    assert stream_rows == batch_rows
-    assert len(stream_rows) > 0
-
-
-def test_stateful_streaming_user_totals(spark):
-    """applyInPandasWithState end-to-end: final per-user counts must
-    equal the batch groupBy."""
-    from mrbf_spark.streaming.stateful import streaming_user_totals
-
-    q = streaming_user_totals(spark, SF_SMOKE, query_name="t_user_totals")
-    try:
-        q.processAllAvailable()
-        got = spark.sql(
-            "SELECT user_id, max(n_events) AS n FROM t_user_totals GROUP BY user_id"
-        ).collect()
-    finally:
-        q.stop()
-    stream_counts = {r["user_id"]: r["n"] for r in got}
-    ev = load_table(spark, SF_SMOKE, "events")
-    batch_counts = {
-        r["user_id"]: r["n"]
-        for r in ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert stream_counts == batch_counts
-
-
-def test_tws_matches_batch_when_available(spark):
-    """Spark 4 transformWithStateInPandas (MapState per user): running
-    per-(user, event_type) counts must equal the batch groupBy. Skips
-    where the TWS runtime's protobuf dependency is absent; the gate
-    itself (actionable ImportError) is asserted either way."""
-    from mrbf_spark.streaming.stateful import (
-        streaming_user_type_counts,
-        tws_available,
-    )
-
-    if not tws_available():
-        with pytest.raises(ImportError, match="protobuf"):
-            streaming_user_type_counts(spark, SF_SMOKE)
-        pytest.skip("protobuf not available for the TWS state protocol")
-    q = streaming_user_type_counts(spark, SF_SMOKE, query_name="tws_counts")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    stream = {
-        (r["user_id"], r["event_type"]): r["n"]
-        for r in spark.sql(
-            "select user_id, event_type, max(n) as n from tws_counts group by 1, 2"
-        ).collect()
-    }
-    ev = load_table(spark, SF_SMOKE, "events")
-    batch = {
-        (r["user_id"], r["event_type"]): r["count"]
-        for r in ev.groupBy("user_id", "event_type").count().collect()
-    }
-    assert stream == batch
-
-
-def test_streaming_foreachbatch_parquet_sink(spark, tmp_path):
-    """foreachBatch: the exactly-once sink pattern — each micro-batch
-    written transactionally to parquet; final table equals batch."""
-    from mrbf_spark.tables import load_events_stream
-
-    out_dir = str(tmp_path / "fb_out")
-    raw = load_events_stream(spark, SF_SMOKE + "/events.parque[t]")
-    counted = raw.groupBy("event_type").count()
-
-    def sink(batch_df, epoch_id):
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    q = (
-        counted.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {r["event_type"]: r["count"] for r in spark.read.parquet(out_dir).collect()}
-    ev = load_table(spark, SF_SMOKE, "events")
-    want = {r["event_type"]: r["count"] for r in ev.groupBy("event_type").count().collect()}
-    assert got == want
-
-
 def test_streaming_bloom_probe_equals_batch(spark):
-    """Static bloom filter table joined into a stream: per-key hit
-    counts must equal the batch probe."""
+    """The batch probe and FP report run unchanged on a stream: a
+    static filter table probed by a readStream of the events gives the
+    same per-key (false_positives, total_tests) as the batch probe.
+    With `k` given and broadcast forced, the probe runs no action, so
+    it plans on a stream."""
     from mrbf_spark.bloom import build_bloom_filters, fp_report, probe_bloom_filters
-    from mrbf_spark.streaming.bloom_stream import streaming_bloom_probe
 
     ev = load_table(spark, SF_SMOKE, "events")
     # filters over purchase user_ids, keyed by event_type='purchase'
     purchases = ev.filter(F.col("event_type") == "purchase")
-    filters = build_bloom_filters(purchases, "event_type", "user_id", 0.05).cache()
-    filters.count()
+    filters = build_bloom_filters(purchases, "event_type", "user_id", 0.05)
 
-    q = streaming_bloom_probe(spark, SF_SMOKE, filters, k=5, query_name="t_bloom_stream")
+    # FileStreamSource needs a directory or glob, not a bare file.
+    raw = spark.readStream.schema("event_type string, user_id long").parquet(
+        f"{SF_SMOKE}/events.parque[t]"
+    )
+    streamed = fp_report(
+        probe_bloom_filters(raw, "event_type", "user_id", filters, k=5, broadcast=True),
+        "event_type",
+    )
+    q = (
+        streamed.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName("t_bloom_stream")
+        .start()
+    )
     try:
         q.processAllAvailable()
         got = {
-            r["key"]: (r["hits"], r["n"])
+            r["key"]: (r["false_positives"], r["total_tests"])
             for r in spark.sql("SELECT * FROM t_bloom_stream").collect()
         }
     finally:
@@ -2046,38 +1764,6 @@ def test_repetition_stats_exact(spark):
     assert r["distinct_ratio"] == pytest.approx(0.5)
     assert r["top_token_frac"] == pytest.approx(3 / 6)
     assert r["top_bigram_frac"] == pytest.approx(2 / 5)
-
-
-@pytest.mark.slow
-def test_stream_stream_join_equals_batch(spark):
-    """Stream-stream interval join (watermarked click→purchase
-    attribution) must produce exactly the batch twin's pairs, and the
-    horizon must actually bound the match window."""
-    from mrbf_spark.streaming.join_stream import (
-        clicks_to_purchases,
-        streaming_clicks_to_purchases,
-    )
-
-    q = streaming_clicks_to_purchases(
-        spark, f"{SF_SMOKE}/events.parque[t]", query_name="t_attrib_eq"
-    )
-    try:
-        q.processAllAvailable()
-        stream_rows = {
-            tuple(r) for r in spark.sql("SELECT * FROM t_attrib_eq").collect()
-        }
-    finally:
-        q.stop()
-    batch = clicks_to_purchases(spark, SF_SMOKE).select(
-        "user_id", "click_id", "click_ts", "purchase_id", "purchase_ts", "purchase_value"
-    )
-    batch_rows = {tuple(r) for r in batch.collect()}
-    assert stream_rows == batch_rows
-    assert len(stream_rows) > 0
-    # horizon bound holds on every emitted pair
-    for r in batch.collect():
-        delta = (r["purchase_ts"] - r["click_ts"]).total_seconds()
-        assert 0 <= delta < 1800
 
 
 def test_quality_rules_matches_duckdb(spark):
@@ -2268,103 +1954,6 @@ def test_profile_table_null_and_type_semantics(spark):
     assert row["nulls"] == 2 and row["n_distinct"] == 0 and row["min_q"] is None
 
 
-def test_streaming_validate_matches_batch(spark, tmp_path):
-    """One micro-batch over the whole events file must produce exactly
-    the batch-tier report (same 11 checks, same violation counts)."""
-    from mrbf_spark.functions.validation import validate_events
-    from mrbf_spark.streaming.validate_stream import streaming_validate_events
-
-    customer = load_table(spark, SF_SMOKE, "customer")
-    q = streaming_validate_events(
-        spark,
-        f"{SF_SMOKE}/events.parque[t]",
-        customer,
-        str(tmp_path / "report"),
-        str(tmp_path / "ckpt"),
-        max_files_per_trigger=0,  # whole file in one batch
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["check"], r["violations"], r["ok"])
-        for r in spark.read.parquet(str(tmp_path / "report")).collect()
-    }
-    want = {
-        (r["check"], r["violations"], r["ok"])
-        for r in validate_events(
-            load_table(spark, SF_SMOKE, "events"), customer
-        ).collect()
-    }
-    assert got == want and len(got) == 11
-
-
-def test_streaming_validate_gates_per_batch(spark, tmp_path):
-    """With one file per trigger, each increment is validated in
-    isolation: the poisoned file's batch reports its violations, the
-    clean file's batch reports none (beyond the small-batch row floor)."""
-    import os
-    import time
-    from datetime import datetime
-
-    from mrbf_spark.streaming.validate_stream import streaming_validate_events
-
-    mk = lambda eid, uid, val: (  # noqa: E731
-        eid, datetime(2024, 1, 1 + eid % 20), uid, "click", val, '{"k": 1}'
-    )
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string"
-    )
-    clean = spark.createDataFrame([mk(i, 10, 1.0) for i in range(8)], schema)
-    # dup PK (99 twice) + one negative value
-    poisoned = spark.createDataFrame(
-        [mk(99, 10, 1.0), mk(99, 10, 2.0), mk(101, 10, -5.0)], schema
-    )
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    # Spark's default parquet timestamp encoding (INT96) probes as
-    # nanos in the loader's footer check; write micros like the
-    # driver testdata so the stream schema matches the files.
-    prev = spark.conf.get("spark.sql.parquet.outputTimestampType", None)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try:
-        clean.coalesce(1).write.mode("append").parquet(src)
-        time.sleep(1.1)  # distinct mtimes -> deterministic batch order
-        poisoned.coalesce(1).write.mode("append").parquet(src)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.parquet.outputTimestampType")
-        else:
-            spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
-    customer = spark.createDataFrame([(10,)], "c_custkey long")
-    q = streaming_validate_events(
-        spark,
-        f"{src}/*.parquet",
-        customer,
-        str(tmp_path / "report"),
-        str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
-    rep = spark.read.parquet(str(tmp_path / "report"))
-    by_batch = {}
-    for r in rep.collect():
-        by_batch.setdefault(r["batch_id"], {})[r["check"]] = r["violations"]
-    assert len(by_batch) == 2
-    flagged = [
-        b
-        for b, checks in by_batch.items()
-        if checks["pk_unique_event_id"] == 1 and checks["value_nonnegative"] == 1
-    ]
-    assert len(flagged) == 1
-    clean_b = (set(by_batch) - set(flagged)).pop()
-    ok_checks = {
-        k: v for k, v in by_batch[clean_b].items() if k != "row_count_min"
-    }
-    assert all(v == 0 for v in ok_checks.values()), by_batch[clean_b]
-    # the row floor fires on both tiny increments — by design
-    assert by_batch[clean_b]["row_count_min"] > 0
-
-
 def test_snapshot_diff_matches_duckdb(spark):
     """Digest-based diff vs the oracle's direct IS DISTINCT FROM
     classification — independent formulations must agree on every pk."""
@@ -2470,31 +2059,6 @@ def test_profile_table_complex_and_temporal_types(spark):
     assert prof["d"]["min_q"] == (date(2023, 12, 31) - date(1970, 1, 1)).days
     assert prof["d"]["max_q"] == (date(2024, 1, 5) - date(1970, 1, 1)).days
     assert prof["d"]["nulls"] == 1 and prof["d"]["n_distinct"] == 2
-
-
-def test_streaming_validate_report_idempotent(spark, tmp_path):
-    """Replaying a micro-batch (foreachBatch's at-least-once retry)
-    must overwrite its own batch_id partition, not append duplicate
-    report rows (ADVICE r4)."""
-    from datetime import datetime
-
-    from mrbf_spark.streaming.validate_stream import write_batch_report
-
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string"
-    )
-    batch = spark.createDataFrame(
-        [(1, datetime(2024, 1, 1), 10, "click", 1.0, '{"k": 1}')], schema
-    )
-    customer = spark.createDataFrame([(10,)], "c_custkey long")
-    report_dir = str(tmp_path / "report")
-    write_batch_report(batch, 0, customer, report_dir)
-    write_batch_report(batch, 0, customer, report_dir)  # the retry
-    write_batch_report(batch, 1, customer, report_dir)  # a later batch
-    rep = spark.read.parquet(report_dir)
-    assert rep.count() == 22  # 11 per surviving batch, no duplicates
-    assert rep.filter("batch_id = 0").count() == 11
 
 
 def test_cli_profile_validate_diff(spark, tmp_path, capsys):

@@ -158,43 +158,3 @@ def test_frozen_model_unseen_tokens_hand_truth(spark):
     term = l2q_int(3) - l2q_int(1)  # L2Q(1) = 0
     assert row["n_bigrams"] == 2
     assert row["nll_q"] == 2 * term
-
-
-@pytest.mark.slow
-def test_streaming_lm_score_matches_batch(spark, tmp_path):
-    """Per-batch foreachBatch scoring under the frozen model must
-    equal the batch scorer row-for-row (scores are per-doc
-    independent, so batching cannot change them), with the sink
-    idempotently partitioned by batch_id."""
-    from mrbf_spark.functions.lm import score_with_model, train_bigram_lm
-    from mrbf_spark.streaming.lm_stream import streaming_lm_score
-    from mrbf_spark.tables import load_table
-
-    docs = load_table(spark, SF_ORACLE, "documents")
-    train = docs.filter(F.col("doc_id") % 10 < 7)
-    new = docs.filter(F.col("doc_id") % 10 >= 7)
-    model, v = train_bigram_lm(train)
-
-    src = str(tmp_path / "src")
-    # several files so availableNow + maxFilesPerTrigger=1 yields
-    # multiple micro-batches
-    new.repartition(3).write.parquet(src)
-    out = str(tmp_path / "scores")
-    q = streaming_lm_score(
-        spark, src, model, v, out, str(tmp_path / "ckpt")
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-    got_df = spark.read.parquet(out)
-    assert got_df.select("batch_id").distinct().count() >= 2
-    got = {
-        r["doc_id"]: (r["n_bigrams"], r["nll_q"], r["cross_entropy"])
-        for r in got_df.collect()
-    }
-    exp = {
-        r["doc_id"]: (r["n_bigrams"], r["nll_q"], r["cross_entropy"])
-        for r in score_with_model(new, model, v).collect()
-    }
-    assert got == exp

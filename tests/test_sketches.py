@@ -113,30 +113,6 @@ def test_stats_aggregates_sketch_parts_flags_green(spark):
     assert sk and all(r["ok1"] == 1 for r in sk)
 
 
-def test_bottomk_sample_merge_equals_sample_of_union(spark):
-    """sample(A ∪ B) == merge(sample(A), sample(B)) as exact
-    (grp, h, value) sets — the quantile sketch's mergeability."""
-    from mrbf_spark.functions.sketches import bottomk_merge, bottomk_sample
-
-    rows = [("g", i, float((i * 37) % 1000)) for i in range(3000)]
-    df = spark.createDataFrame(rows, "grp string, rid long, value double")
-    key = F.col("rid")
-    a = df.filter(F.col("rid") % 2 == 0)
-    b = df.filter(F.col("rid") % 2 == 1)
-    merged = {
-        (r["grp"], r["h"], r["value"])
-        for r in bottomk_merge(
-            bottomk_sample(a, "grp", "value", key),
-            bottomk_sample(b, "grp", "value", key),
-        ).collect()
-    }
-    direct = {
-        (r["grp"], r["h"], r["value"])
-        for r in bottomk_sample(df, "grp", "value", key).collect()
-    }
-    assert merged == direct and len(direct) == 256
-
-
 def test_quantile_sketch_estimates_land_near_the_median(spark):
     """The registered builder at sf0.001: every group's estimate sits
     within the 0.5±0.12 quantile-position envelope (ok=1), and the

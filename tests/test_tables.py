@@ -38,7 +38,7 @@ def test_events_ts_values_match_duckdb(spark):
 
 def test_nanos_vintage_fallback(spark, tmp_path):
     """The r1-era TIMESTAMP(NANOS) vintage must still load: write a tiny
-    nanos events file and check both loaders normalize ts to a session-TZ
+    nanos events file and check the loader normalizes ts to a session-TZ
     timestamp with µs truncation (matching what DuckDB would read)."""
     import datetime as dt
 
@@ -67,11 +67,6 @@ def test_nanos_vintage_fallback(spark, tmp_path):
         assert dict(df.dtypes)["ts"] == "timestamp"
         got = sorted(r.ts for r in df.collect())
         assert got == rows  # ns→µs truncation: .123456 survives exactly
-
-        from mrbf_spark.tables import load_events_stream
-
-        sdf = load_events_stream(spark, str(sf_dir))
-        assert dict(sdf.dtypes)["ts"] == "timestamp"
     finally:
         spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
 

@@ -23,47 +23,52 @@ def _con(sf_dir):
     return con
 
 
+# (name, builder, projected columns, oracle CTE, oracle select)
+_DERIVED = [
+    (
+        "partsupp",
+        tx.partsupp,
+        None,
+        tx.PARTSUPP_SQL,
+        "SELECT * FROM partsupp",
+    ),
+    (
+        "lineitem_ext",
+        tx.lineitem_ext,
+        ["l_orderkey", "l_linenumber", "l_commitdate", "l_receiptdate",
+         "l_shipmode", "l_shipinstruct"],
+        tx.LINEITEM_EXT_SQL,
+        "SELECT l_orderkey, l_linenumber, l_commitdate, l_receiptdate,"
+        " l_shipmode, l_shipinstruct FROM lineitem_ext",
+    ),
+    (
+        "part_ext",
+        tx.part_ext,
+        ["p_partkey", "p_container"],
+        tx.PART_EXT_SQL,
+        "SELECT p_partkey, p_container FROM part_ext",
+    ),
+    (
+        "customer_ext",
+        tx.customer_ext,
+        ["c_custkey", "c_phone"],
+        tx.CUSTOMER_EXT_SQL,
+        "SELECT c_custkey, c_phone FROM customer_ext",
+    ),
+    (
+        "supplier_ext",
+        tx.supplier_ext,
+        ["s_suppkey", "s_comment"],
+        tx.SUPPLIER_EXT_SQL,
+        "SELECT s_suppkey, s_comment FROM supplier_ext",
+    ),
+]
+
+
 @pytest.mark.parametrize(
     "name,frame,cols,sql_cte,sql_cols",
-    [
-        (
-            "partsupp",
-            tx.partsupp,
-            None,
-            tx.PARTSUPP_SQL,
-            "SELECT * FROM partsupp",
-        ),
-        (
-            "lineitem_ext",
-            tx.lineitem_ext,
-            ["l_orderkey", "l_linenumber", "l_commitdate", "l_receiptdate",
-             "l_shipmode", "l_shipinstruct"],
-            tx.LINEITEM_EXT_SQL,
-            "SELECT l_orderkey, l_linenumber, l_commitdate, l_receiptdate,"
-            " l_shipmode, l_shipinstruct FROM lineitem_ext",
-        ),
-        (
-            "part_ext",
-            tx.part_ext,
-            ["p_partkey", "p_container"],
-            tx.PART_EXT_SQL,
-            "SELECT p_partkey, p_container FROM part_ext",
-        ),
-        (
-            "customer_ext",
-            tx.customer_ext,
-            ["c_custkey", "c_phone"],
-            tx.CUSTOMER_EXT_SQL,
-            "SELECT c_custkey, c_phone FROM customer_ext",
-        ),
-        (
-            "supplier_ext",
-            tx.supplier_ext,
-            ["s_suppkey", "s_comment"],
-            tx.SUPPLIER_EXT_SQL,
-            "SELECT s_suppkey, s_comment FROM supplier_ext",
-        ),
-    ],
+    _DERIVED,
+    ids=[case[0] for case in _DERIVED],
 )
 def test_derived_relations_match_oracle(spark, name, frame, cols, sql_cte, sql_cols):
     df = frame(spark, SF_SMOKE)
