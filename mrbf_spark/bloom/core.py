@@ -114,13 +114,21 @@ def _fold_words(nwords: np.ndarray):
     (__kid, __indexes) rows into (__kid, widx, word) rows, one per
     distinct non-zero word. Key kid's words occupy global ids
     offsets[kid] .. offsets[kid+1]-1, so a single sort + reduceat ORs
-    all keys at once."""
+    all keys at once. A null __kid is a row whose key the count pass
+    did not see: raises ValueError rather than drop it (a dropped row
+    is a false negative)."""
     offsets = np.concatenate(([0], np.cumsum(nwords, dtype=np.int64)))
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         parts: list[tuple[np.ndarray, np.ndarray]] = []
         n_acc = n_new = 0
         for batch in batches:
+            if batch.column("__kid").null_count:
+                raise ValueError(
+                    "build_bloom_filters: a key absent from the count pass reached the"
+                    " fold; the build scans its input twice and needs a deterministic"
+                    " input (checkpoint or cache it first)"
+                )
             lists = batch.column("__indexes")
             idx = pc.list_flatten(lists).to_numpy()
             kid = batch.column("__kid").to_numpy()[pc.list_parent_indices(lists).to_numpy()]
@@ -217,7 +225,9 @@ def build_bloom_filters(
         sizes = spark.createDataFrame(
             pa.table({"__kid": np.arange(len(keys), dtype=np.int32), "__key": keys, "m": m})
         )
-        hashed = keyed.join(F.broadcast(sizes), "__key").select(
+        # Left join: a key the count pass missed reaches the fold with a
+        # null __kid, which raises there instead of losing its rows.
+        hashed = keyed.join(F.broadcast(sizes), "__key", "left").select(
             "__kid", _indexes_col(F.col("__value"), F.col("m"), k, flavor).alias("__indexes")
         )
         merged = (

@@ -14,7 +14,7 @@ implements, each stage composed from the already-tested library ops:
       → semantic dedup       (text_semdedup: hashed-bigram vectors →
                               SemDeDup keeper rule)
       → decontamination      (optional: exact eval n-gram overlap via
-                              bloom prune + exact verify)
+                              a broadcast semi-join)
 
 and returns the surviving documents plus a per-stage census. This is
 the `curate` CLI job (python -m mrbf_spark curate …) — optionally

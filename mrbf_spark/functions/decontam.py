@@ -4,39 +4,31 @@ the standard contamination check an LLM data pipeline runs before
 training (n-gram overlap, as popularized by the GPT-3 and PaLM
 appendix procedures; public methodology).
 
-This is the engine's Bloom machinery (SURVEY.md §2, the reference's
-build→probe pipeline, spark-bloom-filter/bloomfilters_builder.py:29
-semantics) applied to its flagship use case at 100 TB scale:
-
   1. Extract distinct word n-grams per eval document (pure JVM
      expressions: split → transform(sequence) → explode — no Python
      in the row path).
-  2. Build ONE Bloom filter over all eval n-grams
-     (`build_bloom_filters`, single key) — eval sets are tiny
-     (thousands of docs) relative to the corpus, so the filter is
-     megabytes and broadcastable.
-  3. Probe every corpus n-gram against the broadcast filter
-     (codegen'd hash + bit-test, zero shuffle of the corpus).
-  4. Exact-verify the ~p-sized survivor set with a broadcast
-     semi-join against the true eval n-gram set, removing false
-     positives — so the final result is EXACTLY the n-gram
-     intersection and hash-family-independent (same prune+verify
-     shape as `bloom_semijoin_prune`), which is what makes the
-     query DuckDB-oracle-checkable despite the Bloom stage.
-  5. Per-document contamination rate + threshold flag.
+  2. Extract the corpus n-grams the same way.
+  3. Keep the corpus n-grams that occur in the eval set: one
+     left-semi join against the broadcast distinct eval gram set —
+     exactly the n-gram intersection, which is what makes the query
+     DuckDB-oracle-checkable. No Bloom filter sits in front of it: a
+     pre-filter over the same gram set removes no row this join
+     keeps and saves no shuffle (the corpus side is never shuffled
+     either way), so it would only add a build.
+  4. Per-document contamination rate + threshold flag.
 
-Scale shape: the corpus (the 100 TB side) is scanned once, never
-shuffled until the survivor set (≈ p × corpus n-grams + true hits);
-the only broadcast is eval-set-sized. A hot document cannot skew
-anything: grams are distinct-per-doc and the aggregations key on
-doc_id.
+Scale shape: the corpus (the 100 TB side) is scanned once and meets
+the eval gram set map-side; the only broadcast is eval-set-sized
+(benchmark suites are thousands of docs). The first shuffle carries
+the (doc_id) hit rows into the per-document count. A hot document
+cannot skew anything: grams are distinct-per-doc and the aggregations
+key on doc_id.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ..bloom.core import build_bloom_filters, num_hashes, probe_bloom_filters
 from ..registry import builder, register, scoped_cache
 from ..tables import load_table
 
@@ -46,7 +38,6 @@ NGRAM_N = 3
 # of (doc_id, text) works for `eval_docs` in the library API.
 EVAL_MOD = 97
 FLAG_THRESHOLD = 0.05
-P = 0.01  # bloom FP target: 1% of surviving grams pay the exact join
 # Semantic-contamination threshold: hashed-bigram cosines of unrelated
 # docs sit near 0 (text_embedding.py measured p99.9 ≈ 0.45); verbatim
 # and near-verbatim eval copies sit near 1.0 — same operating point as
@@ -83,52 +74,25 @@ def decontaminate_docs(
     eval_docs: DataFrame,
     *,
     n: int = NGRAM_N,
-    p: float = P,
     threshold: float = FLAG_THRESHOLD,
     eval_grams: DataFrame | None = None,
-    filters: DataFrame | None = None,
 ) -> DataFrame:
     """Library API: per-corpus-document eval-overlap report.
 
     Returns (doc_id, n_grams, n_contaminated, contamination_rate,
-    flagged) — exact n-gram intersection counts (bloom prune + exact
-    verify; FP-free by construction).
+    flagged) — exact n-gram intersection counts from one broadcast
+    left-semi join against the distinct eval gram set. Lazy: no Spark
+    job runs until the caller's action.
 
-    `eval_grams` / `filters` (r9): the distinct eval-gram table and
-    its bloom filter, when the caller already built them — the
-    registered `decontaminate` entry shares ONE filter build between
-    this channel and decontaminate_cut (identical inputs, identical
-    filter) instead of building it twice.
-
-    CONSISTENCY CONTRACT (ADVICE r9): the two must come from the SAME
-    (eval_docs, n, p) build — eval_grams exactly the distinct grams of
-    eval_docs at this n, filters exactly build_bloom_filters over that
-    gram set at this p. A filter built from a different gram set
-    silently UNDERCOUNTS contamination (bloom false negatives for
-    grams outside its build set), defeating the FP-free guarantee; a
-    mismatched p changes num_hashes and breaks every probe. There is
-    no cheap runtime check (verifying would cost the build being
-    shared), so the pair travels together or not at all.
+    `eval_grams`: the distinct eval-gram table of eval_docs at this n,
+    when the caller already built it — the registered `decontaminate`
+    entry shares one checkpointed table between this channel and
+    decontaminate_cut instead of scanning the eval set twice.
     """
     corpus_grams = doc_ngrams(corpus, n)
     if eval_grams is None:
         eval_grams = doc_ngrams(eval_docs, n).select("g").distinct()
-    if filters is None:
-        filters = build_bloom_filters(
-            eval_grams.withColumn("__g", F.lit("eval")), "__g", "g", p
-        )
-    survivors = probe_bloom_filters(
-        corpus_grams.withColumn("__g", F.lit("eval")),
-        "__g",
-        "g",
-        filters,
-        k=num_hashes(p),
-        broadcast=True,
-    ).filter(F.col("bloom_hit") == 1)
-    # Exact verify: broadcast semi-join against the true eval gram set
-    # removes bloom false positives; only the survivor set (not the
-    # corpus) reaches this join.
-    hits = survivors.join(F.broadcast(eval_grams), "g", "left_semi")
+    hits = corpus_grams.join(F.broadcast(eval_grams), "g", "left_semi")
 
     # Per-doc gram totals come from the array length at scan time —
     # no explode, no shuffle (docs with zero grams are excluded, same
@@ -159,9 +123,7 @@ def decontaminate_cut(
     eval_docs: DataFrame,
     *,
     n: int = NGRAM_N,
-    p: float = P,
     eval_grams: DataFrame | None = None,
-    filters: DataFrame | None = None,
 ) -> DataFrame:
     """Span-level decontamination — the surgical alternative to
     dropping whole documents (what production pipelines do when a doc
@@ -174,33 +136,21 @@ def decontaminate_cut(
       (doc_id, text [rewritten, '' if fully contaminated],
        n_tokens [surviving], n_removed).
 
-    Same bloom prune + exact verify as decontaminate_docs — but over
+    Same exact broadcast semi-join as decontaminate_docs — but over
     POSITIONAL grams (every occurrence, not the per-doc distinct set),
-    since the cut needs locations. 100 TB shape: the corpus is scanned
-    twice (gram probe; token reassembly), shuffles carry
-    (doc_id, position) int pairs for the survivor set and the per-doc
-    reassembly groupBy — the same bounds as substring_dedup's CUT,
-    whose reassembly pattern this reuses. `eval_grams` / `filters`:
-    see decontaminate_docs (one shared filter build, r9)."""
+    since the cut needs locations. Lazy, like decontaminate_docs.
+    100 TB shape: the corpus is scanned twice (gram join; token
+    reassembly), shuffles carry (doc_id, position) int pairs for the
+    hit set and the per-doc reassembly groupBy — the same bounds as
+    substring_dedup's CUT, whose reassembly pattern this reuses.
+    `eval_grams`: see decontaminate_docs."""
     if eval_grams is None:
         eval_grams = doc_ngrams(eval_docs, n).select("g").distinct()
-    if filters is None:
-        filters = build_bloom_filters(
-            eval_grams.withColumn("__g", F.lit("eval")), "__g", "g", p
-        )
     toks_arr = F.split(F.col("text"), " ")
     pos_grams = corpus.select(
         "doc_id", F.posexplode(ngrams_col(toks_arr, n)).alias("pos", "g")
     )
-    survivors = probe_bloom_filters(
-        pos_grams.withColumn("__g", F.lit("eval")),
-        "__g",
-        "g",
-        filters,
-        k=num_hashes(p),
-        broadcast=True,
-    ).filter(F.col("bloom_hit") == 1)
-    hits = survivors.join(F.broadcast(eval_grams), "g", "left_semi")
+    hits = pos_grams.join(F.broadcast(eval_grams), "g", "left_semi")
     cut_pos = hits.select(
         "doc_id",
         F.explode(F.sequence(F.col("pos"), F.col("pos") + F.lit(n - 1))).alias(
@@ -370,7 +320,9 @@ def semantic_decontaminate_pruned(
     from .similarity import (
         IVF_SAMPLE,
         _decimal_dot,
+        _kmeans_centroids,
         ivf_cell_col,
+        ivf_probes_col,
         with_matrix,
     )
     from .text_embedding import text_hash_embeddings
@@ -391,7 +343,7 @@ def semantic_decontaminate_pruned(
         ],
         dtype=np.float64,
     )
-    cent = _fit_cells(sample, n_cells)
+    cent = _kmeans_centroids(sample, n_cells)
     e_cells = with_matrix(e, spark, cent).select(
         "eval_id",
         "e_emb",
@@ -407,12 +359,11 @@ def semantic_decontaminate_pruned(
         )
     )
     c.count()
-    probes = _probes_col(n_probe)
     c_probed = with_matrix(c, spark, cent).select(
         "doc_id",
         "c_emb",
         "c_nrm",
-        F.explode(probes).alias("cell"),
+        F.explode(ivf_probes_col(F.col("c_emb"), F.col("mat"), n_probe)).alias("cell"),
     )
     # Arrow kernel for the candidate dots (r10, bit-identical — see
     # _arrow_cross_cosine), and the cache MATERIALIZED before
@@ -434,42 +385,6 @@ def semantic_decontaminate_pruned(
         "doc_id", "c_emb", "c_nrm", "eval_id", "e_emb", "e_nrm",
     )
     return report.unionByName(_argmax_report(fb_pairs, tau))
-
-
-def _fit_cells(sample, n_cells: int):
-    """Seeded spherical Lloyd at an explicit cell count (the
-    similarity.py _kmeans_centroids recipe, parameterized)."""
-    import numpy as np
-
-    from .similarity import IVF_ITERS, IVF_SEED
-
-    x = sample / np.maximum(
-        np.linalg.norm(sample, axis=1, keepdims=True), 1e-12
-    )
-    rs = np.random.RandomState(IVF_SEED)
-    cent = x[rs.choice(len(x), size=min(n_cells, len(x)), replace=False)]
-    for _ in range(IVF_ITERS):
-        assign = np.argmax(x @ cent.T, axis=1)
-        for j in range(len(cent)):
-            members = x[assign == j]
-            if len(members):
-                cj = members.mean(axis=0)
-                cent[j] = cj / max(np.linalg.norm(cj), 1e-12)
-    return cent
-
-
-def _probes_col(n_probe: int) -> Column:
-    """Top-n_probe cell ids of `c_emb` against the broadcast matrix
-    column (ivf_probes_col with an explicit probe count)."""
-    from .similarity import _centroid_dots
-
-    dots = _centroid_dots(F.col("c_emb"), F.col("mat"))
-    ranked = F.sort_array(
-        F.transform(dots, lambda d, i: F.struct((-d).alias("nd"), i.alias("i")))
-    )
-    return F.transform(
-        F.slice(ranked, 1, n_probe), lambda s: s["i"].cast("int")
-    )
 
 
 def _argmax_report(pairs: DataFrame, tau: float) -> DataFrame:
@@ -573,13 +488,14 @@ semclosest AS (SELECT c.doc_id, m.max_eval_cosine,
 """
 
 
-# The registered entry is a two-part union since r6: part='ngram' is
-# the exact 3-gram-overlap report (bloom prune + exact verify) and
-# part='semantic' is the embedding-cosine nearest-eval report — the
-# two contamination channels a pipeline actually checks (token overlap
-# AND paraphrase-level similarity). Normalized columns: n1 = n_grams /
-# closest_eval_id, n2 = n_contaminated / NULL, x1 = contamination_rate
-# / max_eval_cosine.
+# The registered entry is a three-part union: part='ngram' is the
+# exact 3-gram-overlap report (broadcast semi-join), part='semantic'
+# is the embedding-cosine nearest-eval report and part='cut' is the
+# span-level rewrite — the contamination channels a pipeline actually
+# checks (token overlap AND paraphrase-level similarity). Normalized
+# columns: n1 = n_grams / closest_eval_id / n_tokens, n2 =
+# n_contaminated / NULL / n_removed, x1 = contamination_rate /
+# max_eval_cosine / NULL.
 @register(
     "decontaminate",
     _GRAMS_CTE
@@ -618,20 +534,12 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = d.filter(F.col("doc_id") % EVAL_MOD != 0)
     nb = F.lit(None).cast("long")
     ns = F.lit(None).cast("string")
-    # ONE eval-gram table + ONE bloom filter shared by the ngram and
-    # cut channels (r9): both previously derived the same distinct
-    # gram set and built the same filter independently — a duplicate
-    # eval scan and a duplicate build (collect + hash + merge + two
-    # Arrow stages) per query.
+    # ONE checkpointed eval-gram table shared by the ngram and cut
+    # channels: both join against the same distinct gram set.
     eval_grams = (
         doc_ngrams(eval_docs, NGRAM_N).select("g").distinct().localCheckpoint()
     )
-    shared_filters = build_bloom_filters(
-        eval_grams.withColumn("__g", F.lit("eval")), "__g", "g", P
-    )
-    ng = decontaminate_docs(
-        corpus, eval_docs, eval_grams=eval_grams, filters=shared_filters
-    ).select(
+    ng = decontaminate_docs(corpus, eval_docs, eval_grams=eval_grams).select(
         F.lit("ngram").alias("part"),
         "doc_id",
         F.col("n_grams").alias("n1"),
@@ -649,9 +557,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "flagged",
         ns.alias("txt"),
     )
-    cut = decontaminate_cut(
-        corpus, eval_docs, eval_grams=eval_grams, filters=shared_filters
-    ).select(
+    cut = decontaminate_cut(corpus, eval_docs, eval_grams=eval_grams).select(
         F.lit("cut").alias("part"),
         "doc_id",
         F.col("n_tokens").alias("n1"),

@@ -52,7 +52,9 @@ from .similarity import (
     MINE_NEG_LO,
     NEARDUP_TAU,
     _decimal_dot,
+    _kmeans_centroids,
     ivf_cell_col,
+    ivf_probes_col,
     with_matrix,
 )
 
@@ -202,8 +204,6 @@ def _ivf_scored(
     n_cells reproduces the exact cross."""
     import numpy as np
 
-    from .decontam import _fit_cells, _probes_col
-
     spark = emb.sparkSession
     sample = np.array(
         [
@@ -212,29 +212,27 @@ def _ivf_scored(
         ],
         dtype=np.float64,
     )
-    cent = _fit_cells(sample, n_cells)
+    cent = _kmeans_centroids(sample, n_cells)
     corpus = with_matrix(emb, spark, cent).select(
         "vec_id",
         "embedding",
         _decimal_dot(F.col("embedding"), F.col("embedding")).alias("c_nrm"),
         ivf_cell_col(F.col("embedding"), F.col("mat")).alias("cell"),
     )
-    # alias to c_emb BEFORE the probe expression: _probes_col ranks
-    # cells of the column literally named c_emb (decontam's convention)
     probed = with_matrix(
         anchors.select(
             F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("c_emb"),
+            F.col("embedding").alias("q_emb"),
         ),
         spark,
         cent,
     ).select(
         "query_id",
-        "c_emb",
-        _decimal_dot(F.col("c_emb"), F.col("c_emb")).alias("q_nrm"),
-        F.explode(_probes_col(n_probe)).alias("cell"),
+        "q_emb",
+        _decimal_dot(F.col("q_emb"), F.col("q_emb")).alias("q_nrm"),
+        F.explode(ivf_probes_col(F.col("q_emb"), F.col("mat"), n_probe)).alias("cell"),
     )
-    cosine = _decimal_dot(F.col("c_emb"), F.col("embedding")) / (
+    cosine = _decimal_dot(F.col("q_emb"), F.col("embedding")) / (
         F.sqrt(F.col("q_nrm")) * F.sqrt(F.col("c_nrm"))
     )
     return (

@@ -489,14 +489,15 @@ IVF_SEED = 42
 IVF_ITERS = 5
 
 
-def _kmeans_centroids(sample: np.ndarray) -> np.ndarray:
-    """Fixed-iteration Lloyd k-means on the driver sample. Seeded
-    init + fixed iteration count ⇒ fully deterministic (no
-    convergence-dependent nondeterminism). Rows are L2-normalized so
-    Euclidean assignment ≈ cosine cells (spherical k-means)."""
+def _kmeans_centroids(sample: np.ndarray, n_cells: int = N_CENTROIDS) -> np.ndarray:
+    """Fixed-iteration Lloyd k-means on the driver sample, n_cells
+    centroids. Seeded init + fixed iteration count ⇒ fully
+    deterministic (no convergence-dependent nondeterminism). Rows are
+    L2-normalized so Euclidean assignment ≈ cosine cells (spherical
+    k-means)."""
     x = sample / np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
     rs = np.random.RandomState(IVF_SEED)
-    cent = x[rs.choice(len(x), size=min(N_CENTROIDS, len(x)), replace=False)]
+    cent = x[rs.choice(len(x), size=min(n_cells, len(x)), replace=False)]
     for _ in range(IVF_ITERS):
         assign = np.argmax(x @ cent.T, axis=1)
         for j in range(len(cent)):
@@ -523,14 +524,14 @@ def ivf_cell_col(emb: Column, mat: Column) -> Column:
     return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
 
 
-def ivf_probes_col(emb: Column, mat: Column) -> Column:
-    """Top-NPROBE cell ids by dot desc (ties by id asc): sort
+def ivf_probes_col(emb: Column, mat: Column, n_probe: int = NPROBE) -> Column:
+    """Top-n_probe cell ids by dot desc (ties by id asc): sort
     struct(-dot, id) ascending and slice — no Python, no UDF."""
     dots = _centroid_dots(emb, mat)
     ranked = F.sort_array(
         F.transform(dots, lambda d, i: F.struct((-d).alias("nd"), i.alias("i")))
     )
-    return F.transform(F.slice(ranked, 1, NPROBE), lambda s: s["i"].cast("int"))
+    return F.transform(F.slice(ranked, 1, n_probe), lambda s: s["i"].cast("int"))
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

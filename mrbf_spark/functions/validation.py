@@ -18,8 +18,9 @@ adding a constraint adds a column, not a scan. The only non-scan
 constraints are PK uniqueness (count_distinct — Catalyst plans the
 standard Expand, still one file scan) and referential integrity (a
 broadcast left-anti count against the dim's key column — the dim is
-the small side by construction; at warehouse scale swap in a bloom
-prune, functions/decontam.py shows the shape). The two single-row
+the small side by construction; once the dim outgrows the broadcast
+ceiling, swap in the bloom prune of bloom_semijoin_prune in
+operators/bloom_queries.py). The two single-row
 aggregates then cross-join into the literal report — driver traffic
 is one row per constraint, never data.
 """

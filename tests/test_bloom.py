@@ -276,6 +276,24 @@ def test_fold_kernel_matches_scatter_reference(monkeypatch, slack):
         assert np.array_equal(g, e)
 
 
+def test_fold_kernel_rejects_unknown_key():
+    """A row whose key the count pass did not see reaches the fold
+    with a null __kid (the build's left join on the sizes table). The
+    fold raises instead of dropping it: a dropped row is a false
+    negative."""
+    import numpy as np
+    import pyarrow as pa
+
+    from mrbf_spark.bloom.core import _fold_words
+
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([0, None], pa.int32()), pa.array([[1, 2], [3, 4]], pa.list_(pa.int64()))],
+        names=["__kid", "__indexes"],
+    )
+    with pytest.raises(ValueError, match="deterministic input"):
+        list(_fold_words(np.array([1], dtype=np.int64))(iter([batch])))
+
+
 def test_key_cardinality_guard(spark, orders, monkeypatch):
     """Above MAX_FILTER_KEYS distinct keys the build fails loudly,
     naming the key column and its distinct count."""

@@ -110,9 +110,7 @@ TEST_ONLY = {
     "multimodal.multimodal_resize": "Spark-side resize; pixels equal resize_image of the decoded original",
     "multimodal.resize_image": "pixel-exact nearest-neighbour (floor-sampling) resize",
     "similarity._assign_score_batches": "scored Arrow assignment kernel, bit-equal to the JVM semdedup_scored",
-    "similarity._kmeans_centroids": "k-means centroids behind ann_ivf_topk",
     "similarity.ann_ivf_topk": "IVF top-k at 4 of 16 cells: mean recall >= 0.6 vs brute force, exact cosines",
-    "similarity.ivf_probes_col": "nearest-centroid probe cells behind ann_ivf_topk",
     "sketches._kmv_jaccard_from_union": "Jaccard estimate from a union sketch, behind kmv_jaccard and kmv_intersection_estimate",
     "sketches.cms_estimate_col": "count-min point estimate; filtering on it drops most of a long tail",
     "sketches.kmv_intersection_estimate": "KMV intersection and union estimates within their sampling envelope",

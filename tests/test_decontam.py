@@ -1,5 +1,6 @@
-"""Decontamination operator: n-gram semantics, bloom-prune + exact-
-verify equivalence to the plain intersection, and threshold flagging."""
+"""Decontamination operator: n-gram semantics, equivalence of the
+n-gram report to the plain intersection, threshold flagging and
+laziness (no Spark job before the caller's action)."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import pyspark.sql.functions as F
 
 from mrbf_spark.functions.decontam import (
     NGRAM_N,
+    decontaminate_cut,
     decontaminate_docs,
     doc_ngrams,
     semantic_decontaminate,
@@ -57,16 +59,15 @@ def test_exact_intersection_and_flag(spark):
     assert out[11]["n_contaminated"] == 0 and out[11]["flagged"] == 0
 
 
-def test_bloom_path_equals_plain_intersection(spark):
-    """The registered bloom-prune + exact-verify pipeline must equal
-    the naive join intersection on real data (FP-free by construction,
-    independent of the bloom hash family / p)."""
+def test_ngram_report_equals_plain_intersection(spark):
+    """The n-gram report must equal the naive join intersection on
+    real data."""
     from mrbf_spark.tables import load_table
 
     d = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     eval_docs = d.filter(F.col("doc_id") % 11 == 0)
     corpus = d.filter(F.col("doc_id") % 11 != 0).limit(60)
-    got = decontaminate_docs(corpus, eval_docs, p=0.2).toPandas()
+    got = decontaminate_docs(corpus, eval_docs).toPandas()
 
     cg = doc_ngrams(corpus)
     eg = doc_ngrams(eval_docs).select("g").distinct()
@@ -88,6 +89,35 @@ def test_bloom_path_equals_plain_intersection(spark):
     assert list(g["doc_id"]) == list(n["doc_id"])
     assert list(g["n_grams"]) == list(n["n_grams"])
     assert list(g["n_contaminated"]) == list(n["n_contaminated"])
+
+
+def test_ngram_and_cut_run_no_job_before_the_action(spark):
+    """decontaminate_docs and decontaminate_cut only build a plan: no
+    Spark job runs until the caller's action."""
+    import time
+
+    corpus = _docs(spark, [(10, "the quick brown fox jumps")])
+    eval_docs = _docs(spark, [(99, "the quick brown cat")])
+    sc = spark.sparkContext
+    group = "decontam-lazy-call"
+    sc.setJobGroup(group, group)
+    try:
+        decontaminate_docs(corpus, eval_docs)
+        decontaminate_cut(corpus, eval_docs)
+        # The status store fills from the async listener bus, in event
+        # order: once a later sentinel job shows, any job the calls ran
+        # shows too.
+        sc.setJobGroup(group + "-sentinel", group)
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + "-sentinel"):
+        assert time.monotonic() < deadline, "sentinel job never reached the status store"
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(group) == []
 
 
 def test_semantic_flags_paraphrase_missed_by_ngrams(spark):
@@ -220,7 +250,6 @@ def test_semantic_pruned_is_one_sided_and_flags_planted(spark):
 def test_cut_rewrites_planted_spans(spark):
     """decontaminate_cut (r7): hand-checked span removal — mid-doc
     hit, full contamination, clean doc, and a doc too short to gram."""
-    from mrbf_spark.functions.decontam import decontaminate_cut
     from mrbf_spark.registry import release_scoped_caches
 
     ev = spark.createDataFrame(
@@ -248,7 +277,6 @@ def test_cut_rewrites_planted_spans(spark):
 
 def test_cut_overlapping_hits_union_not_double_cut(spark):
     """Two overlapping eval 3-grams cover 4 tokens, not 6."""
-    from mrbf_spark.functions.decontam import decontaminate_cut
     from mrbf_spark.registry import release_scoped_caches
 
     ev = spark.createDataFrame(

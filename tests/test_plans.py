@@ -210,8 +210,8 @@ _BNLJ_ALLOWED = {
     "bloom_build_invariants",
     "bloom_split_fp_report",
     "bloom_semijoin_prune",
-    "decontaminate",  # bloom attach + the semantic part's broadcast
-    # eval-embedding cross (benchmark-sized side by construction)
+    "decontaminate",  # the semantic part's broadcast eval-embedding
+    # cross (benchmark-sized side by construction)
     "semantic_decontam",  # same broadcast eval cross, standalone builder
     "semantic_decontam_pruned",  # r7: the centroid-matrix broadcast
     # attach + the (normally EMPTY, edge-bounded) exact-fallback
@@ -228,8 +228,7 @@ _BNLJ_ALLOWED = {
     "embedding_neardup",  # same attach, standalone builder
     "semdedup",  # same attach, standalone builder
     "text_semdedup",  # same attach over derived text vectors
-    "curate_corpus",  # composes text_semdedup's matrix attach +
-    # decontaminate's one-row bloom-filter attach (both above)
+    "curate_corpus",  # composes text_semdedup's matrix attach (above)
     "tpch_suite",  # q22's one-row scalar-threshold broadcast attach
     "data_ops_suite",  # validate's 1-row x 1-row aggregate crossJoin
     "validate_events",  # 1-row scan-agg × 1-row fk-agg report crossJoin

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from mrbf_spark.functions.sketches import (
     CMS_DEPTH,
-    CMS_WIDTH,
     KMV_K,
     cms_counters,
     cms_probe,
