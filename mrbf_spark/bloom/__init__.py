@@ -1,6 +1,5 @@
 from .sizing import num_hashes, num_bits
 from .core import (
-    hash_indexes_col,
     build_bloom_filters,
     probe_bloom_filters,
     fp_report,
@@ -9,7 +8,6 @@ from .core import (
 __all__ = [
     "num_hashes",
     "num_bits",
-    "hash_indexes_col",
     "build_bloom_filters",
     "probe_bloom_filters",
     "fp_report",

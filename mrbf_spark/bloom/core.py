@@ -8,10 +8,10 @@ errors (hadoop BloomFilterMapper.java:89-93).
 
 Spark-first design decisions (vs. the reference's RDD/MR pipeline):
 
-- **Hash family**: ``pmod(hash(value, lit(seed_i)), m)`` — Spark's
-  built-in murmur3 (seed 42) over (value, i) pairs, fully codegen'd
-  JVM-side. The reference's two implementations disagree bit-for-bit
-  anyway (mmh3 vs Hadoop murmur2, floor-mod vs abs-rem —
+- **Hash family**: ``pmod(hash(value, i), m)`` for i in 0..k-1 —
+  Spark's built-in murmur3 (seed 42) over (value, i) pairs, computed
+  in whole-stage codegen. The reference's two implementations disagree
+  bit-for-bit anyway (mmh3 vs Hadoop murmur2, floor-mod vs abs-rem —
   bloomfilters_util.py:79 vs BloomFilterMapper.java:100-104), so we
   freeze this one canonical scheme and test its statistical behavior.
 - **Bit storage**: packed ``array<long>`` of ceil(m/64) words
@@ -20,20 +20,26 @@ Spark-first design decisions (vs. the reference's RDD/MR pipeline):
 - **Build = Arrow fold per input partition, JVM ``bit_or`` merge,
   driver assembly.** The reference concatenates per-key index lists in
   the reduce (``extend_list``, bloomfilters_builder.py:44-54) — O(n·k)
-  ints shuffled per key, the anti-pattern at 100 TB. Here one
+  ints shuffled per key, the anti-pattern at 100 TB. Here a codegen'd
+  projection emits each row's key and its k raw 32-bit hashes, and one
   ``mapInArrow`` stage folds each input partition (the map-side
-  combiner): it ORs the partition's bits into 64-bit words with one
-  numpy sort + ``bitwise_or.reduceat`` and emits one
+  combiner): it looks each key up in the counted keys its closure
+  carries (a map-side join against a side table small enough to ride
+  with the task, so no join runs in Spark), reduces the hashes mod the
+  key's m, and ORs the partition's bits into 64-bit words with one
+  numpy sort + ``bitwise_or.reduceat``, emitting one
   (key, word index, word) row per distinct set word. A JVM
   ``groupBy(key, widx).agg(bit_or)`` — partial aggregation on the map
   side, final after the shuffle — merges those rows; the driver
   scatters the merged words into one local Arrow filter table, the
   place every probe broadcasts it from anyway.
-- **Probe = broadcast hash join** (the J1/J2 collapse): filters are a
-  tiny table (one row per key), so ``probe.join(broadcast(filters))``
-  replaces both the reference's driver-collect-and-broadcast
-  (bloomfilters_tester.py:81) and the Hadoop secondary-sort machinery
-  (tester/BloomFilterTester.java:70-97).
+- **Probe = broadcast hash join + one unrolled AND of k bit tests**
+  (the J1/J2 collapse): filters are a tiny table (one row per key), so
+  ``probe.join(broadcast(filters))`` replaces both the reference's
+  driver-collect-and-broadcast (bloomfilters_tester.py:81) and the
+  Hadoop secondary-sort machinery (tester/BloomFilterTester.java:70-97).
+  The bit tests are plain expressions, so the join, the test and a
+  following partial aggregate compile into one codegen stage.
 
 Scale ledger (1000 executors, 100 TB input): per-row work is
 whole-stage-codegen'd hashing plus one vectorized numpy pass per Arrow
@@ -59,6 +65,7 @@ import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 
+from .hadoop_flavor import abs_rem, hadoop_hashes_udf
 from .sizing import num_bits, num_hashes
 
 # Schema of a built filter table. `words` is the packed bitset:
@@ -66,9 +73,9 @@ from .sizing import num_bits, num_hashes
 FILTER_SCHEMA = "key string, n bigint, m bigint, k int, words array<long>"
 
 # Key-cardinality ceiling for one build. Per-key counts come to the
-# driver and every key's word count rides into the fold's closure, so
-# a high-cardinality key column (an id, not a category) must fail here
-# instead of exhausting the driver.
+# driver and the counted keys and their sizes ride into the fold's
+# closure, so a high-cardinality key column (an id, not a category)
+# must fail here instead of exhausting the driver.
 MAX_FILTER_KEYS = 1 << 16
 
 # Filter-word byte ceiling: the build refuses to assemble more on the
@@ -82,20 +89,38 @@ _WORD_SCHEMA = "__kid int, widx int, word long"
 # compacted ones by this many, so task memory tracks distinct words.
 _COMPACT_SLACK = 1 << 20
 
+# Hash flavors: the fold's numpy reduction of raw 32-bit hashes to
+# positions in [0, m), and the probe's SQL for the position of hash
+# {i}. spark-murmur3 is the canonical codegen'd family (np.mod is
+# Spark's pmod for m > 0); hadoop-murmur2 is the reference's Java
+# family, Math.abs(h % m) over the pandas UDF's hashes in __h, kept
+# for bit parity with filters built by the reference's Java jobs
+# (SURVEY.md §1.4).
+_FLAVORS = {
+    "spark-murmur3": (np.mod, "pmod(hash(__value, {i}), __m)"),
+    "hadoop-murmur2": (abs_rem, "abs(__h[{i}] % __m)"),
+}
 
-def hash_indexes_col(value_col, m_col, k: int):
-    """k seeded murmur3 hashes of `value_col`, each floor-mod m.
 
-    Mirrors the reference's family of k seeded hashes
-    (bloomfilters_util.py:60-79) with Spark's built-in ``hash``:
-    seeding is done by hashing the (value, i) pair, which gives an
-    independent hash per i. pmod keeps results in [0, m) even for
-    negative hashes (the Python reference relies on %'s floor-mod the
-    same way; the Java flavor's abs-rem differs — SURVEY.md §1.4).
-    """
-    return F.array(
-        *[F.pmod(F.hash(value_col, F.lit(i)), m_col).cast("long") for i in range(k)]
-    )
+def _flavor(flavor: str):
+    if flavor not in _FLAVORS:
+        raise ValueError(f"unknown hash flavor {flavor!r}")
+    return _FLAVORS[flavor]
+
+
+def _q(name: str) -> str:
+    """`name` as a back-quoted SQL identifier (a backtick doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _hashed(df: DataFrame, k: int, flavor: str, *cols: str) -> DataFrame:
+    """`cols` of `df` plus __h: the k raw 32-bit hashes of __value,
+    seeds 0..k-1 — one codegen'd projection, or the pandas UDF for
+    hadoop-murmur2."""
+    if flavor == "hadoop-murmur2":
+        return df.select(*cols, hadoop_hashes_udf(k)("__value").alias("__h"))
+    hashes = ", ".join(f"hash(__value, {i})" for i in range(k))
+    return df.selectExpr(*cols, f"array({hashes}) AS __h")
 
 
 def _or_reduce(gid: np.ndarray, word: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -109,29 +134,32 @@ def _or_reduce(gid: np.ndarray, word: np.ndarray) -> tuple[np.ndarray, np.ndarra
     return gid[starts], np.bitwise_or.reduceat(word, starts)
 
 
-def _fold_words(nwords: np.ndarray):
-    """mapInArrow body: fold one input partition of
-    (__kid, __indexes) rows into (__kid, widx, word) rows, one per
-    distinct non-zero word. Key kid's words occupy global ids
-    offsets[kid] .. offsets[kid+1]-1, so a single sort + reduceat ORs
-    all keys at once. A null __kid is a row whose key the count pass
-    did not see: raises ValueError rather than drop it (a dropped row
-    is a false negative)."""
-    offsets = np.concatenate(([0], np.cumsum(nwords, dtype=np.int64)))
+def _fold_words(keys: list[str], m: np.ndarray, reduce):
+    """mapInArrow body: fold one input partition of (__key, __h) rows,
+    __h a list of raw 32-bit hashes, into (__kid, widx, word) rows, one
+    per distinct non-zero word. A key's kid is its index in `keys`, the
+    keys the count pass saw; `reduce(h, m[kid])` maps each hash to its
+    bit position. Key kid's words occupy global ids offsets[kid] ..
+    offsets[kid+1]-1, so a single sort + reduceat ORs all keys at once.
+    A key missing from `keys` raises ValueError rather than drop its
+    rows (a dropped row is a false negative)."""
+    value_set = pa.array(keys, pa.string())
+    offsets = np.concatenate(([0], np.cumsum((m + 63) >> 6)))
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         parts: list[tuple[np.ndarray, np.ndarray]] = []
         n_acc = n_new = 0
         for batch in batches:
-            if batch.column("__kid").null_count:
+            kid = pc.index_in(batch.column("__key"), value_set=value_set)
+            if kid.null_count:
                 raise ValueError(
                     "build_bloom_filters: a key absent from the count pass reached the"
                     " fold; the build scans its input twice and needs a deterministic"
                     " input (checkpoint or cache it first)"
                 )
-            lists = batch.column("__indexes")
-            idx = pc.list_flatten(lists).to_numpy()
-            kid = batch.column("__kid").to_numpy()[pc.list_parent_indices(lists).to_numpy()]
+            hashes = batch.column("__h")
+            kid = kid.to_numpy()[pc.list_parent_indices(hashes).to_numpy()]
+            idx = reduce(pc.list_flatten(hashes).to_numpy().astype(np.int64), m[kid])
             parts.append(
                 _or_reduce(offsets[kid] + (idx >> 6), np.left_shift(np.int64(1), idx & 63))
             )
@@ -156,19 +184,6 @@ def _fold_words(nwords: np.ndarray):
     return fold
 
 
-def _indexes_col(value_col, m_col, k: int, flavor: str):
-    """Hash-family seam: the canonical codegen'd Spark-murmur3 family,
-    or the reference-Hadoop murmur2/abs-rem flavor (SURVEY.md §1.4) for
-    bit parity with filters built by the reference's Java jobs."""
-    if flavor == "spark-murmur3":
-        return hash_indexes_col(value_col, m_col, k)
-    if flavor == "hadoop-murmur2":
-        from .hadoop_flavor import hadoop_hash_indexes_udf
-
-        return hadoop_hash_indexes_udf(k)(value_col, m_col)
-    raise ValueError(f"unknown hash flavor {flavor!r}")
-
-
 def build_bloom_filters(
     df: DataFrame,
     key_col: str,
@@ -186,18 +201,20 @@ def build_bloom_filters(
     folded into groupBy().count() + a one-row-per-key collect; raises
     ValueError above MAX_FILTER_KEYS keys or BROADCAST_CEILING_BYTES
     of filter words.
-    Fold: hash every row (codegen), then one mapInArrow stage ORs each
-    input partition's bits into (key, widx, word) rows (_fold_words).
+    Fold: emit each row's key and k raw hashes (codegen), then one
+    mapInArrow stage looks the key up, reduces the hashes mod m and ORs
+    each input partition's bits into (key, widx, word) rows
+    (_fold_words).
     Merge: JVM bit_or per (key, widx); the driver scatters the merged
     words into each key's dense word array, as the reference's builder
     finishes its filters there (bloomfilters_builder.py:100).
     """
     spark = df.sparkSession
+    reduce, _ = _flavor(flavor)
     k = num_hashes(p)
-    keyed = df.select(
-        F.col(key_col).cast("string").alias("__key"),
-        F.col(value_col).cast("string").alias("__value"),
-    ).filter(F.col("__key").isNotNull() & F.col("__value").isNotNull())
+    keyed = df.selectExpr(
+        f"CAST({_q(key_col)} AS STRING) AS __key", f"CAST({_q(value_col)} AS STRING) AS __value"
+    ).where("__key IS NOT NULL AND __value IS NOT NULL")
 
     counts = keyed.groupBy("__key").count().collect()  # one row per key: tiny by design
     if len(counts) > MAX_FILTER_KEYS:
@@ -209,8 +226,7 @@ def build_bloom_filters(
     keys = [r["__key"] for r in counts]
     n = np.array([r["count"] for r in counts], dtype=np.int64)
     m = np.array([num_bits(int(c), p) for c in n], dtype=np.int64)
-    nwords = (m + 63) >> 6
-    offsets = np.concatenate(([0], np.cumsum(nwords)))
+    offsets = np.concatenate(([0], np.cumsum((m + 63) >> 6)))
     if offsets[-1] * 8 > BROADCAST_CEILING_BYTES:  # also keeps offsets in int32
         raise ValueError(
             f"build_bloom_filters: filters over key column {key_col!r} need"
@@ -220,20 +236,11 @@ def build_bloom_filters(
 
     flat = np.zeros(offsets[-1], dtype=np.int64)
     if keys:
-        # An Arrow table is a LocalTableScan, so no Python worker scans
-        # it; its broadcast is still one small Spark job.
-        sizes = spark.createDataFrame(
-            pa.table({"__kid": np.arange(len(keys), dtype=np.int32), "__key": keys, "m": m})
-        )
-        # Left join: a key the count pass missed reaches the fold with a
-        # null __kid, which raises there instead of losing its rows.
-        hashed = keyed.join(F.broadcast(sizes), "__key", "left").select(
-            "__kid", _indexes_col(F.col("__value"), F.col("m"), k, flavor).alias("__indexes")
-        )
         merged = (
-            hashed.mapInArrow(_fold_words(nwords), _WORD_SCHEMA)
+            _hashed(keyed, k, flavor, "__key")
+            .mapInArrow(_fold_words(keys, m, reduce), _WORD_SCHEMA)
             .groupBy("__kid", "widx")
-            .agg(F.bit_or("word").alias("word"))
+            .agg(F.expr("bit_or(word) AS word"))
             .toArrow()
         )
         kid, widx, word = (merged[c].to_numpy() for c in ("__kid", "widx", "word"))
@@ -248,14 +255,6 @@ def build_bloom_filters(
         }
     )
     return spark.createDataFrame(table, FILTER_SCHEMA)
-
-
-# Probe expression: all k hash positions set ⇒ membership "maybe".
-# element_at is 1-based; i>>6 selects the word, 1<<(i&63) the bit.
-_PROBE_EXPR = (
-    "forall(__indexes, i ->"
-    " (element_at(words, int(shiftright(i, 6)) + 1) & shiftleft(1L, int(i & 63))) != 0)"
-)
 
 
 def probe_bloom_filters(
@@ -278,8 +277,10 @@ def probe_bloom_filters(
     (BloomFilterMapper.java:89-93, bloomfilters_util.py:75-76); an
     empty filter table yields zero rows.
     Returns the input columns plus an integer `bloom_hit` (1 = maybe
-    present, 0 = definitely absent). Pass `k` (from sizing.num_hashes)
-    to skip the driver-side lookup action.
+    present, 0 = definitely absent): one projection ANDs the k bit
+    tests, unrolled, so with spark-murmur3 hashing, join and test all
+    run in whole-stage codegen. Pass `k` (from sizing.num_hashes) to
+    skip the driver-side lookup action.
 
     broadcast: True forces the broadcast hint, False a plain join,
     "auto" (default) broadcasts only while the total bitset size is
@@ -291,28 +292,29 @@ def probe_bloom_filters(
     broadcast flag to skip the action entirely (the catalog paths
     do).
     """
+    _, position = _flavor(flavor)
     if k is None or broadcast == "auto":
-        stats = filters.agg(
-            F.max("k").alias("k"), F.sum("m").alias("total_bits")
-        ).collect()[0]
+        stats = filters.selectExpr("max(k) AS k", "sum(m) AS total_bits").collect()[0]
         if k is None:
             k = int(stats["k"] or 1)  # an empty table joins no rows; any k plans
         if broadcast == "auto":
             broadcast = (int(stats["total_bits"] or 0) >> 3) <= BROADCAST_CEILING_BYTES
-    probe = df.withColumn("__key", F.col(key_col).cast("string")).withColumn(
-        "__value", F.col(value_col).cast("string")
+    probe = df.selectExpr(
+        "*", f"CAST({_q(key_col)} AS STRING) AS __key", f"CAST({_q(value_col)} AS STRING) AS __value"
     )
-    build_side = filters.select(F.col("key").alias("__key"), "m", "words")
+    build_side = filters.selectExpr("key AS __key", "m AS __m", "words AS __words")
     if broadcast:
         build_side = F.broadcast(build_side)
     joined = probe.join(build_side, "__key")
-    return (
-        joined.withColumn(
-            "__indexes", _indexes_col(F.col("__value"), F.col("m"), k, flavor)
-        )
-        .withColumn("bloom_hit", F.expr(_PROBE_EXPR).cast("int"))
-        .drop("__key", "__value", "__indexes", "m", "words")
+    if flavor == "hadoop-murmur2":
+        joined = _hashed(joined, k, flavor, "*")  # only rows whose key has a filter
+    # Bit i of the filter: element_at is 1-based, i>>6 selects the
+    # word, 1<<(i&63) the bit.
+    hit = " AND ".join(
+        f"(element_at(__words, int(shiftright({pos}, 6)) + 1) & shiftleft(1L, int({pos} & 63))) != 0"
+        for pos in (position.format(i=i) for i in range(k))
     )
+    return joined.selectExpr(*map(_q, df.columns), f"CAST({hit} AS INT) AS bloom_hit")
 
 
 def fp_report(probed: DataFrame, key_col: str) -> DataFrame:
@@ -321,10 +323,11 @@ def fp_report(probed: DataFrame, key_col: str) -> DataFrame:
     (bloomfilters_tester.py:94-112, TesterResultsWritable.java:18-20).
     """
     return (
-        probed.groupBy(F.col(key_col).cast("string").alias("key"))
+        probed.selectExpr(f"CAST({_q(key_col)} AS STRING) AS key", "bloom_hit")
+        .groupBy("key")
         .agg(
-            F.sum("bloom_hit").cast("long").alias("false_positives"),
-            F.count(F.lit(1)).alias("total_tests"),
+            F.expr("CAST(sum(bloom_hit) AS BIGINT) AS false_positives"),
+            F.expr("count(1) AS total_tests"),
         )
-        .withColumn("fp_rate", F.col("false_positives") / F.col("total_tests"))
+        .selectExpr("*", "false_positives / total_tests AS fp_rate")
     )

@@ -5,7 +5,7 @@ the Python jobs use mmh3 with floor-mod (bloomfilters_util.py:60-79)
 and the Hadoop jobs use `Hash.getInstance(Hash.MURMUR_HASH)` — i.e.
 Hadoop's 32-bit MurmurHash2 — with `Math.abs(hash % m)` positions
 (BloomFilterMapper.java:43,100-104, seeds 0..k-1). The engine's
-canonical family is Spark murmur3 (see core.hash_indexes_col); this
+canonical family is Spark murmur3 (see core._FLAVORS); this
 module closes the remaining parity gap by vendoring the PUBLIC
 MurmurHash2 algorithm (Austin Appleby's MurmurHash2, as adopted by
 Hadoop's `org.apache.hadoop.util.hash.MurmurHash`) including Hadoop's
@@ -14,7 +14,9 @@ can be probed bit-identically.
 
 This is a compatibility path, NOT the perf path: hashing runs in a
 pandas UDF (Arrow batches, per-row bytes work) instead of
-whole-stage codegen. Select it with ``flavor="hadoop-murmur2"`` on
+whole-stage codegen. The UDF returns the k raw signed hashes; the
+build's fold reduces them with ``abs_rem`` and the probe with the same
+arithmetic in SQL. Select it with ``flavor="hadoop-murmur2"`` on
 build/probe.
 
 Java quirks reproduced exactly:
@@ -24,9 +26,9 @@ Java quirks reproduced exactly:
   division), equal to `abs(h_signed) % m` for m > 0;
 - the `h == Integer.MIN_VALUE` corner (Java `Math.abs` returns it
   negative, and the reference would throw) cannot be reproduced
-  without also crashing, so it is normalized to `abs` — noted here
-  because it is the one input where this port and the reference
-  diverge (the reference errors out).
+  without also crashing; here the reduction runs in 64-bit, where
+  `abs` is exact — noted because it is the one input where this port
+  and the reference diverge (the reference errors out).
 """
 
 from __future__ import annotations
@@ -76,29 +78,25 @@ def _sign_extend(b: int) -> int:
     return b - 256 if b >= 128 else b
 
 
-def _abs_rem(h_unsigned: int, m: int) -> int:
-    """Java `Math.abs(h % m)` for signed 32-bit h: abs(h_signed) % m."""
-    signed = h_unsigned - (1 << 32) if h_unsigned >= (1 << 31) else h_unsigned
-    return abs(signed) % m
-
-
-def hadoop_hash_indexes(value: str, m: int, k: int) -> list[int]:
-    """The reference mapper's loop: seeds 0..k-1, abs-rem positions."""
+def hadoop_hashes(value: str, k: int) -> np.ndarray:
+    """The reference mapper's k hashes of `value` (seeds 0..k-1), as
+    Java's signed 32-bit ints."""
     data = value.encode("utf-8")
-    return [_abs_rem(murmur2_32(data, seed), int(m)) for seed in range(k)]
+    return np.array([murmur2_32(data, s) for s in range(k)], dtype=np.uint32).view(np.int32)
 
 
-def hadoop_hash_indexes_udf(k: int):
-    """(value string, m long) → array<long> pandas UDF computing the
-    Hadoop-flavor positions. Arrow-batched; bytes work per row is the
-    inherent cost of bit parity with a JVM-library hash."""
+def abs_rem(h: np.ndarray, m: np.ndarray) -> np.ndarray:
+    """Java `Math.abs(h % m)` on int64 arrays: positions in [0, m)."""
+    return np.abs(np.fmod(h, m))
 
-    @F.pandas_udf("array<long>")
-    def indexes(values: pd.Series, ms: pd.Series) -> pd.Series:
-        out = [
-            np.asarray(hadoop_hash_indexes(v, m, k), dtype=np.int64)
-            for v, m in zip(values, ms)
-        ]
-        return pd.Series(out)
 
-    return indexes
+def hadoop_hashes_udf(k: int):
+    """(value string) → array<int> pandas UDF of `hadoop_hashes`.
+    Arrow-batched; bytes work per row is the inherent cost of bit
+    parity with a JVM-library hash."""
+
+    @F.pandas_udf("array<int>")
+    def hashes(values: pd.Series) -> pd.Series:
+        return pd.Series([hadoop_hashes(v, k) for v in values])
+
+    return hashes

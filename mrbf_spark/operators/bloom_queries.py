@@ -144,7 +144,8 @@ def bloom_semijoin_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters = build_bloom_filters(
         urgent.withColumn("__g", F.lit("urgent")), "__g", "o_orderkey", P
     )
-    # Stage 1: bloom prune — codegen'd probe, no shuffle of lineitem.
+    # Stage 1: bloom prune — the broadcast join and the k unrolled bit
+    # tests run in one codegen stage; no shuffle of lineitem.
     # broadcast=True (not "auto"): per-key filters are small by this
     # operator's definition, and the auto size-check costs an extra
     # driver action per query.

@@ -191,30 +191,21 @@ def test_fold_emits_bounded_rows_on_thin_slices(spark, orders):
     import numpy as np
     import pyarrow as pa
 
-    from mrbf_spark.bloom.core import _fold_words, hash_indexes_col, num_bits, num_hashes
+    from mrbf_spark.bloom.core import _fold_words, _hashed, num_bits, num_hashes
 
     p = 0.0001
     k = num_hashes(p)
     counts = orders.groupBy("o_orderpriority").count().collect()
-    nwords = np.array([(num_bits(r["count"], p) + 63) >> 6 for r in counts], dtype=np.int64)
-    sizes = spark.createDataFrame(
-        [(kid, r["o_orderpriority"], num_bits(r["count"], p)) for kid, r in enumerate(counts)],
-        "__kid int, o_orderpriority string, m bigint",
-    )
-    hashed = (
-        orders.join(F.broadcast(sizes), "o_orderpriority")
-        .select(
-            "__kid",
-            hash_indexes_col(F.col("o_orderkey").cast("string"), F.col("m"), k).alias("__indexes"),
-        )
-        .repartition(256)
-        .cache()
-    )
+    keys = [r["o_orderpriority"] for r in counts]
+    m = np.array([num_bits(r["count"], p) for r in counts], dtype=np.int64)
+    nwords = (m + 63) >> 6
+    keyed = orders.selectExpr("o_orderpriority AS __key", "CAST(o_orderkey AS STRING) AS __value")
+    hashed = _hashed(keyed, k, "spark-murmur3", "__key").repartition(256).cache()
     rows_in = {
-        (r["pid"], r["__kid"]): r["count"]
-        for r in hashed.groupBy(F.spark_partition_id().alias("pid"), "__kid").count().collect()
+        (r["pid"], keys.index(r["__key"])): r["count"]
+        for r in hashed.groupBy(F.spark_partition_id().alias("pid"), "__key").count().collect()
     }
-    fold = _fold_words(nwords)
+    fold = _fold_words(keys, m, np.mod)
 
     def tagged(batches):
         from pyspark import TaskContext
@@ -242,9 +233,10 @@ def test_fold_emits_bounded_rows_on_thin_slices(spark, orders):
 
 @pytest.mark.parametrize("slack", [0, 1 << 20])
 def test_fold_kernel_matches_scatter_reference(monkeypatch, slack):
-    """The Arrow fold, run directly on record batches (one of them
-    empty), equals a plain per-key bit scatter — with and without
-    re-reducing the pending words after every batch."""
+    """The Arrow fold, run directly on (__key, __h) record batches (one
+    of them empty), equals a plain per-key bit scatter of each flavor's
+    positions, computed in Python from the raw hashes — with and
+    without re-reducing the pending words after every batch."""
     import numpy as np
     import pyarrow as pa
 
@@ -252,46 +244,79 @@ def test_fold_kernel_matches_scatter_reference(monkeypatch, slack):
 
     monkeypatch.setattr(core, "_COMPACT_SLACK", slack)
     rng = np.random.default_rng(7)
+    keys = ["a", "b", "c"]
     m = np.array([130, 7000, 64], dtype=np.int64)
     nwords = (m + 63) >> 6
     k = 4
-    batches, expect = [], [np.zeros(w, dtype=np.int64) for w in nwords]
+    batches, rows = [], []
     for n in (50, 0, 300, 1):
-        kid = rng.integers(0, len(m), n).astype(np.int32)
-        idx = [rng.integers(0, m[c], k) for c in kid]
-        for c, ix in zip(kid, idx):
-            np.bitwise_or.at(expect[c], ix >> 6, np.left_shift(np.int64(1), ix & 63))
+        kid = rng.integers(0, len(keys), n)
+        h = rng.integers(-(2**31), 2**31, (n, k))
+        rows += zip(kid, h.tolist())
         batches.append(
             pa.RecordBatch.from_arrays(
-                [pa.array(kid, pa.int32()), pa.array([list(ix) for ix in idx], pa.list_(pa.int64()))],
-                names=["__kid", "__indexes"],
+                [pa.array([keys[c] for c in kid], pa.string()), pa.array(h.tolist(), pa.list_(pa.int32()))],
+                names=["__key", "__h"],
             )
         )
-    got = [np.zeros(w, dtype=np.int64) for w in nwords]
-    for b in core._fold_words(nwords)(iter(batches)):
-        for c, w, word in zip(*(b.column(i).to_numpy() for i in range(3))):
-            assert word != 0 and got[c][w] == 0  # one row per distinct word
-            got[c][w] = word
-    for g, e in zip(got, expect):
-        assert np.array_equal(g, e)
+    # Spark's pmod is Python's floor-mod; Java's Math.abs(h % m) is abs(h) % m
+    positions = {"spark-murmur3": lambda h, m: h % m, "hadoop-murmur2": lambda h, m: abs(h) % m}
+    for flavor, position in positions.items():
+        expect = [np.zeros(w, dtype=np.int64) for w in nwords]
+        for c, hs in rows:
+            for i in (position(x, int(m[c])) for x in hs):
+                expect[c][i >> 6] |= np.left_shift(np.int64(1), i & 63)
+        got = [np.zeros(w, dtype=np.int64) for w in nwords]
+        reduce, _ = core._FLAVORS[flavor]
+        for b in core._fold_words(keys, m, reduce)(iter(batches)):
+            for c, w, word in zip(*(b.column(i).to_numpy() for i in range(3))):
+                assert word != 0 and got[c][w] == 0  # one row per distinct word
+                got[c][w] = word
+        for g, e in zip(got, expect):
+            assert np.array_equal(g, e), flavor
 
 
-def test_fold_kernel_rejects_unknown_key():
-    """A row whose key the count pass did not see reaches the fold
-    with a null __kid (the build's left join on the sizes table). The
-    fold raises instead of dropping it: a dropped row is a false
-    negative."""
+@pytest.mark.parametrize("flavor", ["spark-murmur3", "hadoop-murmur2"])
+def test_fold_kernel_rejects_unknown_key(flavor):
+    """A row whose key the count pass did not see (a non-deterministic
+    input) reaches the fold with a key its closure does not hold. The
+    fold raises instead of dropping it, before either flavor's
+    reduction runs: a dropped row is a false negative."""
     import numpy as np
     import pyarrow as pa
 
-    from mrbf_spark.bloom.core import _fold_words
+    import mrbf_spark.bloom.core as core
 
     batch = pa.RecordBatch.from_arrays(
-        [pa.array([0, None], pa.int32()), pa.array([[1, 2], [3, 4]], pa.list_(pa.int64()))],
-        names=["__kid", "__indexes"],
+        [pa.array(["a", "zz"]), pa.array([[1, 2], [3, -4]], pa.list_(pa.int32()))],
+        names=["__key", "__h"],
     )
+    reduce, _ = core._FLAVORS[flavor]
     with pytest.raises(ValueError, match="deterministic input"):
-        list(_fold_words(np.array([1], dtype=np.int64))(iter([batch])))
+        list(core._fold_words(["a"], np.array([64], dtype=np.int64), reduce)(iter([batch])))
+
+
+@pytest.mark.parametrize("flavor", ["spark-murmur3", "hadoop-murmur2"])
+def test_quoted_column_names_match_plain_names(spark, orders, flavor):
+    """Key and value columns whose names need quoting in SQL (a space,
+    a dot, a backtick) build, probe and report exactly as the same
+    columns under plain names."""
+    train = orders.where("o_orderkey % 3 = 0").select("o_orderpriority", "o_orderkey")
+    probe = orders.select("o_orderpriority", "o_orderkey")
+    results = []
+    for key, value in (("o_orderpriority", "o_orderkey"), ("o priority", "o.k`ey")):
+        filters = build_bloom_filters(train.toDF(key, value), key, value, 0.05, flavor=flavor)
+        probed = probe_bloom_filters(probe.toDF(key, value), key, value, filters, flavor=flavor)
+        assert probed.columns == [key, value, "bloom_hit"]
+        results.append(
+            (
+                _filter_digest(filters),
+                sorted(tuple(r) for r in probed.collect()),
+                sorted(tuple(r) for r in fp_report(probed, key).collect()),
+            )
+        )
+    assert results[0] == results[1]
+    assert {r[2] for r in results[0][1]} == {0, 1}
 
 
 def test_key_cardinality_guard(spark, orders, monkeypatch):

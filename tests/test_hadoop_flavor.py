@@ -7,14 +7,12 @@ from __future__ import annotations
 
 import struct
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from mrbf_spark.bloom.core import build_bloom_filters, probe_bloom_filters
-from mrbf_spark.bloom.hadoop_flavor import (
-    hadoop_hash_indexes,
-    murmur2_32,
-)
+from mrbf_spark.bloom.hadoop_flavor import abs_rem, hadoop_hashes, murmur2_32
 from mrbf_spark.bloom.sizing import num_hashes
 from mrbf_spark.tables import load_table
 
@@ -57,6 +55,12 @@ def _murmur2_reference(data: bytes, seed: int) -> int:
     return h & 0xFFFFFFFF
 
 
+def _positions(value: str, m: int, k: int) -> list[int]:
+    """The reference mapper's positions: the fold's reduction of the
+    UDF's raw hashes."""
+    return abs_rem(hadoop_hashes(value, k).astype(np.int64), np.int64(m)).tolist()
+
+
 @pytest.mark.parametrize("seed", [0, 1, 2, 6, 41])
 @pytest.mark.parametrize(
     "s",
@@ -87,7 +91,7 @@ def test_murmur2_golden_pins():
     assert murmur2_32(b"abcd", 0) == 646393889
     assert murmur2_32(b"tt0000001", 3) == 3931268960
     assert murmur2_32("éàü€".encode(), 1) == 1284497901
-    assert hadoop_hash_indexes("tt0000001", 1000003, 7) == [
+    assert _positions("tt0000001", 1000003, 7) == [
         535963, 913918, 628472, 697247, 992960, 959936, 719286,
     ]
 
@@ -95,9 +99,14 @@ def test_murmur2_golden_pins():
 def test_hadoop_indexes_are_abs_rem_in_range():
     m = 9_585_059
     for v in ("tt0000001", "x", "éàü€"):
-        idx = hadoop_hash_indexes(v, m, 7)
+        idx = _positions(v, m, 7)
         assert len(idx) == 7
         assert all(0 <= i < m for i in idx)
+    # the vectorized reduction equals Java's abs-rem, abs(h) % m, on
+    # signed 32-bit hashes, the Integer.MIN_VALUE corner included
+    h = np.array([0, 1, -1, 7, -7, m, -m, 2**31 - 1, -(2**31)], dtype=np.int64)
+    for mm in (1, 3, 64, m):
+        assert abs_rem(h, np.int64(mm)).tolist() == [abs(int(x)) % mm for x in h]
 
 
 def test_hadoop_flavor_build_probe_no_false_negatives(spark):

@@ -5,6 +5,8 @@ stage in the probe path fails here long before a benchmark notices."""
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -61,8 +63,10 @@ def test_q1_uses_partial_aggregation(spark):
 
 
 def test_bloom_probe_path_is_jvm_only_broadcast(spark):
-    """The probe side must be: scan → hash exprs → broadcast join →
-    filter probe. No Python stage, no shuffle of the probe table."""
+    """The probe side must be: scan → broadcast join → one projection
+    of k unrolled bit tests. No Python stage, no shuffle of the probe
+    table, no lambda (higher-order functions fall back from codegen):
+    bloom_hit is computed inside a whole-stage-codegen stage."""
     orders = load_table(spark, SF_SMOKE, "orders")
     filters = build_bloom_filters(orders, "o_orderpriority", "o_orderkey", 0.05)
     probed = probe_bloom_filters(
@@ -73,12 +77,18 @@ def test_bloom_probe_path_is_jvm_only_broadcast(spark):
     # the filter table is a local table, so the whole plan is JVM-only
     assert "Python" not in plan
     assert "SortMergeJoin" not in plan
+    assert "LambdaFunction" not in plan and "forall" not in plan
+    # the adaptive plan shows codegen stages once it has run
+    probed.collect()
+    final = physical_plan(probed).split("== Initial Plan ==")[0]
+    hit = [l for l in final.splitlines() if " AS bloom_hit#" in l]
+    assert hit and all(re.match(r"^[\s:+-]*\*\(\d+\) Project ", l) for l in hit), hit
 
 
 def test_bloom_build_has_one_python_stage_and_no_round_robin(spark, monkeypatch):
     """The build collects one mapInArrow fold per input partition
     feeding a JVM bit_or merge: exactly one Python stage, no pandas
-    stage, and no round-robin repartition of the input rows. What it
+    stage, no join and no round-robin repartition of the input rows. What it
     returns is a bare local table: no Python, no Exchange."""
     orders = load_table(spark, SF_SMOKE, "orders")
     collected = []
@@ -98,6 +108,8 @@ def test_bloom_build_has_one_python_stage_and_no_round_robin(spark, monkeypatch)
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "RoundRobinPartitioning" not in plan
     assert "partial_bit_or" in plan
+    # the fold looks keys up in its closure: no join feeds it
+    assert "BroadcastHashJoin" not in plan and "BroadcastExchange" not in plan
     out = physical_plan(filters)
     assert out.startswith("LocalTableScan") and len(out.strip().splitlines()) == 1
     assert "Python" not in out and "Exchange" not in out

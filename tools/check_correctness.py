@@ -7,6 +7,9 @@ lexicographically). Exact equality on everything including doubles —
 if this passes, a value-hash comparison passes too.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
+
+Exits non-zero on any failure, and before running anything when a
+named query is not in the catalog.
 """
 
 from __future__ import annotations
@@ -92,6 +95,12 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
 def main() -> int:
     from mrbf_spark import catalog
 
+    qs, oracles = catalog.queries(), catalog.oracle_sql()
+    unknown = sorted(ONLY - set(qs))
+    if unknown:
+        # a typo'd or retired name would otherwise run nothing and pass
+        print(f"unknown entries (not in the catalog): {' '.join(unknown)}")
+        return 2
     if VANILLA:
         from pyspark.sql import SparkSession
 
@@ -107,7 +116,6 @@ def main() -> int:
         # escape hatch for one-off full-pair-dump comparisons.
         spark = get_spark("check-correctness")
     con = duck_con(SF_DIR)
-    qs, oracles = catalog.queries(), catalog.oracle_sql()
     if SCALE_ORACLES:
         oracles.update(catalog.scale_oracle_sql())
     n_fail = 0
