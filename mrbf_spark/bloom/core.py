@@ -280,7 +280,10 @@ def probe_bloom_filters(
     present, 0 = definitely absent): one projection ANDs the k bit
     tests, unrolled, so with spark-murmur3 hashing, join and test all
     run in whole-stage codegen. Pass `k` (from sizing.num_hashes) to
-    skip the driver-side lookup action.
+    skip the driver-side lookup action. Drop `bloom_hit` after
+    filtering on it: a kept column makes Catalyst evaluate the k bit
+    tests twice, once in the pushed-down join condition and once in
+    the projection.
 
     broadcast: True forces the broadcast hint, False a plain join,
     "auto" (default) broadcasts only while the total bitset size is

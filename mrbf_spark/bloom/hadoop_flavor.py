@@ -23,12 +23,11 @@ Java quirks reproduced exactly:
 - tail bytes are SIGN-EXTENDED before the xor (`(int) data[len-1]`),
   which matters for any byte ≥ 0x80;
 - positions are `abs(h % m)` on the SIGNED 32-bit hash (truncated
-  division), equal to `abs(h_signed) % m` for m > 0;
-- the `h == Integer.MIN_VALUE` corner (Java `Math.abs` returns it
-  negative, and the reference would throw) cannot be reproduced
-  without also crashing; here the reduction runs in 64-bit, where
-  `abs` is exact — noted because it is the one input where this port
-  and the reference diverge (the reference errors out).
+  division), equal to `abs(h_signed) % m` for m > 0. The remainder is
+  taken before the `abs`, and |h % m| < m ≤ 2^31 − 1, so Java's
+  `Math.abs` never sees `Integer.MIN_VALUE`: at h = MIN_VALUE the
+  reference's position is in range too, and this port (reducing in
+  64-bit) agrees with it on every input.
 """
 
 from __future__ import annotations

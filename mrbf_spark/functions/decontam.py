@@ -206,7 +206,7 @@ def semantic_decontaminate(
     scan (two bounded int-triple shuffles, text never shuffles) and
     then crosses the broadcast eval side map-side — no corpus shuffle.
     The per-doc max is a partial-aggregable groupBy on doc_id."""
-    from .similarity import _decimal_dot
+    from .similarity import _arrow_pair_cosine, _decimal_dot
     from .text_embedding import text_hash_embeddings
 
     c = text_hash_embeddings(corpus).select(
@@ -221,9 +221,9 @@ def semantic_decontaminate(
     )
     # |corpus|×|evals| fixed-point dots through the vectorized Arrow
     # kernel (r10 — bit-identical to the interpreted HOF fold, see
-    # similarity._pair_dot_batches)...
+    # similarity._arrow_pair_cosine)...
     pairs = scoped_cache(
-        _arrow_cross_cosine(
+        _arrow_pair_cosine(
             c.crossJoin(F.broadcast(e)),
             "doc_id", "c_emb", "c_nrm", "eval_id", "e_emb", "e_nrm",
         )
@@ -243,34 +243,6 @@ def semantic_decontaminate(
         "closest_eval_id",
         "max_eval_cosine",
         (F.col("max_eval_cosine") >= tau).cast("int").alias("flagged"),
-    )
-
-
-def _arrow_cross_cosine(
-    crossed: DataFrame,
-    a_id: str, a_emb: str, a_nrm: str,
-    b_id: str, b_emb: str, b_nrm: str,
-) -> DataFrame:
-    """(a_id, b_id, cosine) over an already-joined pair frame, the
-    per-pair fixed-point dot evaluated by the shared Arrow kernel
-    (similarity._pair_dot_batches — bit-identical integer sums)."""
-    from .similarity import FIXED_SCALE, _PAIR_DOT_SCHEMA, _pair_dot_batches
-
-    dots = crossed.select(
-        F.col(a_id).alias("vec_a"),
-        F.col(b_id).alias("vec_b"),
-        F.col(a_emb).alias("emb_a"),
-        F.col(b_emb).alias("emb_b"),
-        F.col(a_nrm).alias("nrm_a"),
-        F.col(b_nrm).alias("nrm_b"),
-    ).mapInArrow(_pair_dot_batches, _PAIR_DOT_SCHEMA)
-    cosine = (F.col("dot").cast("double") / F.lit(float(FIXED_SCALE))) / (
-        F.sqrt(F.col("nrm_a")) * F.sqrt(F.col("nrm_b"))
-    )
-    return dots.select(
-        F.col("vec_a").alias(a_id),
-        F.col("vec_b").alias(b_id),
-        cosine.alias("cosine"),
     )
 
 
@@ -319,6 +291,7 @@ def semantic_decontaminate_pruned(
 
     from .similarity import (
         IVF_SAMPLE,
+        _arrow_pair_cosine,
         _decimal_dot,
         _kmeans_centroids,
         ivf_cell_col,
@@ -366,10 +339,10 @@ def semantic_decontaminate_pruned(
         F.explode(ivf_probes_col(F.col("c_emb"), F.col("mat"), n_probe)).alias("cell"),
     )
     # Arrow kernel for the candidate dots (r10, bit-identical — see
-    # _arrow_cross_cosine), and the cache MATERIALIZED before
+    # _arrow_pair_cosine), and the cache MATERIALIZED before
     # _argmax_report's two scans race it.
     cands = scoped_cache(
-        _arrow_cross_cosine(
+        _arrow_pair_cosine(
             c_probed.join(F.broadcast(e_cells), "cell"),
             "doc_id", "c_emb", "c_nrm", "eval_id", "e_emb", "e_nrm",
         )
@@ -380,7 +353,7 @@ def semantic_decontaminate_pruned(
     # totality fallback: the (normally empty) residue of corpus docs
     # whose probed cells were all eval-empty meets the whole eval side
     missing = c.join(report.select("doc_id"), "doc_id", "left_anti")
-    fb_pairs = _arrow_cross_cosine(
+    fb_pairs = _arrow_pair_cosine(
         missing.crossJoin(F.broadcast(e)),
         "doc_id", "c_emb", "c_nrm", "eval_id", "e_emb", "e_nrm",
     )

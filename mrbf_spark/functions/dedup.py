@@ -6,9 +6,9 @@ is a bounded equi-join (never an O(n²) cross join) at 100 TB.
 Every registered dedup entry is hash-matched against an independent
 DuckDB oracle:
 - `dedup_exact` / `dedup_clusters`: deterministic fingerprints/edges.
-- `dedup_minhash_lsh`: LSH prune ∪ prefix-filter complete blocking,
-  then exact-Jaccard verify — output is the EXACT Jaccard-≥τ pair
-  set, independent of the hash family (the oracle computes the exact
+- `dedup_minhash_lsh`: complete inverted-index co-count blocking
+  (exact_jaccard_pairs) — output is the EXACT Jaccard-≥τ pair set,
+  independent of the hash family (the oracle computes the exact
   all-pairs set, feasible at oracle scale).
 - `dedup_simhash`: the signature's per-token bits come from md5 (a
   portable hash both engines share), so the oracle replays the whole
@@ -317,97 +317,6 @@ def _banded(sigs: DataFrame, bands: int = LSH_BANDS) -> DataFrame:
     )
 
 
-def prefix_filter_candidates(shingled: DataFrame, threshold: float) -> DataFrame:
-    """Complete candidate blocking via prefix filtering (AllPairs /
-    PPJoin, Bayardo et al. WWW'07, Xiao et al. WWW'08): order each
-    doc's shingles by a global total order (document frequency asc,
-    then shingle — rare-first minimizes pair fan-out), index only the
-    first |x| − ⌈τ·|x|⌉ + 1 of them, and pair docs sharing an indexed
-    shingle. Any pair with exact Jaccard ≥ τ must share ≥ ⌈τ·|x|⌉
-    elements, so their prefixes intersect — recall is exactly 1.0 by
-    construction, for any data, with no hash family involved.
-
-    ⌈τ·|x|⌉ is computed in INTEGER arithmetic (τ as a fraction p/q):
-    float τ·n can land an ulp above an integer (0.2×15 →
-    3.0000000000000004), ceil would overshoot, and the prefix would be
-    one element too short — a silent recall hole exactly at the
-    threshold boundary.
-
-    `shingled` is (doc_id, shingles array<…>). The self-join is a
-    bounded equi-join on shingle; df=1 shingles are dropped from the
-    index (they cannot pair). Fan-out per shingle is its prefix-df
-    choose 2 — the rare-first order keeps hot shingles out of most
-    prefixes. At very low τ prefixes approach the full set; the LSH
-    path (minhash_candidates with guaranteed=False) is the 100 TB
-    alternative when probabilistic recall is acceptable.
-    """
-    frac = Fraction(threshold).limit_denominator(10**6)
-    p, q = frac.numerator, frac.denominator
-    inv = shingled.select("doc_id", F.explode("shingles").alias("s"))
-    freq = inv.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    ranked = (
-        inv.join(freq, "s")
-        .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list(F.struct("df", "s"))).alias("ordered"))
-    )
-    n = F.size("ordered")
-    # plen = n − ceil(n·p/q) + 1, ceil via (n·p + q − 1) div q
-    plen = n - F.floor((n * F.lit(p) + F.lit(q - 1)) / F.lit(q)).cast("int") + 1
-    prefix = (
-        ranked.select(
-            "doc_id",
-            n.alias("n"),
-            F.posexplode(F.slice("ordered", F.lit(1), plen)).alias("pos", "e"),
-        )
-        .filter(F.col("e.df") >= 2)
-        .select("doc_id", "n", "pos", F.col("e.s").alias("s"))
-    )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    # Length filter inside the join: J ≥ p/q needs q·min(n) ≥ p·max(n).
-    raw = a.join(
-        b,
-        (F.col("a.s") == F.col("b.s"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & (
-            F.lit(q) * F.least(F.col("a.n"), F.col("b.n"))
-            >= F.lit(p) * F.greatest(F.col("a.n"), F.col("b.n"))
-        ),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.col("a.n").alias("na"),
-        F.col("b.n").alias("nb"),
-        F.col("a.pos").alias("pa"),
-        F.col("b.pos").alias("pb"),
-    )
-    # Positional (suffix-bound) filter, PPJoin Lemma 2 shape: with c =
-    # number of shingles shared by BOTH prefixes and w their max in the
-    # global order (position pa in x, pb in y — positions are monotone
-    # in the order, so both maxes are w's), every common shingle ≤ w is
-    # prefix-shared (counted by c) and every common shingle > w lies in
-    # both suffixes-after-w, so
-    #   |x∩y| ≤ c + min(na−1−pa, nb−1−pb).
-    # J ≥ p/q needs |x∩y| ≥ α = ⌈p·(na+nb)/(p+q)⌉ (since i ≥ τ·u and
-    # u = na+nb−i). The groupBy replaces the r3 dropDuplicates — same
-    # shuffle — and the bound prunes the expensive array verify, not
-    # recall. Frequency-ascending order makes it bite: random pairs
-    # share only COMMON shingles, which sit late in both prefixes.
-    grouped = raw.groupBy("doc_a", "doc_b").agg(
-        F.count(F.lit(1)).alias("c"),
-        F.max("pa").alias("pa"),
-        F.max("pb").alias("pb"),
-        F.max("na").alias("na"),
-        F.max("nb").alias("nb"),
-    )
-    alpha = F.floor(
-        (F.lit(p) * (F.col("na") + F.col("nb")) + F.lit(p + q - 1)) / F.lit(p + q)
-    ).cast("int")
-    ubound = F.col("c") + F.least(
-        F.col("na") - 1 - F.col("pa"), F.col("nb") - 1 - F.col("pb")
-    )
-    return grouped.filter(ubound >= alpha).select("doc_a", "doc_b")
-
-
 def _hash_injectivity_certified(docs: DataFrame, n: int = 3) -> bool:
     """Certify that the collapsed 64-bit shingle hashing is injective
     ON THIS CORPUS, so Jaccard over hashed-long shingle sets is
@@ -472,28 +381,28 @@ def exact_jaccard_pairs(
     threshold. Recall is 1.0 trivially (any pair with J > 0 shares a
     shingle); precision is exact (the count is the true intersection).
 
-    Strategy selection vs the module's other two blockers, by τ:
-      * τ ≲ 0.4: THIS. Prefix filtering (prefix_filter_candidates)
-        indexes n−⌈τ·n⌉+1 ≈ (1−τ)·n shingles per doc — at τ=0.2 that
-        is 80% of the full index, so its join costs ~0.64× this one
-        and then still needs a per-pair verify over the arrays
-        (measured: prefix+array-verify 8.6 s vs 3.0 s for this at
-        sf0.1). The co-count join's verify is free.
-      * τ ≳ 0.5: prefix filtering was the textbook pick (prefix
+    Strategy selection, by τ:
+      * τ ≲ 0.4: THIS. Prefix filtering (AllPairs/PPJoin blocking,
+        since deleted) indexes n−⌈τ·n⌉+1 ≈ (1−τ)·n shingles per doc —
+        at τ=0.2 that is 80% of the full index, so its join costs
+        ~0.64× this one and then still needs a per-pair verify over
+        the arrays (measured: prefix+array-verify 8.6 s vs 3.0 s for
+        this at sf0.1). The co-count join's verify is free.
+      * τ ≳ 0.5: prefix filtering is the textbook pick (prefix
         shrinks to (1−τ)·n), but MEASURED at τ=0.5/sf0.1 the co-count
         join still wins 7× (1.4 s vs 10.5 s): the prefix join emits
         120k candidates that must then verify against full shingle
         arrays, while the co-count's verify is free. Prefix filtering
-        stays the right tool only when the candidate set (not the
-        final pair set) must be small — e.g. feeding a bounded-memory
+        is the right tool only when the candidate set (not the final
+        pair set) must be small — e.g. feeding a bounded-memory
         verifier.
       * 100 TB with probabilistic recall acceptable: MinHash+LSH
         (minhash_candidates(guaranteed=False)) — join volume is bucket
         collisions, independent of Σ df².
     Join cost here is Σ_s C(df(s), 2) over shingle document
     frequencies; the length filter (q·min(n) ≥ p·max(n), integer
-    arithmetic — float τ·n can land an ulp high, see
-    prefix_filter_candidates) prunes inside the join. Hot shingles
+    arithmetic: float τ·n can land an ulp above an integer, 0.2×15 →
+    3.0000000000000004) prunes inside the join. Hot shingles
     (boilerplate) are the skew risk at scale: a text shared verbatim
     by f·N docs makes the join C(f·N, 2)-quadratic — AND the exact
     pair-set OUTPUT itself is quadratic in that group, so no
@@ -828,10 +737,6 @@ def simhash_signatures(docs: DataFrame, bits: int = 64) -> DataFrame:
     was Spark-private, forcing a rows-only check). md5-per-token costs
     more than xxhash64 but the token explode is one corpus scan either
     way; swap the hash expr back for a throughput-critical deployment.
-
-    Shape: explode tokens → md5 per DISTINCT token (vocab table) →
-    broadcast-join the hashes back onto occurrences → 64
-    conditional-sum aggregates → fold signs into quarter words.
 
     Shape: explode tokens → one md5 per token occurrence → 64
     conditional-sum aggregates → fold signs into quarter words. The

@@ -13,8 +13,8 @@ as a deterministic set operation over the corpus).
     negative. neg_hi defaults to tau_pos (the bands partition).
 
 Methods:
-  * "exact": anchors broadcast against one corpus scan
-    (cosine_pairs), band filter, per-anchor top-k — the correctness
+  * "exact": anchors broadcast against one corpus scan (the Arrow
+    pair cosine), band filter, per-anchor top-k — the correctness
     baseline, quadratic in |anchors|×|corpus| and right at catalog
     scale (DuckDB-parity-tested in tests/test_mining.py).
   * "ivf": the scale path — anchors probe their n_probe nearest
@@ -51,6 +51,7 @@ from .similarity import (
     MINE_K_NEG,
     MINE_NEG_LO,
     NEARDUP_TAU,
+    _arrow_pair_cosine,
     _decimal_dot,
     _kmeans_centroids,
     ivf_cell_col,
@@ -158,13 +159,7 @@ def contrastive_triplets(
         )
 
     if method == "exact":
-        from .similarity import cosine_pairs
-
-        # dot="arrow" (r10): the negative scan is |anchors| × corpus
-        # fixed-point dots — the vectorized Arrow kernel computes the
-        # same integer sums ~10× faster than the interpreted HOF fold
-        # (bit-identical; see similarity._pair_dot_batches).
-        scored = cosine_pairs(anchors, emb, dot="arrow")
+        scored = _exact_scored(anchors, emb)
     elif method == "ivf":
         scored = _ivf_scored(anchors, emb, n_cells, n_probe)
     else:
@@ -191,6 +186,28 @@ def contrastive_triplets(
         "pos_cosine",
         "neg_cosine",
         "neg_rank",
+    )
+
+
+def _exact_scored(anchors: DataFrame, emb: DataFrame) -> DataFrame:
+    """(query_id, vec_id, cosine) for every anchor × corpus pair:
+    anchors broadcast against one corpus scan. The |anchors| × corpus
+    fixed-point dots run in the Arrow kernel, ~10× the interpreted HOF
+    fold with bit-identical cosines (see
+    similarity._arrow_pair_cosine)."""
+    q = anchors.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        _decimal_dot(F.col("embedding"), F.col("embedding")).alias("q_nrm"),
+    )
+    c = emb.select(
+        "vec_id",
+        "embedding",
+        _decimal_dot(F.col("embedding"), F.col("embedding")).alias("c_nrm"),
+    )
+    pairs = c.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("query_id"))
+    return _arrow_pair_cosine(
+        pairs, "query_id", "q_emb", "q_nrm", "vec_id", "embedding", "c_nrm"
     )
 
 

@@ -211,17 +211,6 @@ def image_features(img: np.ndarray) -> np.ndarray:
     )
 
 
-def resize_image(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Nearest-neighbor resize in pure numpy (no image libs in this
-    environment): output pixel (i, j) samples source pixel
-    (floor(i·h/out_h), floor(j·w/out_w)). Deterministic, O(out pixels),
-    works for any (h, w, 3) uint8 array."""
-    h, w = img.shape[:2]
-    rows = np.arange(out_h, dtype=np.int64) * h // out_h
-    cols = np.arange(out_w, dtype=np.int64) * w // out_w
-    return img[rows][:, cols]
-
-
 # ---------------------------------------------------- payload builders
 
 
@@ -320,45 +309,6 @@ def _audio_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataF
                 "feature": [f.tolist() for f in feats],
             }
         )
-
-
-RESIZE_H, RESIZE_W = 8, 8  # thumbnail target (the embed-input shape)
-
-
-def _resize_batches(out_h: int, out_w: int):
-    """mapInPandas body factory: binary image payload → decode →
-    nearest-neighbor resize → re-encode PPM. The standard thumbnail /
-    embed-input normalization step, with the same batch shape as the
-    featureizer (a real pipeline swaps the codec, not the plumbing)."""
-
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_ppm(resize_image(decode_image(p), out_h, out_w))
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "h": pd.Series([out_h] * len(pdf), dtype="int32"),
-                    "w": pd.Series([out_w] * len(pdf), dtype="int32"),
-                }
-            )
-
-    return body
-
-
-def multimodal_resize(
-    spark: SparkSession, sf_dir: str, out_h: int = RESIZE_H, out_w: int = RESIZE_W
-) -> DataFrame:
-    """(doc_id, payload, h, w) with every image resized to a fixed
-    thumbnail — decode → resize → re-encode over Arrow batches, one
-    scan, shuffle-free."""
-    return image_payloads(spark, sf_dir).mapInPandas(
-        _resize_batches(out_h, out_w),
-        schema="doc_id long, payload binary, h int, w int",
-    )
 
 
 FRAME_BYTES = 64

@@ -29,20 +29,28 @@ N_QUERIES = 8  # vec_id < 8 are the query vectors
 FIXED_SCALE = 1_000_000_000  # 1e9: products ≤ ~64 keep sums ≪ 2^53
 
 
-def _decimal_dot(a: Column, b: Column) -> Column:
-    """Fixed-point dot product: Σ trunc(double(a_i)·double(b_i)·1e9)
-    as exact BIGINT, rescaled to double. Spark's double→long cast
-    truncates toward zero, matching DuckDB TRUNC()."""
+def _fixed_dot_long(a: Column, b: Column) -> Column:
+    """Fixed-point dot as the raw BIGINT sum Σ trunc(aᵢ·bᵢ·1e9).
+    Spark's double→long cast truncates toward zero, matching DuckDB
+    TRUNC(). Order-insensitive integer math, so any engine that
+    replays the per-element trunc gets the same sum (and therefore the
+    same sign) bit-for-bit."""
     return F.aggregate(
         F.zip_with(
             a,
             b,
-            lambda x, y: (x.cast("double") * y.cast("double") * F.lit(float(FIXED_SCALE))).cast("long"),
+            lambda x, y: (
+                x.cast("double") * y.cast("double") * F.lit(float(FIXED_SCALE))
+            ).cast("long"),
         ),
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
-        lambda acc: acc.cast("double") / F.lit(float(FIXED_SCALE)),
     )
+
+
+def _decimal_dot(a: Column, b: Column) -> Column:
+    """Fixed-point dot product: _fixed_dot_long rescaled to double."""
+    return _fixed_dot_long(a, b).cast("double") / F.lit(float(FIXED_SCALE))
 
 
 _NORMS_SQL = """
@@ -85,20 +93,17 @@ def _ldot_sql(a: str, b: str) -> str:
     return f"(CAST({_ldot_int_sql(a, b)} AS DOUBLE) / 1000000000.0)"
 
 
-def cosine_pairs(
-    queries: DataFrame, corpus: DataFrame, dot: str = "jvm"
-) -> DataFrame:
+def cosine_pairs(queries: DataFrame, corpus: DataFrame) -> DataFrame:
     """(query_id, vec_id, cosine) for every query × corpus pair.
     Queries are broadcast (the small side by construction); the corpus
     is scanned once — at 100 TB this is one pass, no shuffle of the
     corpus.
 
-    dot="arrow" (r10) evaluates the per-pair fixed-point dot through
-    the vectorized Arrow kernel (_pair_dot_batches — bit-identical
-    integer sums; see neardup_pairs). The default stays "jvm": the
-    headline ann_bruteforce_topk path is 8 queries × corpus and
-    test-pinned JVM-codegen-only; the arrow path is for bulk callers
-    (contrastive mining scans |anchors| × corpus)."""
+    The per-pair dot stays in the JVM: the 8-query ann_bruteforce_topk
+    shape measured faster here than through the Arrow kernel (0.42 vs
+    0.62 s at sf0.01, 0.58 vs 0.63 s at sf0.1, 4 cores). Bulk callers
+    (contrastive mining's |anchors| × corpus scan) build their cross
+    and call _arrow_pair_cosine instead."""
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -110,25 +115,6 @@ def cosine_pairs(
         _decimal_dot(F.col("embedding"), F.col("embedding")).alias("c_nrm"),
     )
     pairs = c.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("query_id"))
-    if dot == "arrow":
-        dots = pairs.select(
-            F.col("query_id").alias("vec_a"),
-            F.col("vec_id").alias("vec_b"),
-            F.col("q_emb").alias("emb_a"),
-            F.col("embedding").alias("emb_b"),
-            F.col("q_nrm").alias("nrm_a"),
-            F.col("c_nrm").alias("nrm_b"),
-        ).mapInArrow(_pair_dot_batches, _PAIR_DOT_SCHEMA)
-        cosine = (
-            F.col("dot").cast("double") / F.lit(float(FIXED_SCALE))
-        ) / (F.sqrt(F.col("nrm_a")) * F.sqrt(F.col("nrm_b")))
-        return dots.select(
-            F.col("vec_a").alias("query_id"),
-            F.col("vec_b").alias("vec_id"),
-            cosine.alias("cosine"),
-        )
-    if dot != "jvm":
-        raise ValueError(f"dot must be jvm|arrow, got {dot!r}")
     cosine = _decimal_dot(F.col("q_emb"), F.col("embedding")) / (
         F.sqrt(F.col("q_nrm")) * F.sqrt(F.col("c_nrm"))
     )
@@ -221,24 +207,6 @@ def _plain_dot(emb: Column, vec: Column) -> Column:
     )
 
 
-def _fixed_dot_long(a: Column, b: Column) -> Column:
-    """Fixed-point dot as the raw BIGINT sum Σ trunc(aᵢ·bᵢ·1e9) — the
-    unrescaled core of _decimal_dot. Order-insensitive integer math,
-    so any engine that replays the per-element trunc gets the same
-    sum (and therefore the same sign) bit-for-bit."""
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (
-                x.cast("double") * y.cast("double") * F.lit(float(FIXED_SCALE))
-            ).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def _pair_dot_batches(it):
     """mapInArrow kernel for the candidate-pair cosine stage: per
     batch, the fixed-point dot Σ trunc(aᵢ·bᵢ·1e9) of emb_a·emb_b as
@@ -287,6 +255,34 @@ _PAIR_DOT_SCHEMA = (
 )
 
 
+def _arrow_pair_cosine(
+    pairs: DataFrame,
+    a_id: str, a_emb: str, a_nrm: str,
+    b_id: str, b_emb: str, b_nrm: str,
+) -> DataFrame:
+    """(a_id, b_id, cosine) over an already-joined pair frame: the
+    per-pair fixed-point dot runs in _pair_dot_batches, then the same
+    /1e9 rescale and norm divide as the JVM _decimal_dot cosine, so
+    the doubles are bit-identical to it. Only the six kernel columns
+    cross the Arrow boundary."""
+    dots = pairs.select(
+        F.col(a_id).alias("vec_a"),
+        F.col(b_id).alias("vec_b"),
+        F.col(a_emb).alias("emb_a"),
+        F.col(b_emb).alias("emb_b"),
+        F.col(a_nrm).alias("nrm_a"),
+        F.col(b_nrm).alias("nrm_b"),
+    ).mapInArrow(_pair_dot_batches, _PAIR_DOT_SCHEMA)
+    cosine = (F.col("dot").cast("double") / F.lit(float(FIXED_SCALE))) / (
+        F.sqrt(F.col("nrm_a")) * F.sqrt(F.col("nrm_b"))
+    )
+    return dots.select(
+        F.col("vec_a").alias(a_id),
+        F.col("vec_b").alias(b_id),
+        cosine.alias("cosine"),
+    )
+
+
 def _np_fixed_dots(e, cent):
     """(n, k) int64 fixed-point dots of n embedding rows against k
     centroid rows — Σ trunc(eᵢ·cᵢ·1e9) per (row, centroid), the numpy
@@ -299,57 +295,6 @@ def _np_fixed_dots(e, cent):
     for j in range(k):
         out[:, j] = ((e * cent[j]) * float(FIXED_SCALE)).astype(np.int64).sum(axis=1)
     return out
-
-
-def _assign_score_batches(cent):
-    """mapInArrow kernel factory for semdedup_scored: per batch of
-    (vec_id, embedding), emit (vec_id, embedding, cell, cent_cosine)
-    where cell = first-max argmax over the fixed-point centroid dots
-    (np.argmax == the JVM array_position(first max) rule) and
-    cent_cosine replays _decimal_dot's exact arithmetic: every dot is
-    the same per-element trunc + int64 sum, the /1e9 rescale, sqrt and
-    the single divide are the same correctly-rounded IEEE ops in the
-    same order — bit-identical to the JVM projection it replaces
-    (pinned in tests/test_extensions.py::test_assign_score_arrow_
-    matches_jvm). Why: the assignment is a FULL-CORPUS map pass whose
-    k×dim interpreted HOF fold per row was the remaining per-row cost
-    of the semantic family (guide §4.2)."""
-    import numpy as np
-
-    cent = np.asarray(cent, dtype=np.float64)
-    c_nrm = ((cent * cent) * float(FIXED_SCALE)).astype(np.int64).sum(axis=1)
-    c_sqrt = np.sqrt(c_nrm.astype(np.float64) / float(FIXED_SCALE))
-
-    def fn(it):
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in it:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            e = np.asarray(
-                batch.column("embedding").flatten(), dtype=np.float64
-            ).reshape(n, -1)
-            dots = _np_fixed_dots(e, cent)
-            cell = dots.argmax(axis=1)
-            best = dots[np.arange(n), cell]
-            e_nrm = ((e * e) * float(FIXED_SCALE)).astype(np.int64).sum(axis=1)
-            cos = (best.astype(np.float64) / float(FIXED_SCALE)) / (
-                np.sqrt(e_nrm.astype(np.float64) / float(FIXED_SCALE))
-                * c_sqrt[cell]
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("vec_id"),
-                    _double_list(e, pa, np),
-                    pa.array(cell.astype(np.int32), type=pa.int32()),
-                    pa.array(cos, type=pa.float64()),
-                ],
-                names=["vec_id", "embedding", "cell", "cent_cosine"],
-            )
-
-    return fn
 
 
 def _double_list(e, pa, np):
@@ -365,15 +310,11 @@ def _double_list(e, pa, np):
     )
 
 
-_ASSIGN_SCORE_SCHEMA = (
-    "vec_id long, embedding array<double>, cell int, cent_cosine double"
-)
-
-
 def _assign_batches(cent):
     """mapInArrow kernel factory for the Lloyd assignment pass: per
-    batch of (embedding), emit (cell, embedding) — the same first-max
-    fixed-point argmax as _assign_score_batches, without the cosine."""
+    batch of (embedding), emit (cell, embedding) — the first-max
+    fixed-point argmax of kmeans_assign_col (np.argmax == the JVM
+    array_position(first max) rule), bit-equal to it."""
     import numpy as np
 
     cent = np.asarray(cent, dtype=np.float64)
@@ -534,49 +475,15 @@ def ivf_probes_col(emb: Column, mat: Column, n_probe: int = NPROBE) -> Column:
     return F.transform(F.slice(ranked, 1, n_probe), lambda s: s["i"].cast("int"))
 
 
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    sample_rows = emb.orderBy("vec_id").limit(IVF_SAMPLE).select("embedding").collect()
-    cent = _kmeans_centroids(
-        np.array([r["embedding"] for r in sample_rows], dtype=np.float64)
-    )
-    with_mat = with_matrix(emb, spark, cent)
-    bucketed = with_mat.select(
-        "vec_id", "embedding", ivf_cell_col(F.col("embedding"), F.col("mat")).alias("cell")
-    )
-    queries = (
-        with_mat.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.explode(ivf_probes_col(F.col("embedding"), F.col("mat"))).alias("cell"),
-            _decimal_dot(F.col("embedding"), F.col("embedding")).alias("q_nrm"),
-        )
-    )
-    cands = bucketed.join(F.broadcast(queries), "cell").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    cosine = _decimal_dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(F.col("q_nrm")) * F.sqrt(_decimal_dot(F.col("embedding"), F.col("embedding")))
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), "vec_id")
-    return (
-        cands.select("query_id", "vec_id", cosine.alias("cosine"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOPK)
-    )
-
-
 # --- IVF-flat: the deterministic coarse quantizer. Centroids are the
 # first N_CENTROIDS corpus vectors BY vec_id RANK (a standard k-means
 # "Forgy" init used as-is), so the whole index — centroid set, cell
 # assignment (argmax fixed-point dot), probe list, re-rank — is a pure
-# function of the table that an independent engine can replay. The
-# k-means-refined variant above gives better cell balance but its
-# Lloyd iterations have no SQL twin; tests pin that refinement only
-# moves recall, while THIS path is what the driver hash-matches.
+# function of the table that an independent engine can replay. A
+# k-means-refined quantizer (kmeans_fit, which ann_index can build on,
+# or the sample-fit _kmeans_centroids behind the mining and decontam
+# IVF paths) gives better cell balance, but THIS path is what the
+# DuckDB oracle hash-matches.
 def _flat_centroids(emb: DataFrame, k: int = N_CENTROIDS) -> np.ndarray:
     rows = (
         emb.select("vec_id", "embedding")
@@ -590,8 +497,8 @@ def _flat_centroids(emb: DataFrame, k: int = N_CENTROIDS) -> np.ndarray:
 def ann_ivf_flat_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-flat ANN: deterministic data-point centroids (see
     _flat_centroids), fixed-point cell assignment, NPROBE probes,
-    exact decimal re-rank. Same plan shape as ann_ivf_topk — one
-    corpus pass for assignment, broadcast equi-join on cell id."""
+    exact decimal re-rank — one corpus pass for assignment, broadcast
+    equi-join on cell id."""
     emb = load_table(spark, sf_dir, "embeddings")
     with_mat = with_matrix(emb, spark, _flat_centroids(emb))
     fdots = lambda: F.transform(  # noqa: E731 — tiny local expr factory
@@ -716,7 +623,7 @@ def pq_fit_codebooks(
     emb: DataFrame, k: int = K_CODES, iters: int = IVF_ITERS
 ) -> np.ndarray:
     """k-means-refined PQ codebooks (the quality path, like
-    ann_ivf_topk is for IVF-flat): per-subspace Lloyd with a fixed
+    kmeans_fit is for IVF-flat): per-subspace Lloyd with a fixed
     iteration count, ALL M_SUB subspaces updated in ONE corpus pass
     per iteration — assignment is the same fixed-point encode rule as
     pq_topk, the update ships K_CODES×dim fixed-point sums to the
@@ -972,8 +879,7 @@ def _ann_approx_oracle() -> str:
 # structure, probing, and the exact re-rank bit-for-bit. The union
 # runs all three — each branch keeps its own plan (broadcast bucket
 # equi-join / broadcast-LUT codes scan; the corpus never shuffles in
-# any of them). The k-means-refined IVF (ann_ivf_topk) remains the
-# quality path, pinned by its recall test.
+# any of them).
 @register("ann_approx_topk", _ann_approx_oracle())
 def ann_approx_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh = ann_lsh_topk(spark, sf_dir).select(
@@ -1070,7 +976,6 @@ def neardup_pairs(
     tau: float = NEARDUP_TAU,
     exact_cap: int = NEARDUP_EXACT_CAP,
     salt_b: int = NEARDUP_SALT_B,
-    pair_dot: str = "arrow",
 ) -> DataFrame:
     """Pair-generation core of `embedding_neardup`, parameterized so
     tests can drive the cap/salt boundaries on synthetic groups.
@@ -1088,34 +993,14 @@ def neardup_pairs(
     with single-bit-flip multi-probe on the lower-id side; probe
     values are distinct, so a pair matches at most one probe row.
 
-    pair_dot selects the per-pair fixed-point dot implementation:
-    "arrow" (default, r10) evaluates it as one vectorized numpy pass
-    per Arrow batch (_pair_dot_batches — bit-identical integer sums,
+    The per-pair dot runs in the Arrow kernel (_arrow_pair_cosine),
     ~10× the interpreted HOF fold that dominated the semantic-dedup
-    family); "jvm" keeps the pure zip_with/aggregate expression (the
-    bit-equality reference, and the escape hatch for a deployment
-    that must stay Python-worker-free)."""
+    family, with bit-identical cosines."""
     a, b = _neardup_sides(emb, exact_cap, salt_b)
     pairs = a.join(b, ["label", "bucket"]).filter(F.col("vec_a") < F.col("vec_b"))
-    if pair_dot == "arrow":
-        dots = pairs.select(
-            "vec_a", "vec_b", "emb_a", "emb_b", "nrm_a", "nrm_b"
-        ).mapInArrow(_pair_dot_batches, _PAIR_DOT_SCHEMA)
-        cosine = (
-            F.col("dot").cast("double") / F.lit(float(FIXED_SCALE))
-        ) / (F.sqrt(F.col("nrm_a")) * F.sqrt(F.col("nrm_b")))
-        scored = dots
-    elif pair_dot == "jvm":
-        cosine = _decimal_dot(F.col("emb_a"), F.col("emb_b")) / (
-            F.sqrt(F.col("nrm_a")) * F.sqrt(F.col("nrm_b"))
-        )
-        scored = pairs
-    else:
-        raise ValueError(f"pair_dot must be arrow|jvm, got {pair_dot!r}")
-    return (
-        scored.select("vec_a", "vec_b", cosine.alias("cosine"))
-        .filter(F.col("cosine") >= tau)
-    )
+    return _arrow_pair_cosine(
+        pairs, "vec_a", "emb_a", "nrm_a", "vec_b", "emb_b", "nrm_b"
+    ).filter(F.col("cosine") >= tau)
 
 
 def _neardup_sides(
@@ -1227,15 +1112,15 @@ def semdedup_scored(emb: DataFrame, centroids=None) -> DataFrame:
     one-shot SQL twin, so the driver-checked entry keeps the flat
     quantizer).
 
-    Measured and kept JVM (r10): an Arrow-kernel variant of this pass
-    (_assign_score_batches — bit-identical, test-pinned) showed NO
-    standalone win (semdedup 2.91 → 3.00 s; the k×dim fold on a
-    cached bounded vector table is not this operator's cost) and made
-    embedding_dedup_suite BIMODAL (20-37 s vs a stable ~24 s): the
-    suite's final action overlaps several branches, and adding two
-    more Python stages to the overlap oversubscribes the Python
-    worker pool on local[32]. The kernel stays in use where it is
-    sequential-job-isolated and measured 2.1× (kmeans_fit)."""
+    Measured and kept JVM (r10): a bit-identical Arrow-kernel variant
+    of this pass (since deleted) showed NO standalone win (semdedup
+    2.91 → 3.00 s; the k×dim fold on a cached bounded vector table is
+    not this operator's cost) and made embedding_dedup_suite BIMODAL
+    (20-37 s vs a stable ~24 s): the suite's final action overlaps
+    several branches, and adding two more Python stages to the
+    overlap oversubscribes the Python worker pool on local[32]. The
+    Arrow assignment stays where it is sequential-job-isolated and
+    measured 2.1× (kmeans_fit's _assign_batches)."""
     cent = _flat_centroids(emb) if centroids is None else centroids
     with_mat = with_matrix(emb, emb.sparkSession, cent)
     cell = kmeans_assign_col(F.col("embedding"), F.col("mat"))

@@ -6,8 +6,8 @@ oracle is md5 over a seeded string key, so the sketch is a PURE
 function of the data. That buys (a) driver hash-match against a DuckDB
 replay of the identical pipeline (most sketch libraries can only be
 range-tested), (b) reproducibility across runs/partitionings/engines,
-(c) mergeability you can property-test exactly (sketch(A ∪ B) ==
-merge(sketch(A), sketch(B)) as VALUES, not distributions).
+(c) properties you can test exactly as VALUES, not distributions
+(partition invariance; CMS(A ∪ B) == CMS(A) + CMS(B)).
 
 Three sketches:
 
@@ -117,17 +117,6 @@ def kmv_sketch(df: DataFrame, group_col: str, item_col: str, k: int = KMV_K) -> 
     w = Window.partitionBy("grp").orderBy("h")
     return (
         hashed.select("grp", "h", F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= k)
-    )
-
-
-def kmv_merge(a: DataFrame, b: DataFrame, k: int = KMV_K) -> DataFrame:
-    """merge(sketch(A), sketch(B)) = union, re-dedup, re-take k
-    smallest — the associative/commutative KMV merge."""
-    u = a.select("grp", "h").unionByName(b.select("grp", "h")).distinct()
-    w = Window.partitionBy("grp").orderBy("h")
-    return (
-        u.select("grp", "h", F.row_number().over(w).alias("rnk"))
         .filter(F.col("rnk") <= k)
     )
 
@@ -457,110 +446,28 @@ def quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------- KMV set algebra
-
-
-def kmv_jaccard(a: DataFrame, b: DataFrame, k: int = KMV_K) -> DataFrame:
-    """Jaccard similarity between the DISTINCT-ITEM SETS behind two
-    KMV sketches, estimated from the sketches alone (Beyer et al.
-    2007, "On synopses for distinct-value estimation under multiset
-    operations"): take the k smallest hashes of the UNION sketch; the
-    fraction of those present in BOTH input sketches estimates
-    J(A, B). With the same hash family on both sides this needs no
-    access to the original data — sketch-vs-sketch set algebra.
-
-    Input: two (grp, h, rnk) sketches. Output per grp present in both:
-    (grp, k_union, n_both, jaccard_est) where n_both is integer-exact
-    given the sketches (the estimator's only error is sampling error
-    ~1/√k, property-bounded in tests). Plan: union + two broadcast-
-    sized joins over ≤ groups×k-row tables — driver-free, exact to
-    replay."""
-    return _kmv_jaccard_from_union(kmv_merge(a, b, k), a, b)
-
-
-def _kmv_jaccard_from_union(u: DataFrame, a: DataFrame, b: DataFrame) -> DataFrame:
-    u = u.select("grp", "h")
-    both = (
-        u.join(a.select("grp", "h"), ["grp", "h"], "left_semi")
-        .join(b.select("grp", "h"), ["grp", "h"], "left_semi")
-        .groupBy("grp")
-        .agg(F.count(F.lit(1)).alias("n_both"))
-    )
-    ku = u.groupBy("grp").agg(F.count(F.lit(1)).alias("k_union"))
-    return (
-        ku.join(both, "grp", "left")
-        .select(
-            "grp",
-            "k_union",
-            F.coalesce(F.col("n_both"), F.lit(0)).alias("n_both"),
-            (
-                F.coalesce(F.col("n_both"), F.lit(0)).cast("double")
-                / F.col("k_union").cast("double")
-            ).alias("jaccard_est"),
-        )
-    )
-
-
-def kmv_intersection_estimate(a: DataFrame, b: DataFrame, k: int = KMV_K) -> DataFrame:
-    """|A ∩ B| ≈ Ĵ(A,B) · |A ∪ B|̂: the Jaccard estimate times the
-    union's KMV cardinality estimate — the standard composition
-    (both factors come from the same union sketch, so the estimates
-    are consistent)."""
-    u = kmv_merge(a, b, k)
-    j = _kmv_jaccard_from_union(u, a, b)
-    u_est = kmv_estimate(u, k).select("grp", F.col("est").alias("union_est"))
-    return j.join(u_est, "grp").select(
-        "grp",
-        "jaccard_est",
-        "union_est",
-        (F.col("jaccard_est") * F.col("union_est")).alias("intersection_est"),
-    )
-
-
 # ------------------------------------------------ CMS heavy hitters
 
 
-def _grid_literal(grid_rows: list, depth: int, width: int) -> Column:
-    """The depth×width grid as ONE array Literal (a single ArrayData
-    constant, not a 2048-child CreateArray), indexed arr[i·width +
-    bucket] — shared by the estimator and the heavy-hitter filter so
-    the layout convention has one owner."""
+def _grid_estimate(grid_rows: list, depth: int, width: int) -> Column:
+    """Map-side CMS estimate over _bucketed_items' __b{d} columns: the
+    least over the depth rows of arr[i·width + bucket]. The
+    depth×width grid rides as ONE array Literal (≤ 2048 longs — a
+    single ArrayData constant, not a 2048-child CreateArray for the
+    analyzer/codegen to walk), so the estimate is a pure JVM
+    expression: zero joins, zero shuffle, usable as a row filter."""
     arr = [0] * (depth * width)
     for r in grid_rows:
         arr[r["i"] * width + r["bucket"]] = int(r["cnt"])
-    return F.lit(arr)
-
-
-def cms_estimate_col(
-    grid_rows: list, item: Column, depth: int = CMS_DEPTH, width: int = CMS_WIDTH
-) -> Column:
-    """Map-side CMS estimate of `item`'s frequency as a pure JVM
-    expression: the depth×width grid rides as ONE array literal
-    (≤ 2048 longs — plan-sized, same budget as a broadcast hint) and
-    the estimate is least over the depth rows of
-    arr[i·width + hash_i(item) mod width]. Zero joins, zero shuffle —
-    usable as a row-level FILTER."""
-    arr = [0] * (depth * width)
-    for r in grid_rows:
-        arr[r["i"] * width + r["bucket"]] = int(r["cnt"])
-    # ONE Literal node (F.lit on the list), not CreateArray of 2048
-    # children — a single ArrayData constant instead of a 2048-child
-    # expression tree for the analyzer/codegen to walk
     lit = F.lit(arr)
-    ests = [
-        F.element_at(
-            lit,
-            (
-                F.lit(d * width)
-                + F.pmod(
-                    _h60(item, f"cms{SKETCH_SEED}d{d}"), F.lit(width)
-                )
-            ).cast("int")
-            + 1,
-        )
-        for d in range(depth)
-    ]
-    return F.least(*ests)
+    return F.least(
+        *[
+            F.element_at(
+                lit, (F.lit(d * width) + F.col(f"__b{d}")).cast("int") + 1
+            )
+            for d in range(depth)
+        ]
+    )
 
 
 def cms_heavy_hitters(
@@ -596,17 +503,8 @@ def cms_heavy_hitters(
     # consumer at this point — it scans b once and populates the cache
     # as a side effect; the probe filter then reads the cached ints
     grid_rows = _grid_from_buckets(b, depth).collect()
-    lit = _grid_literal(grid_rows, depth, width)
-    est = F.least(
-        *[
-            F.element_at(
-                lit, (F.lit(d * width) + F.col(f"__b{d}")).cast("int") + 1
-            )
-            for d in range(depth)
-        ]
-    )
     return (
-        b.filter(est >= min_count)
+        b.filter(_grid_estimate(grid_rows, depth, width) >= min_count)
         .groupBy("item")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= min_count)

@@ -102,20 +102,9 @@ def test_every_library_def_is_referenced():
 TEST_ONLY = {
     "dedup.jaccard_col": "exact set Jaccard; the brute-force reference MinHash candidates are checked against",
     "dedup.leakage_safe_split_duckdb_sql": "DuckDB replay that leakage_safe_split must match",
-    "dedup.prefix_filter_candidates": "high-threshold blocking; a superset of the exact Jaccard >= tau pairs",
     "diffing.write_bucketed_target": "writes the pk-bucketed target merge_upsert_partitioned updates in place",
     "layout._morton_interleave": "Z-order bit interleave, pinned to known bits",
     "lm.perplexity_buckets_duckdb_sql": "DuckDB replay that perplexity_buckets must match",
-    "multimodal._resize_batches": "Arrow batch kernel behind multimodal_resize",
-    "multimodal.multimodal_resize": "Spark-side resize; pixels equal resize_image of the decoded original",
-    "multimodal.resize_image": "pixel-exact nearest-neighbour (floor-sampling) resize",
-    "similarity._assign_score_batches": "scored Arrow assignment kernel, bit-equal to the JVM semdedup_scored",
-    "similarity.ann_ivf_topk": "IVF top-k at 4 of 16 cells: mean recall >= 0.6 vs brute force, exact cosines",
-    "sketches._kmv_jaccard_from_union": "Jaccard estimate from a union sketch, behind kmv_jaccard and kmv_intersection_estimate",
-    "sketches.cms_estimate_col": "count-min point estimate; filtering on it drops most of a long tail",
-    "sketches.kmv_intersection_estimate": "KMV intersection and union estimates within their sampling envelope",
-    "sketches.kmv_jaccard": "KMV Jaccard estimate within ~4/sqrt(k) of the truth, 0 for disjoint sets",
-    "sketches.kmv_merge": "merge of two KMV sketches equals the sketch of the union",
     "substring_dedup.remove_dup_spans_sql": "DuckDB replay that remove_dup_spans must match at sf0.01",
     "relational.approx_aggregates_raw": "HLL distinct count within 10% and approximate median within 20% of exact",
 }

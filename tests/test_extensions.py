@@ -133,7 +133,7 @@ def test_minhash_guaranteed_equals_bruteforce(spark):
 def test_prefix_filter_boundary_integer_math(spark):
     """A pair with jaccard EXACTLY τ at a size where float ⌈τ·n⌉
     overshoots (0.2×15 → 3.0000000000000004) must still be found —
-    the prefix length is computed with integer arithmetic."""
+    the join's length filter is computed with integer arithmetic."""
     from mrbf_spark.functions.dedup import minhash_candidates
 
     xs = [f"a{i}" for i in range(1, 18)]  # 17 tokens → 15 shingles
@@ -147,31 +147,6 @@ def test_prefix_filter_boundary_integer_math(spark):
     }
     # i=5 shared, u=15+15−5=25 ⇒ jaccard exactly 0.2, on the boundary
     assert got == {(1, 2): 0.2}
-
-
-def test_prefix_filter_blocking_is_complete(spark):
-    """prefix_filter_candidates (the high-τ blocking strategy, no
-    longer in the registered entry's plan) must still return a
-    SUPERSET of the exact Jaccard-≥τ pair set — completeness is its
-    whole contract (AllPairs/PPJoin prefix property)."""
-    from mrbf_spark.functions.dedup import (
-        exact_jaccard_pairs,
-        prefix_filter_candidates,
-        shingles_col,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text").limit(60)
-    shingled = docs.select("doc_id", shingles_col(F.col("text"), 3).alias("shingles"))
-    for tau in (0.2, 0.5):
-        cand = {
-            (r["doc_a"], r["doc_b"])
-            for r in prefix_filter_candidates(shingled, tau).collect()
-        }
-        exact = {
-            (r["doc_a"], r["doc_b"])
-            for r in exact_jaccard_pairs(docs, tau).collect()
-        }
-        assert exact <= cand, f"prefix blocking missed pairs at tau={tau}"
 
 
 def test_exact_jaccard_handles_sub_ngram_docs(spark):
@@ -385,36 +360,6 @@ def test_bruteforce_topk_matches_numpy(spark):
     for r in got:
         truth = sims[ids == r["vec_id"]][0]
         assert abs(r["cosine"] - truth) < 1e-6
-
-
-def test_ivf_topk_recall_vs_bruteforce(spark):
-    """IVF probe (nprobe=4 of 16 cells) must recover most of the exact
-    top-k: mean recall ≥ 0.6 over the query set, and every hit it does
-    return carries the exact fixed-point cosine (re-rank is exact)."""
-    from mrbf_spark.catalog import queries
-    from mrbf_spark.functions.similarity import ann_ivf_topk
-
-    qs = queries()
-    exact = {}
-    for r in qs["ann_bruteforce_topk"](spark, SF_SMOKE).collect():
-        exact.setdefault(r["query_id"], set()).add(r["vec_id"])
-    got = {}
-    cos_by_pair = {}
-    for r in ann_ivf_topk(spark, SF_SMOKE).collect():
-        got.setdefault(r["query_id"], set()).add(r["vec_id"])
-        cos_by_pair[(r["query_id"], r["vec_id"])] = r["cosine"]
-    recalls = [
-        len(exact[q] & got.get(q, set())) / len(exact[q]) for q in exact
-    ]
-    assert sum(recalls) / len(recalls) >= 0.6, recalls
-
-    exact_cos = {
-        (r["query_id"], r["vec_id"]): r["cosine"]
-        for r in qs["ann_bruteforce_topk"](spark, SF_SMOKE).collect()
-    }
-    for pair, c in cos_by_pair.items():
-        if pair in exact_cos:
-            assert abs(c - exact_cos[pair]) < 1e-12
 
 
 def test_ivf_flat_recall_vs_bruteforce(spark):
@@ -950,53 +895,6 @@ def test_kmeans_fit_matches_exact_reference_and_is_partition_invariant(spark):
         for i in range(n)
     }
     assert cells == final_ref
-
-
-def test_resize_nearest_neighbor_exact():
-    """Pixel-exact nearest-neighbor semantics on a known gradient."""
-    import numpy as np
-
-    from mrbf_spark.functions.multimodal import resize_image
-
-    img = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
-    out = resize_image(img, 2, 2)
-    # floor-sampling: output (i,j) = source (i*4//2, j*4//2) = (2i, 2j)
-    want = img[[0, 2]][:, [0, 2]]
-    assert np.array_equal(out, want)
-    # upscale replicates source pixels
-    up = resize_image(img, 8, 8)
-    assert up.shape == (8, 8, 3)
-    assert np.array_equal(up[::2, ::2], img)
-
-
-def test_multimodal_resize_spark_path(spark):
-    """Spark-side resize: every payload round-trips to a decodable PPM
-    of exactly the target shape, and the pixels equal a driver-side
-    decode+resize of the original payload."""
-    import numpy as np
-
-    from mrbf_spark.functions.multimodal import (
-        decode_image,
-        image_payloads,
-        multimodal_resize,
-        resize_image,
-    )
-
-    originals = {
-        r["doc_id"]: r["payload"]
-        for r in image_payloads(spark, SF_SMOKE).limit(20).collect()
-    }
-    resized = {
-        r["doc_id"]: r["payload"]
-        for r in multimodal_resize(spark, SF_SMOKE).limit(200).collect()
-        if r["doc_id"] in originals
-    }
-    assert resized
-    for doc_id, payload in list(resized.items())[:10]:
-        got = decode_image(payload)
-        assert got.shape == (8, 8, 3)
-        want = resize_image(decode_image(originals[doc_id]), 8, 8)
-        assert np.array_equal(got, want), doc_id
 
 
 def test_temperature_mixture_semantics(spark):
@@ -2584,58 +2482,71 @@ def test_cli_merge_bucketed(spark, tmp_path, capsys):
 
 
 def test_pair_dot_arrow_matches_jvm(spark):
-    """The r10 vectorized Arrow pair dot must be BIT-identical to the
-    interpreted JVM zip_with/aggregate fold it replaced — same
-    per-element trunc(a·b·1e9), same exact int64 sums, so the cosine
-    doubles compare with == (no tolerance). Pinned on BOTH vector
-    corpora: the embeddings table (neardup_pairs, the semantic-dedup
-    pair stage) and the query×corpus cross (cosine_pairs, the mining
-    negative scan)."""
-    from mrbf_spark.functions.similarity import neardup_pairs
+    """The Arrow pair cosine must be BIT-identical to the JVM
+    _decimal_dot cosine on the same pair frame — same per-element
+    trunc(a·b·1e9), same exact int64 sums, same rescale and divide —
+    so the doubles compare with == (no tolerance). Pinned on both
+    pair shapes it serves: the near-dup self-join sides
+    (neardup_pairs, the semantic-dedup pair stage) and a query×corpus
+    cross (the mining negative scan, the decontam crosses)."""
+    from mrbf_spark.functions.similarity import (
+        NEARDUP_EXACT_CAP,
+        NEARDUP_SALT_B,
+        _arrow_pair_cosine,
+        _decimal_dot,
+        _neardup_sides,
+    )
+
+    def arrow_and_jvm(pairs, a_id, a_emb, a_nrm, b_id, b_emb, b_nrm):
+        arrow = _arrow_pair_cosine(pairs, a_id, a_emb, a_nrm, b_id, b_emb, b_nrm)
+        jvm = pairs.select(
+            a_id,
+            b_id,
+            (
+                _decimal_dot(F.col(a_emb), F.col(b_emb))
+                / (F.sqrt(F.col(a_nrm)) * F.sqrt(F.col(b_nrm)))
+            ).alias("cosine"),
+        )
+        return (
+            sorted(map(tuple, arrow.collect())),
+            sorted(map(tuple, jvm.collect())),
+        )
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    arrow = neardup_pairs(emb, tau=0.3, pair_dot="arrow")
-    jvm = neardup_pairs(emb, tau=0.3, pair_dot="jvm")
-    a_rows = sorted(map(tuple, arrow.collect()))
-    j_rows = sorted(map(tuple, jvm.collect()))
-    assert a_rows == j_rows and len(a_rows) > 0
+    a, b = _neardup_sides(emb, NEARDUP_EXACT_CAP, NEARDUP_SALT_B)
+    pairs = a.join(b, ["label", "bucket"]).filter(F.col("vec_a") < F.col("vec_b"))
+    got, want = arrow_and_jvm(
+        pairs, "vec_a", "emb_a", "nrm_a", "vec_b", "emb_b", "nrm_b"
+    )
+    assert got == want and len(got) > 0
 
-    q = emb.filter(F.col("vec_id") < 8)
-    ca = sorted(map(tuple, cosine_pairs(q, emb, dot="arrow").collect()))
-    cj = sorted(map(tuple, cosine_pairs(q, emb, dot="jvm").collect()))
-    assert ca == cj and len(ca) > 0
+    nrm = _decimal_dot(F.col("embedding"), F.col("embedding"))
+    q = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        nrm.alias("q_nrm"),
+    )
+    c = emb.select("vec_id", "embedding", nrm.alias("c_nrm"))
+    cross = c.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("query_id"))
+    got, want = arrow_and_jvm(
+        cross, "query_id", "q_emb", "q_nrm", "vec_id", "embedding", "c_nrm"
+    )
+    assert got == want and len(got) > 0
 
 
-def test_assign_score_arrow_matches_jvm(spark):
-    """The r10 Arrow assignment kernels (kmeans_fit's Lloyd pass, and
-    the scored variant kept as the bit-equality reference) must match
-    the JVM projection exactly: same first-max argmax over the
-    fixed-point centroid dots, same cent_cosine doubles, and the
-    embedding column round-trips float→double exactly."""
+def test_assign_arrow_matches_jvm(spark):
+    """kmeans_fit's Arrow Lloyd-pass kernel must match the JVM
+    kmeans_assign exactly: same first-max argmax over the fixed-point
+    centroid dots, and the embedding column round-trips float→double
+    exactly."""
     from mrbf_spark.functions.similarity import (
-        _ASSIGN_SCORE_SCHEMA,
         _assign_batches,
-        _assign_score_batches,
         _flat_centroids,
         kmeans_assign,
-        semdedup_scored,
     )
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     cent = _flat_centroids(emb)
-    got = sorted(
-        (r["vec_id"], r["cell"], r["cent_cosine"], tuple(r["embedding"]))
-        for r in emb.select("vec_id", "embedding")
-        .mapInArrow(_assign_score_batches(cent), _ASSIGN_SCORE_SCHEMA)
-        .collect()
-    )
-    want = sorted(
-        (r["vec_id"], r["cell"], r["cent_cosine"], tuple(map(float, r["embedding"])))
-        for r in semdedup_scored(emb).collect()
-    )
-    assert got == want and len(got) > 0
-
-    # the Lloyd-pass kernel: same assignment as the JVM kmeans_assign
     ka = sorted(
         (tuple(map(float, r["embedding"])), r["cell"])
         for r in kmeans_assign(emb.select("embedding"), cent).collect()

@@ -102,8 +102,9 @@ def test_hadoop_indexes_are_abs_rem_in_range():
         idx = _positions(v, m, 7)
         assert len(idx) == 7
         assert all(0 <= i < m for i in idx)
-    # the vectorized reduction equals Java's abs-rem, abs(h) % m, on
-    # signed 32-bit hashes, the Integer.MIN_VALUE corner included
+    # the vectorized reduction equals Java's Math.abs(h % m) = abs(h) % m
+    # on signed 32-bit hashes; at h = Integer.MIN_VALUE the remainder
+    # is already in (-m, 0], so Math.abs sees no overflow there either
     h = np.array([0, 1, -1, 7, -7, m, -m, 2**31 - 1, -(2**31)], dtype=np.int64)
     for mm in (1, 3, 64, m):
         assert abs_rem(h, np.int64(mm)).tolist() == [abs(int(x)) % mm for x in h]

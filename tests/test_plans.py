@@ -85,6 +85,20 @@ def test_bloom_probe_path_is_jvm_only_broadcast(spark):
     assert hit and all(re.match(r"^[\s:+-]*\*\(\d+\) Project ", l) for l in hit), hit
 
 
+def test_bloom_semijoin_prune_tests_each_bit_once(spark):
+    """The registered semi-join drops `bloom_hit` after filtering on
+    it, so the k bit tests run once: only in the join condition, never
+    again in a projection that outputs `bloom_hit` (a kept column
+    doubles them, 2k `element_at(__words` terms)."""
+    from mrbf_spark.bloom.sizing import num_hashes
+    from mrbf_spark.operators.bloom_queries import P
+
+    df = QS["bloom_semijoin_prune"](spark, SF_SMOKE)
+    df.collect()
+    final = physical_plan(df).split("== Initial Plan ==")[0]
+    assert final.count("element_at(__words") == num_hashes(P), final
+
+
 def test_bloom_build_has_one_python_stage_and_no_round_robin(spark, monkeypatch):
     """The build collects one mapInArrow fold per input partition
     feeding a JVM bit_or merge: exactly one Python stage, no pandas

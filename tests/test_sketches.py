@@ -11,7 +11,6 @@ from mrbf_spark.functions.sketches import (
     cms_counters,
     cms_probe,
     kmv_estimate,
-    kmv_merge,
     kmv_sketch,
 )
 
@@ -36,22 +35,6 @@ def test_kmv_estimate_within_envelope_and_exact_below_k(items):
     for grp, true_n in (("g0", 500), ("g1", 300)):
         assert est[grp]["kmv_n"] == KMV_K
         assert abs(est[grp]["est"] - true_n) / true_n < 0.5, (grp, est[grp]["est"])
-
-
-def test_kmv_merge_equals_sketch_of_union(items):
-    """sketch(A ∪ B) == merge(sketch(A), sketch(B)) as exact values —
-    the mergeability that makes KMV a shuffle-free distributed agg."""
-    a = items.filter(F.col("item") % 2 == 0)
-    b = items.filter(F.col("item") % 2 == 1)
-    merged = {
-        (r["grp"], r["rnk"]): r["h"]
-        for r in kmv_merge(kmv_sketch(a, "grp", "item"), kmv_sketch(b, "grp", "item")).collect()
-    }
-    direct = {
-        (r["grp"], r["rnk"]): r["h"]
-        for r in kmv_sketch(items, "grp", "item").collect()
-    }
-    assert merged == direct
 
 
 def test_kmv_partition_invariant(items):
@@ -140,35 +123,6 @@ def test_sample_median_rank_semantics(spark):
     assert [(r["grp"], r["est"]) for r in got2] == [("g", 20.0)]
 
 
-def test_kmv_jaccard_estimates_set_overlap_from_sketches_alone(spark):
-    """Two item sets with known Jaccard (|A∩B|/|A∪B| = 500/2000 =
-    0.25): the sketch-vs-sketch estimate must land within the ~4/√k
-    sampling envelope, and disjoint sets must estimate ~0."""
-    from mrbf_spark.functions.sketches import (
-        kmv_intersection_estimate,
-        kmv_jaccard,
-        kmv_sketch,
-    )
-
-    a_rows = [("g", i) for i in range(1000)]
-    b_rows = [("g", i) for i in range(500, 2000)]
-    a = kmv_sketch(spark.createDataFrame(a_rows, "grp string, item long"), "grp", "item")
-    b = kmv_sketch(spark.createDataFrame(b_rows, "grp string, item long"), "grp", "item")
-    j = kmv_jaccard(a, b).collect()[0]
-    true_j = 500 / 2000
-    assert j["k_union"] == 64
-    assert abs(j["jaccard_est"] - true_j) <= 4 / (64 ** 0.5) * true_j + 0.05, j
-
-    inter = kmv_intersection_estimate(a, b).collect()[0]
-    assert abs(inter["intersection_est"] - 500) / 500 < 0.8  # two compounded ~12% errors
-    assert abs(inter["union_est"] - 2000) / 2000 < 0.5
-
-    c_rows = [("g", i) for i in range(10_000, 11_000)]
-    c = kmv_sketch(spark.createDataFrame(c_rows, "grp string, item long"), "grp", "item")
-    jd = kmv_jaccard(a, c).collect()[0]
-    assert jd["n_both"] == 0 and jd["jaccard_est"] == 0.0
-
-
 def test_sketch_builders_match_duckdb_with_null_items(spark, tmp_path):
     """The NULL-portability rule pinned end-to-end: on a corpus where
     NULL user_id is frequent enough to matter (even top-10-frequent),
@@ -227,8 +181,10 @@ def test_cms_heavy_hitters_exact_and_complete(spark):
     filter), and the map-side prune drops most of the long tail
     before the shuffle."""
     from mrbf_spark.functions.sketches import (
-        cms_counters,
-        cms_estimate_col,
+        CMS_WIDTH,
+        _bucketed_items,
+        _grid_estimate,
+        _grid_from_buckets,
         cms_heavy_hitters,
     )
 
@@ -253,8 +209,9 @@ def test_cms_heavy_hitters_exact_and_complete(spark):
         assert got == want and got, (t, len(got))
 
     # the prune actually prunes: tail rows whose estimate < t never
-    # reach the exact aggregation
-    grid = cms_counters(df, "item").collect()
-    est = cms_estimate_col(grid, F.col("item"))
-    survivors = df.select(F.col("item")).filter(est >= 900).count()
+    # reach the exact aggregation (the bucket rows and grid-estimate
+    # filter cms_heavy_hitters applies)
+    b = _bucketed_items(df, "item", CMS_DEPTH, CMS_WIDTH)
+    grid = _grid_from_buckets(b, CMS_DEPTH).collect()
+    survivors = b.filter(_grid_estimate(grid, CMS_DEPTH, CMS_WIDTH) >= 900).count()
     assert survivors < len(rows) // 2, survivors  # most of 15k rows dropped

@@ -28,9 +28,13 @@ _args = [
     a for a in sys.argv[1:] if a not in ("--vanilla", "--scale-oracles")
 ]
 # --vanilla: run on a plain SparkSession.builder session (no tuned
-# confs) — exactly the session the driver gives our queries; catches
-# any dependency on mrbf_spark.session's settings (TZ, AQE, shuffle
-# partitions). The tuned session stays the default for fast local loops.
+# confs) — exactly the plain session a caller of
+# `__spark_entry__.entry(spark)` passes in, except that the console
+# progress bar is off (it only changes console output: a bar glued in
+# front of a `PASS <entry>` line would hide it from a line filter);
+# catches any dependency on mrbf_spark.session's settings (TZ, AQE,
+# shuffle partitions). The tuned session stays the default for fast
+# local loops.
 VANILLA = "--vanilla" in sys.argv[1:]
 # --scale-oracles (r8): overlay the cost-aware second formulations
 # (catalog.scale_oracle_sql) on the naive oracles — the sf≥1 gate's
@@ -104,7 +108,11 @@ def main() -> int:
     if VANILLA:
         from pyspark.sql import SparkSession
 
-        spark = SparkSession.builder.master("local[8]").getOrCreate()
+        spark = (
+            SparkSession.builder.master("local[8]")
+            .config("spark.ui.showConsoleProgress", "false")
+            .getOrCreate()
+        )
     else:
         from mrbf_spark.session import get_spark
 
