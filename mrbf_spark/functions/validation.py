@@ -19,8 +19,11 @@ constraints are PK uniqueness (count_distinct — Catalyst plans the
 standard Expand, still one file scan) and referential integrity (a
 broadcast left-anti count against the dim's key column — the dim is
 the small side by construction; once the dim outgrows the broadcast
-ceiling, swap in the bloom prune of bloom_semijoin_prune in
-operators/bloom_queries.py). The two single-row
+ceiling, drop the hint and let the anti-join shuffle. A Bloom prune
+does not help there: a hit cannot prove a key present, so every fact
+row still needs the exact check, and Catalyst's runtime Bloom filter,
+which prunes the fact scan of an inner or semi join such as
+bloom_semijoin_prune, is not planned for an anti-join). The two single-row
 aggregates then cross-join into the literal report — driver traffic
 is one row per constraint, never data.
 """

@@ -117,15 +117,6 @@ def bloom_split_fp_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fp.unionByName(split)
 
 
-# --- Bloom semi-join pruning (the 100 TB use case): filter a big fact
-# table by membership of its join key in a filter built from a
-# dimension subset — the shuffle-free pre-filter for a selective join.
-# Exact-SQL twin: the true semi-join (bloom adds only false positives;
-# at p=0.01 and this data the FP count is >0 with ~certainty, so the
-# oracle checks the *exact semi-join* via bloom_hit-validated join
-# instead — we verify the superset property + fp bound in tests/ and
-# register the final exact result here: bloom prune + exact re-join,
-# which IS SQL-equal to the plain semi-join).
 @register(
     "bloom_semijoin_prune",
     """
@@ -138,31 +129,21 @@ def bloom_split_fp_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def bloom_semijoin_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
+    """Line items of urgent orders, per order: one `left_semi` join.
+
+    The pruning a hand-built Bloom probe would do in front of this join
+    is Catalyst's. While the urgent key set broadcasts, the join plans
+    as a `BroadcastHashJoin LeftSemi`: the lineitem scan streams through
+    it with no shuffle. Once the key set outgrows the broadcast
+    threshold, Spark's runtime filter (`InjectRuntimeFilter`, on by
+    default) puts `might_contain(bloom_filter_agg(xxhash64(o_orderkey)))`
+    into the lineitem scan, so only probable members reach the shuffle
+    of the exact join (pinned in tests/test_plans.py; timings in
+    SCALING.md "Bloom semi-join pruning"). The paper's Bloom core stays
+    the product of the FP pipeline entries above.
+    """
     li = load_table(spark, sf_dir, "lineitem")
-    urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT")
-    filters = build_bloom_filters(
-        urgent.withColumn("__g", F.lit("urgent")), "__g", "o_orderkey", P
-    )
-    # Stage 1: bloom prune — the broadcast join and the k unrolled bit
-    # tests run in one codegen stage; no shuffle of lineitem.
-    # broadcast=True (not "auto"): per-key filters are small by this
-    # operator's definition, and the auto size-check costs an extra
-    # driver action per query.
-    pruned = probe_bloom_filters(
-        li.withColumn("__g", F.lit("urgent")),
-        "__g",
-        "l_orderkey",
-        filters,
-        k=num_hashes(P),
-        broadcast=True,
-    ).filter(F.col("bloom_hit") == 1)
-    # Stage 2: exact semi-join on the ~p-sized survivor set removes the
-    # false positives (at scale: a much smaller shuffle than joining
-    # the raw fact table).
-    exact = pruned.join(
-        urgent.select("o_orderkey"),
-        pruned.l_orderkey == F.col("o_orderkey"),
-        "left_semi",
-    )
-    return exact.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("n_items"))
+    orders = load_table(spark, sf_dir, "orders")
+    urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT").select("o_orderkey")
+    members = li.join(urgent, F.col("l_orderkey") == F.col("o_orderkey"), "left_semi")
+    return members.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("n_items"))

@@ -85,18 +85,31 @@ def test_bloom_probe_path_is_jvm_only_broadcast(spark):
     assert hit and all(re.match(r"^[\s:+-]*\*\(\d+\) Project ", l) for l in hit), hit
 
 
-def test_bloom_semijoin_prune_tests_each_bit_once(spark):
-    """The registered semi-join drops `bloom_hit` after filtering on
-    it, so the k bit tests run once: only in the join condition, never
-    again in a projection that outputs `bloom_hit` (a kept column
-    doubles them, 2k `element_at(__words` terms)."""
-    from mrbf_spark.bloom.sizing import num_hashes
-    from mrbf_spark.operators.bloom_queries import P
-
+def test_bloom_semijoin_prune_is_one_semi_join(spark):
+    """The registered semi-join is one broadcast `LeftSemi` join: no
+    hand-built filter build (MapInArrow), no literal-key attach
+    (BroadcastNestedLoopJoin), no bit tests. Once the urgent key set
+    no longer broadcasts, Catalyst's runtime Bloom filter prunes the
+    lineitem scan instead (the 100 TB case)."""
     df = QS["bloom_semijoin_prune"](spark, SF_SMOKE)
     df.collect()
     final = physical_plan(df).split("== Initial Plan ==")[0]
-    assert final.count("element_at(__words") == num_hashes(P), final
+    assert final.count("BroadcastHashJoin") == 1 and "LeftSemi" in final, final
+    for marker in ("BroadcastNestedLoopJoin", "MapInArrow", "element_at(__words"):
+        assert marker not in final, marker
+
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    scan_size = "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
+    old = {k: spark.conf.get(k) for k in (threshold, scan_size)}
+    spark.conf.set(threshold, "-1")
+    spark.conf.set(scan_size, "1")
+    try:
+        df = QS["bloom_semijoin_prune"](spark, SF_SMOKE)
+        optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert "might_contain" in optimized, optimized
 
 
 def test_bloom_build_has_one_python_stage_and_no_round_robin(spark, monkeypatch):
@@ -229,13 +242,10 @@ def test_embedding_neardup_joins_on_label_and_bucket(spark):
 
 
 # BroadcastNestedLoopJoin is legitimate ONLY where a 1-row/tiny
-# broadcast side is attached to a stream (the bloom filter-table
-# attach, the 8-query ANN crossJoin); anywhere else it's an accidental
+# broadcast side is attached to a stream (the 8-query ANN crossJoin,
+# the matrix attaches below); anywhere else it's an accidental
 # O(n·m) join.
 _BNLJ_ALLOWED = {
-    "bloom_build_invariants",
-    "bloom_split_fp_report",
-    "bloom_semijoin_prune",
     "decontaminate",  # the semantic part's broadcast eval-embedding
     # cross (benchmark-sized side by construction)
     "semantic_decontam",  # same broadcast eval cross, standalone builder
