@@ -535,7 +535,6 @@ def cmd_curate(args) -> None:
         semantic=not args.no_semantic,
         decontam_action=args.decontam_action,
         classifier_weights=weights,
-        checkpoint=args.checkpoint,
     )
     curated.write.mode("overwrite").parquet(args.out)
     if args.shards:
@@ -548,8 +547,12 @@ def cmd_curate(args) -> None:
     release_scoped_caches()
     prev = None
     for stage, n in census:
+        if stage == "decontaminate_cut":
+            # the cut stage counts docs rewritten, not survivors
+            print(f"{stage}\t{n} docs cut, none dropped")
+            continue
         drop = f"  (-{prev - n})" if prev is not None else ""
-        print(f"{stage}	{n}{drop}")
+        print(f"{stage}\t{n}{drop}")
         prev = n
     print(f"curated corpus -> {args.out}"
           + (f" + {args.shards} shards" if args.shards else ""))
@@ -957,7 +960,6 @@ def cmd_pretrain_build(args) -> None:
             lang=args.lang or None,
             repetition=args.repetition,
             neardup_keeper=args.neardup_keeper,
-            checkpoint=args.checkpoint,
         )
         curated.write.mode("overwrite").parquet(f"{out}/curated")
         release_scoped_caches()
@@ -997,9 +999,7 @@ def cmd_pretrain_build(args) -> None:
         enc = spark.read.parquet(f"{out}/encoded")
 
     if runs("pack"):
-        contiguous_sequences_tokens(
-            enc, seq_len=args.seq_len, checkpoint=args.checkpoint
-        ).write.mode("overwrite").parquet(f"{out}/sequences")
+        contiguous_sequences_tokens(enc, seq_len=args.seq_len).write.mode("overwrite").parquet(f"{out}/sequences")
         seqs = spark.read.parquet(f"{out}/sequences")
         print(f"pretrain-build: sequences\t{seqs.count()} x {args.seq_len}")
     else:
@@ -1254,18 +1254,11 @@ def main(argv: list[str] | None = None) -> int:
         "quality gate after the heuristic gate (drop pred==0 docs)",
     )
     p_cu.add_argument(
-        "--checkpoint",
-        choices=("local", "reliable"),
-        default="local",
-        help="stage-handoff materialization: local = executor-local "
-        "blocks (fast; right on local[*]); reliable = lineage-safe "
-        ".checkpoint() blocks (needs --checkpoint-dir)",
-    )
-    p_cu.add_argument(
         "--checkpoint-dir",
         default=None,
-        help="sets spark.sparkContext.setCheckpointDir for "
-        "--checkpoint reliable (a shared path on a cluster)",
+        help="write lineage-safe stage handoffs (.checkpoint()) to this "
+        "directory (a shared path on a cluster); without it handoffs "
+        "are executor-local (.localCheckpoint())",
     )
     p_cu.add_argument("--shards", type=int, default=0)
 
@@ -1544,18 +1537,11 @@ def main(argv: list[str] | None = None) -> int:
     p_pb.add_argument("--seq-len", type=int, default=128)
     p_pb.add_argument("--shards", type=int, default=8)
     p_pb.add_argument(
-        "--checkpoint",
-        choices=("local", "reliable"),
-        default="local",
-        help="stage-handoff materialization: local = executor-local "
-        "blocks (fast; right on local[*]); reliable = lineage-safe "
-        ".checkpoint() blocks (needs --checkpoint-dir)",
-    )
-    p_pb.add_argument(
         "--checkpoint-dir",
         default=None,
-        help="sets spark.sparkContext.setCheckpointDir for "
-        "--checkpoint reliable (a shared path on a cluster)",
+        help="write lineage-safe stage handoffs (.checkpoint()) to this "
+        "directory (a shared path on a cluster); without it handoffs "
+        "are executor-local (.localCheckpoint())",
     )
     p_pb.add_argument(
         "--from-stage",

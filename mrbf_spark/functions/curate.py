@@ -24,15 +24,16 @@ Every stage is deterministic (md5 fingerprints, integer Jaccard,
 fixed-point cosines), so two runs over the same corpus emit the same
 training set — the property that makes a 100 TB data build auditable.
 Scale shape: each stage is one of the already-ledgered plans
-(SCALING.md); stage handoffs are localCheckpoint'd (see the in-body
-comment: an accumulated five-stage tree OOMs plan stringification on
-a default driver heap), and the text crosses stages as materialized
-blocks, never as re-derived lineage.
+(SCALING.md); stage handoffs are checkpointed (see _handoff: an
+accumulated five-stage tree OOMs plan stringification on a default
+driver heap), and the text crosses stages as materialized blocks,
+never as re-derived lineage. curate_increment runs the same stage
+helpers and the same co-count join against an immutable history.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..registry import (
     checkpointed,
@@ -42,29 +43,108 @@ from ..registry import (
 )
 from ..tables import load_table
 from .decontam import EVAL_MOD, FLAG_THRESHOLD, NGRAM_N, decontaminate_docs
-from .dedup import assign_clusters, exact_jaccard_pairs, lex_min_independent_set
+from .dedup import (
+    assign_clusters,
+    cocount_pairs,
+    exact_jaccard_pairs,
+    fingerprint_index,
+    incremental_dedup,
+    lex_min_independent_set,
+    shingle_index,
+)
 from .similarity import semdedup_verdicts
 from .text import fingerprint_col, token_count_col
 from .text_embedding import TEXT_SEM_TAU, text_hash_embeddings
+
+# The chain's settings, shared by curate_corpus, curate_increment and
+# the registered entry's oracle. lang, min_tokens and jaccard_tau are
+# also parameters (the CLI sets them); the chars-per-token cap, the
+# near-dup df cap, the semantic τ and the contamination threshold
+# (decontam.FLAG_THRESHOLD) are fixed.
+_LANG = "en"
+_MIN_TOKENS = 5
+_MAX_CHARS_PER_TOKEN = 15.0
+_JACCARD_TAU = 0.5
+_JACCARD_MAX_DF = 200
+
+
+def _handoff(
+    census: list[tuple[str, int]], stage: str, df: DataFrame
+) -> DataFrame:
+    """Materialize a stage's output and append its row count to the
+    census.
+
+    Stage handoffs are checkpointed (registry.checkpointed), not
+    cache()'d (r6): each stage's plan then reads the previous stage's
+    materialized blocks instead of accumulating a five-stage logical
+    tree. The accumulated tree is not just slow to optimize — .cache()
+    renders it to a STRING for the cache name
+    (CachedRDDBuilder.cachedName), and with semdedup's wide fixed-point
+    expression subtrees inside, that stringification alone OOMs a
+    default-1g driver-parity session (measured: vanilla session,
+    sf0.01). The census count was already materializing the stage, so
+    eager checkpointing adds no extra pass and stores the same rows
+    the old cache stored."""
+    cur = checkpointed(df)
+    census.append((stage, cur.count()))
+    return cur
+
+
+def _quality_gate(lang: str | None, min_tokens: int) -> Column:
+    """The map-only quality / language predicate: token floor,
+    chars-per-token cap, and (unless lang is None) a lang match."""
+    t = F.col("text")
+    n_tok = token_count_col(t)
+    gate = (n_tok >= min_tokens) & (
+        F.length(F.replace(t, F.lit(" "), F.lit(""))).cast("double") / n_tok
+        <= _MAX_CHARS_PER_TOKEN
+    )
+    if lang is not None:
+        gate = (F.col("lang") == lang) & gate
+    return gate
+
+
+def _pairwise_losers(pairs: DataFrame) -> DataFrame:
+    """The pairwise keeper rule over cocount_pairs output: drop every
+    doc_b (it has a Jaccard-≥τ partner with a smaller id, or — in the
+    incremental case — a history partner)."""
+    return pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+
+
+def _decontaminate_drop(
+    census: list[tuple[str, int]], cur: DataFrame, eval_docs: DataFrame
+) -> DataFrame:
+    """Drop-mode decontamination: remove every doc whose eval n-gram
+    contamination rate reaches FLAG_THRESHOLD (docs too short to
+    produce an n-gram have no report row = clean)."""
+    # flagged is INT (0/1 — the NULL-portable oracle convention)
+    flagged = (
+        decontaminate_docs(cur, eval_docs)
+        .filter(F.col("flagged") == 1)
+        .select("doc_id")
+    )
+    # the final checkpoint doubles as the consumer handoff: the
+    # returned plan reads materialized blocks, so downstream actions
+    # (driver compare, writes) cost ~0.1 s instead of re-running the
+    # semdedup/decontamination tail (measured ~17 s per action when a
+    # plain .cache() failed to serve under AQE plan canonicalization)
+    return _handoff(
+        census, "decontaminate", cur.join(flagged, "doc_id", "left_anti")
+    )
 
 
 def curate_corpus(
     docs: DataFrame,
     eval_docs: DataFrame | None = None,
     *,
-    lang: str | None = "en",
-    min_tokens: int = 5,
-    max_chars_per_token: float = 15.0,
-    jaccard_tau: float = 0.5,
-    jaccard_max_df: int | None = 200,
+    lang: str | None = _LANG,
+    min_tokens: int = _MIN_TOKENS,
+    jaccard_tau: float = _JACCARD_TAU,
     neardup_keeper: str = "pairwise",
     repetition: bool = False,
     semantic: bool = True,
-    sem_tau: float = TEXT_SEM_TAU,
-    contam_threshold: float = FLAG_THRESHOLD,
     decontam_action: str = "drop",
     classifier_weights: list[int] | None = None,
-    checkpoint: str = "local",
 ) -> tuple[DataFrame, list[tuple[str, int]]]:
     """Run the full curation chain; returns (curated_docs, census)
     where census = [(stage, docs_surviving_after_stage), ...].
@@ -86,7 +166,8 @@ def curate_corpus(
     and whose census entry counts docs-actually-cut rather than
     docs-surviving (no docs are dropped by a cut stage). The frame
     reads its own materialized checkpoint blocks — cheap to consume
-    repeatedly.
+    repeatedly; the blocks are lineage-safe when the session has a
+    checkpoint directory (registry.checkpointed).
     Caller owns releasing the scoped caches the in-stage machinery
     leaves (`registry.release_scoped_caches()`); checkpoint blocks
     free when the returned DataFrame is garbage-collected.
@@ -109,48 +190,20 @@ def curate_corpus(
     Survivor-set containment: cluster ⊆ pairwise ⊆ greedy (component
     min has no smaller neighbor; a pairwise survivor is its
     neighborhood's minimum, hence greedy-kept)."""
-    # Stage handoffs are localCheckpoint'd, not cache()'d (r6): each
-    # stage's plan then reads the previous stage's materialized blocks
-    # instead of accumulating a five-stage logical tree. The
-    # accumulated tree is not just slow to optimize — .cache() renders
-    # it to a STRING for the cache name (CachedRDDBuilder.cachedName),
-    # and with semdedup's wide fixed-point expression subtrees inside,
-    # that stringification alone OOMs a default-1g driver-parity
-    # session (measured: vanilla session, sf0.01). The census count
-    # that follows each checkpoint was already materializing the
-    # stage, so eager checkpointing adds no extra pass and stores the
-    # same rows the old cache stored.
     census: list[tuple[str, int]] = []
-
-    def _ck(df):
-        # stage handoff materialization; checkpoint="reliable" swaps
-        # executor-local blocks for lineage-safe ones (registry.
-        # checkpointed — r8, the knob for long cluster pipelines)
-        return checkpointed(df, checkpoint)
-
-    cur = _ck(docs)
-    census.append(("input", cur.count()))
-    t = F.col("text")
+    cur = _handoff(census, "input", docs)
 
     # 1 — exact dedup: one fingerprint shuffle, survivors carry ids only
     survivors = (
-        cur.groupBy(fingerprint_col(t).alias("fingerprint"))
+        cur.groupBy(fingerprint_col(F.col("text")).alias("fingerprint"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    cur = _ck(cur.join(survivors, "doc_id", "left_semi"))
-    census.append(("exact_dedup", cur.count()))
+    cur = _handoff(census, "exact_dedup", cur.join(survivors, "doc_id", "left_semi"))
 
     # 2 — quality / language gate: map-only predicates
-    n_tok = token_count_col(t)
-    gate = (n_tok >= min_tokens) & (
-        F.length(F.replace(t, F.lit(" "), F.lit(""))).cast("double") / n_tok
-        <= max_chars_per_token
-    )
-    if lang is not None:
-        gate = (F.col("lang") == lang) & gate
-    cur = _ck(cur.filter(gate))
-    census.append(("quality_gate", cur.count()))
+    gate = _quality_gate(lang, min_tokens)
+    cur = _handoff(census, "quality_gate", cur.filter(gate))
 
     # 2a — optional LEARNED quality gate (r8): frozen qlr weights,
     # map-only scoring, keep pred == 1 (docstring)
@@ -162,8 +215,9 @@ def curate_corpus(
             .filter(F.col("pred") == 1)
             .select("doc_id")
         )
-        cur = _ck(cur.join(keep_scored, "doc_id", "left_semi"))
-        census.append(("classifier_gate", cur.count()))
+        cur = _handoff(
+            census, "classifier_gate", cur.join(keep_scored, "doc_id", "left_semi")
+        )
 
     # 2b — optional Gopher repetition gate (r7): drop docs failing any
     # of the 13 repetition thresholds (functions/repetition.py). Off by
@@ -178,17 +232,18 @@ def curate_corpus(
             .filter(F.col("rep_pass"))
             .select("doc_id")
         )
-        cur = _ck(cur.join(rep_keep, "doc_id", "left_semi"))
-        census.append(("repetition_gate", cur.count()))
+        cur = _handoff(
+            census, "repetition_gate", cur.join(rep_keep, "doc_id", "left_semi")
+        )
 
     # 3 — near-dup removal: complete Jaccard-≥τ pairs (bounded by the
     # df cap), keeper election per `neardup_keeper` (docstring). All
     # three modes consume the SAME bounded pair set; the election
     # machinery (components / MIS rounds) runs over edges only, never
     # the corpus.
-    pairs = exact_jaccard_pairs(cur, jaccard_tau, max_df=jaccard_max_df)
+    pairs = exact_jaccard_pairs(cur, jaccard_tau, max_df=_JACCARD_MAX_DF)
     if neardup_keeper == "pairwise":
-        losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+        losers = _pairwise_losers(pairs)
     elif neardup_keeper == "cluster":
         # assign_clusters labels every doc (singletons label
         # themselves), so "not the component min" is the drop set
@@ -210,24 +265,20 @@ def curate_corpus(
             f"neardup_keeper must be pairwise|cluster|greedy, got"
             f" {neardup_keeper!r}"
         )
-    cur = _ck(cur.join(losers, "doc_id", "left_anti"))
-    census.append(("neardup_jaccard", cur.count()))
+    cur = _handoff(census, "neardup_jaccard", cur.join(losers, "doc_id", "left_anti"))
 
     # 4 — semantic dedup over hashed-bigram embeddings
     if semantic:
         emb = scoped_cache(text_hash_embeddings(cur))
         emb.count()
         keep = (
-            semdedup_verdicts(emb, tau=sem_tau)
+            semdedup_verdicts(emb, tau=TEXT_SEM_TAU)
             .filter(F.col("keep"))
             .select(F.col("vec_id").alias("doc_id"))
         )
-        cur = _ck(cur.join(keep, "doc_id", "left_semi"))
-        census.append(("semantic_dedup", cur.count()))
+        cur = _handoff(census, "semantic_dedup", cur.join(keep, "doc_id", "left_semi"))
 
-    # 5 — decontamination against an eval set (exact overlap; docs too
-    # short to produce an n-gram have no report row = clean).
-    # decontam_action (r7):
+    # 5 — decontamination against an eval set. decontam_action (r7):
     #   * "drop" (default, the registered entry's oracle): remove any
     #     doc whose contamination rate crosses the threshold — rows
     #     are only ever filtered, never rewritten.
@@ -238,19 +289,7 @@ def curate_corpus(
     #     cut). threshold is not consulted: any verbatim overlap cuts.
     if eval_docs is not None:
         if decontam_action == "drop":
-            report = decontaminate_docs(
-                cur, eval_docs, threshold=contam_threshold
-            )
-            # flagged is INT (0/1 — the NULL-portable oracle convention)
-            flagged = report.filter(F.col("flagged") == 1).select("doc_id")
-            # the final checkpoint doubles as the consumer handoff: the
-            # returned plan reads materialized blocks, so downstream
-            # actions (driver compare, writes) cost ~0.1 s instead of
-            # re-running the semdedup/decontamination tail (measured
-            # ~17 s per action when a plain .cache() failed to serve
-            # under AQE plan canonicalization)
-            cur = _ck(cur.join(flagged, "doc_id", "left_anti"))
-            census.append(("decontaminate", cur.count()))
+            cur = _decontaminate_drop(census, cur, eval_docs)
         elif decontam_action == "cut":
             from .decontam import decontaminate_cut
 
@@ -259,7 +298,7 @@ def curate_corpus(
                 F.col("text").alias("__new_text"),
                 "n_removed",
             )
-            cur = _ck(
+            cur = checkpointed(
                 cur.join(rewritten, "doc_id", "left")
                 .withColumn(
                     "text", F.coalesce(F.col("__new_text"), F.col("text"))
@@ -298,19 +337,6 @@ def curate_corpus(
 # equals df_hist (persisted) + df_new (one increment scan).
 
 
-def _shingle_index(docs: DataFrame) -> DataFrame:
-    """(doc_id, n, s) — the per-doc shingle inverted index rows the
-    near-dup stage consumes: n = |distinct 3-gram shingles|, one row
-    per (doc, shingle). The persistable near-dup artifact."""
-    from .dedup import shingles_col
-
-    return docs.select(
-        "doc_id",
-        F.size(shingles_col(F.col("text"))).alias("n"),
-        F.explode_outer(shingles_col(F.col("text"))).alias("s"),
-    )
-
-
 def curate_index_build(history: DataFrame, path: str) -> dict[str, int]:
     """Persist the history-derived judgment artifacts at `path` (r9,
     VERDICT r8 next-round #4 — the ann-append frozen-artifact pattern):
@@ -324,15 +350,10 @@ def curate_index_build(history: DataFrame, path: str) -> dict[str, int]:
     subsequent curate_increment(..., history_index=path) call is then
     increment-proportional: history TEXT is never re-read or
     re-shingled. Returns row counts per artifact (the build report)."""
-    fp = (
-        history.select(
-            fingerprint_col(F.col("text")).alias("fingerprint"), F.col("doc_id")
-        )
-        .groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("hist_id"))
+    fingerprint_index(history).write.mode("overwrite").parquet(
+        f"{path}/fingerprints"
     )
-    fp.write.mode("overwrite").parquet(f"{path}/fingerprints")
-    _shingle_index(history).write.mode("overwrite").parquet(
+    shingle_index(history).write.mode("overwrite").parquet(
         f"{path}/shingle_index"
     )
     spark = history.sparkSession
@@ -347,109 +368,19 @@ def curate_index_build(history: DataFrame, path: str) -> dict[str, int]:
     }
 
 
-def _neardup_drop_vs_history(
-    new_docs: DataFrame,
-    history: DataFrame | None,
-    threshold: float,
-    max_df: int | None,
-    hist_index: DataFrame | None = None,
-    hist_census: DataFrame | None = None,
-) -> DataFrame:
-    """doc_ids of NEW docs having word-3-gram Jaccard ≥ threshold with
-    any HISTORY doc, or with any smaller-id NEW doc — the incremental
-    form of the batch pairwise keeper rule (with empty history this is
-    exactly exact_jaccard_pairs' loser set; test-pinned). One inverted
-    co-count join over the tagged union index; the df cap is computed
-    over the union (history ∪ increment), matching what the batch rule
-    would see on the combined corpus.
-
-    History arrives either as text (`history`, re-shingled per call)
-    or as the persisted artifacts (`hist_index` + `hist_census`, r9) —
-    identical results by construction: the persisted rows ARE the rows
-    the text path derives, and df_union = df_hist + df_new."""
-    from fractions import Fraction
-
-    frac = Fraction(threshold).limit_denominator(10**6)
-    p, q = frac.numerator, frac.denominator
-    inv_new = _shingle_index(new_docs).withColumn("is_hist", F.lit(False))
-    if hist_index is not None:
-        inv_hist = hist_index.select("doc_id", "n", "s").withColumn(
-            "is_hist", F.lit(True)
-        )
-    else:
-        inv_hist = _shingle_index(history).withColumn("is_hist", F.lit(True))
-    if max_df is not None:
-        if hist_index is not None and hist_census is not None:
-            # union df from the persisted census + one increment-only
-            # census — never a history-wide groupBy at append time
-            new_dfs = inv_new.groupBy("s").agg(
-                F.count(F.lit(1)).alias("__dfn")
-            )
-            dfs = (
-                new_dfs.join(hist_census, "s", "full_outer")
-                .select(
-                    "s",
-                    (
-                        F.coalesce(F.col("__dfn"), F.lit(0))
-                        + F.coalesce(F.col("df"), F.lit(0))
-                    ).alias("__df"),
-                )
-            )
-        else:
-            dfs = (
-                inv_new.select("s")
-                .unionAll(inv_hist.select("s"))
-                .groupBy("s")
-                .agg(F.count(F.lit(1)).alias("__df"))
-            )
-        hot = F.broadcast(dfs.filter(F.col("__df") > max_df).select("s"))
-        inv_new = inv_new.join(hot, "s", "left_anti")
-        inv_hist = inv_hist.join(hot, "s", "left_anti")
-    inv = inv_new.unionByName(inv_hist)
-    inv = scoped_cache(inv.repartition("s"))
-    inv.count()  # materialize before the two-sided consumption
-    a = inv.filter(~F.col("is_hist")).alias("a")
-    b = inv.alias("b")
-    raw = a.join(
-        b,
-        (F.col("a.s") == F.col("b.s"))
-        & (F.col("b.is_hist") | (F.col("b.doc_id") < F.col("a.doc_id")))
-        & (
-            F.lit(q) * F.least(F.col("a.n"), F.col("b.n"))
-            >= F.lit(p) * F.greatest(F.col("a.n"), F.col("b.n"))
-        ),
-    )
-    g = raw.groupBy(
-        F.col("a.doc_id").alias("doc_id"),
-        F.col("b.is_hist").alias("p_hist"),
-        F.col("b.doc_id").alias("p_id"),
-        F.col("a.n").alias("na"),
-        F.col("b.n").alias("nb"),
-    ).agg(F.count(F.lit(1)).alias("c"))
-    jac = F.col("c").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("c")
-    ).cast("double")
-    return g.filter(jac >= threshold).select("doc_id").distinct()
-
-
 def curate_increment(
     new_docs: DataFrame,
     history: DataFrame | None = None,
     eval_docs: DataFrame | None = None,
     *,
-    lang: str | None = "en",
-    min_tokens: int = 5,
-    max_chars_per_token: float = 15.0,
-    jaccard_tau: float = 0.5,
-    jaccard_max_df: int | None = 200,
-    contam_threshold: float = FLAG_THRESHOLD,
-    checkpoint: str = "local",
+    lang: str | None = _LANG,
+    jaccard_tau: float = _JACCARD_TAU,
     history_index: str | None = None,
 ) -> tuple[DataFrame, list[tuple[str, int]]]:
     """Curate a NEW shard against an immutable curated HISTORY:
 
         new → exact dedup (within shard AND vs history fingerprints)
-            → quality / lang gate (same predicates as the batch chain)
+            → quality / lang gate (same predicate as the batch chain)
             → near-dup vs (history ∪ shard survivors), pairwise rule
             → decontamination (drop, threshold-gated)
 
@@ -460,78 +391,53 @@ def curate_increment(
     the call never re-reads history text; byte-identical results,
     test-pinned). Exactly one of the two must be given.
 
-    Returns (survivors, census) like curate_corpus. History rows are
-    never re-judged (the incremental contract — matches
+    Returns (survivors, census) like curate_corpus, whose stage
+    helpers and co-count join (dedup.cocount_pairs) it shares. History
+    rows are never re-judged (the incremental contract — matches
     dedup_incremental's semantics); with an EMPTY history and the
     batch chain's repetition/semantic stages off, the survivor set
     equals curate_corpus's (test-pinned equivalence)."""
-    from .dedup import incremental_dedup
-
     if (history is None) == (history_index is None):
         raise ValueError(
             "curate_increment needs exactly one of history / history_index"
         )
-    spark = new_docs.sparkSession
-    hist_index = hist_census = None
+    if history_index is not None:
+        spark = new_docs.sparkSession
+        index = spark.read.parquet(f"{history_index}/fingerprints")
+        hist_inv = spark.read.parquet(f"{history_index}/shingle_index")
+        hist_df = spark.read.parquet(f"{history_index}/shingle_census")
+    else:
+        index = fingerprint_index(history)
+        hist_inv, hist_df = shingle_index(history), None
     census: list[tuple[str, int]] = []
-
-    def _ck(df):
-        return checkpointed(df, checkpoint)
-
-    cur = _ck(new_docs)
-    census.append(("input", cur.count()))
-    t = F.col("text")
+    cur = _handoff(census, "input", new_docs)
 
     # 1 — exact dedup within the shard and against history
-    if history_index is not None:
-        index = spark.read.parquet(f"{history_index}/fingerprints")
-        hist_index = spark.read.parquet(f"{history_index}/shingle_index")
-        hist_census = spark.read.parquet(f"{history_index}/shingle_census")
-    else:
-        index = (
-            history.select(
-                fingerprint_col(t).alias("fingerprint"), F.col("doc_id")
-            )
-            .groupBy("fingerprint")
-            .agg(F.min("doc_id").alias("hist_id"))
-        )
     fresh = (
         incremental_dedup(index, cur.select("doc_id", "text"))
         .filter(F.col("status") == "new")
         .select("doc_id")
     )
-    cur = _ck(cur.join(fresh, "doc_id", "left_semi"))
-    census.append(("exact_dedup", cur.count()))
+    cur = _handoff(census, "exact_dedup", cur.join(fresh, "doc_id", "left_semi"))
 
-    # 2 — quality / language gate (identical predicates to the batch)
-    n_tok = token_count_col(t)
-    gate = (n_tok >= min_tokens) & (
-        F.length(F.replace(t, F.lit(" "), F.lit(""))).cast("double") / n_tok
-        <= max_chars_per_token
-    )
-    if lang is not None:
-        gate = (F.col("lang") == lang) & gate
-    cur = _ck(cur.filter(gate))
-    census.append(("quality_gate", cur.count()))
+    # 2 — quality / language gate
+    gate = _quality_gate(lang, _MIN_TOKENS)
+    cur = _handoff(census, "quality_gate", cur.filter(gate))
 
     # 3 — near-dup vs history ∪ shard survivors (pairwise rule)
-    drops = _neardup_drop_vs_history(
-        cur,
-        history,
+    pairs = cocount_pairs(
+        shingle_index(cur),
         jaccard_tau,
-        jaccard_max_df,
-        hist_index=hist_index,
-        hist_census=hist_census,
+        _JACCARD_MAX_DF,
+        history=hist_inv,
+        history_df=hist_df,
     )
-    cur = _ck(cur.join(drops, "doc_id", "left_anti"))
-    census.append(("neardup_jaccard", cur.count()))
+    losers = _pairwise_losers(pairs)
+    cur = _handoff(census, "neardup_jaccard", cur.join(losers, "doc_id", "left_anti"))
 
     # 4 — decontamination (drop mode)
     if eval_docs is not None:
-        report = decontaminate_docs(cur, eval_docs, threshold=contam_threshold)
-        flagged = report.filter(F.col("flagged") == 1).select("doc_id")
-        cur = _ck(cur.join(flagged, "doc_id", "left_anti"))
-        census.append(("decontaminate", cur.count()))
+        cur = _decontaminate_drop(census, cur, eval_docs)
 
     return cur, census
 
@@ -543,18 +449,14 @@ def curate_increment(
 # per-stage census, against a DuckDB oracle that composes every
 # stage's already-proven twin (fingerprint dedup, quality gate, capped
 # exact-Jaccard pairs, text-SemDeDup over hashed-bigram embeddings,
-# n-gram decontamination) into a single WITH chain. Defaults mirror
-# curate_corpus's signature; eval set = doc_id % EVAL_MOD == 0 (the
+# n-gram decontamination) into a single WITH chain. The oracle reads
+# the chain's module constants; eval set = doc_id % EVAL_MOD == 0 (the
 # decontaminate entry's convention), input = the complement.
-
-_C_LANG = "en"
-_C_MIN_TOKENS = 5
-_C_MAX_CPT = 15.0
-_C_TAU_NUM, _C_TAU_DEN = 1, 2  # jaccard_tau = 0.5 exactly
-_C_MAX_DF = 200
 
 
 def _curate_oracle() -> str:
+    from fractions import Fraction
+
     from .repetition import repetition_duckdb_sql
     from .similarity import _semdedup_oracle
     from .text import FINGERPRINT_SQL, TOKEN_COUNT_SQL
@@ -569,15 +471,16 @@ def _curate_oracle() -> str:
         pre_cte=f"tvecs AS ({text_embeddings_sql(src='s3docs')}),",
     )
     n, n1 = NGRAM_N, NGRAM_N - 1
+    tau = Fraction(_JACCARD_TAU)
     nb = "CAST(NULL AS BIGINT)"
     return f"""
     WITH input AS (SELECT * FROM documents WHERE doc_id % {EVAL_MOD} <> 0),
     s1 AS (SELECT MIN(doc_id) AS doc_id FROM input GROUP BY {fp}),
     s1docs AS MATERIALIZED (SELECT i.* FROM input i JOIN s1 USING (doc_id)),
     s2docs AS MATERIALIZED (SELECT * FROM s1docs
-               WHERE lang = '{_C_LANG}' AND {tok} >= {_C_MIN_TOKENS}
+               WHERE lang = '{_LANG}' AND {tok} >= {_MIN_TOKENS}
                  AND CAST(LENGTH(REPLACE(text, ' ', '')) AS DOUBLE) / {tok}
-                       <= {_C_MAX_CPT}),
+                       <= {_MAX_CHARS_PER_TOKEN}),
     s2rep AS MATERIALIZED (SELECT doc_id FROM ({rep}) WHERE rep_pass),
     s2bdocs AS MATERIALIZED (SELECT * FROM s2docs
                 WHERE doc_id IN (SELECT doc_id FROM s2rep)),
@@ -588,7 +491,7 @@ def _curate_oracle() -> str:
                      AS shingles
             FROM toks3),
     inv3 AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS s FROM sh3),
-    ok3 AS (SELECT s FROM inv3 GROUP BY s HAVING COUNT(*) <= {_C_MAX_DF}),
+    ok3 AS (SELECT s FROM inv3 GROUP BY s HAVING COUNT(*) <= {_JACCARD_MAX_DF}),
     cap3 AS (SELECT i.doc_id, i.n, i.s FROM inv3 i JOIN ok3 USING (s)),
     co3 AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                    a.n AS na, b.n AS nb, COUNT(*) AS c
@@ -596,7 +499,7 @@ def _curate_oracle() -> str:
             GROUP BY 1, 2, 3, 4),
     losers3 AS (SELECT DISTINCT doc_b FROM co3
                 WHERE CAST(c AS DOUBLE) / CAST(na + nb - c AS DOUBLE)
-                      >= CAST({_C_TAU_NUM} AS DOUBLE) / {_C_TAU_DEN}),
+                      >= CAST({tau.numerator} AS DOUBLE) / {tau.denominator}),
     s3docs AS MATERIALIZED (SELECT * FROM s2bdocs
                WHERE doc_id NOT IN (SELECT doc_b FROM losers3)),
     sem AS ({sem}),

@@ -132,15 +132,25 @@ def dedup_exact_report(
 _INC_SPLIT = 7
 
 
+def fingerprint_index(history: DataFrame) -> DataFrame:
+    """(fingerprint, hist_id) — the history index incremental_dedup
+    joins against: one row per fingerprint, keeping the min doc_id."""
+    return (
+        history.select(fingerprint_col(F.col("text")).alias("fingerprint"), "doc_id")
+        .groupBy("fingerprint")
+        .agg(F.min("doc_id").alias("hist_id"))
+    )
+
+
 def incremental_dedup(index: DataFrame, new_docs: DataFrame) -> DataFrame:
     """Dedup `new_docs` (doc_id, text) against `index` (fingerprint,
-    hist_id) + itself. Scale shape: the increment is small relative to
-    history, so both joins shuffle only increment-sized inputs —
-    `index` arrives pre-partitioned by fingerprint from its store, and
-    at extreme index/increment ratios the first join's history side
-    can be pre-pruned with a bloom filter of the increment's
-    fingerprints (the decontaminate pattern) so the index scan ships
-    only probable hits."""
+    hist_id — fingerprint_index) + itself. Scale shape: the increment
+    is small relative to history, so both joins shuffle only
+    increment-sized inputs — `index` arrives pre-partitioned by
+    fingerprint from its store. At extreme index/increment ratios the
+    index scan needs no hand-built prune: Catalyst's runtime filter
+    injects a Bloom filter of the increment's fingerprints into the
+    history side of the first join when its size heuristics fire."""
     inc = new_docs.select(
         "doc_id", fingerprint_col(F.col("text")).alias("fingerprint")
     )
@@ -186,12 +196,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     hist_docs = d.filter(F.pmod(F.col("doc_id"), F.lit(10)) < _INC_SPLIT)
     new_docs = d.filter(F.pmod(F.col("doc_id"), F.lit(10)) >= _INC_SPLIT)
-    index = (
-        hist_docs.select(fingerprint_col(F.col("text")).alias("fingerprint"), "doc_id")
-        .groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("hist_id"))
-    )
-    return incremental_dedup(index, new_docs)
+    return incremental_dedup(fingerprint_index(hist_docs), new_docs)
 
 
 # ------------------------------------------------------------- shingles
@@ -418,11 +423,12 @@ def exact_jaccard_pairs(
         with 30% of docs sharing one verbatim text completes at
         uniform-corpus speed (tools/stress_skew.py) where the uncapped
         join would materialize ~10^10 rows.
-      * compose with exact dedup first (dedup_exact_survivors):
-        verbatim-duplicate groups collapse to one representative, so
-        the hot text contributes ONE doc and near-dup semantics over
-        distinct texts stay exact — the standard curation-pipeline
-        ordering (exact pass, then fuzzy pass).
+      * compose with exact dedup first (curate_corpus's first stage,
+        or dedup_exact_report's keep_id): verbatim-duplicate groups
+        collapse to one representative, so the hot text contributes
+        ONE doc and near-dup semantics over distinct texts stay exact
+        — the standard curation-pipeline ordering (exact pass, then
+        fuzzy pass).
 
     hashed=False joins on the portable shingle STRING — one corpus
     scan, independently replayable by any engine. hashed=True joins on
@@ -437,8 +443,15 @@ def exact_jaccard_pairs(
     — both recompute the corpus scan concurrently, one wins the cache
     slot (measured 2×; at 100 TB it is a full duplicate corpus pass).
     """
-    frac = Fraction(threshold).limit_denominator(10**6)
-    p, q = frac.numerator, frac.denominator
+    return cocount_pairs(shingle_index(docs, n, hashed), threshold, max_df)
+
+
+def shingle_index(docs: DataFrame, n: int = 3, hashed: bool = False) -> DataFrame:
+    """(doc_id, n, s) — the inverted index the co-count join consumes:
+    one row per (doc, distinct shingle), n = the doc's distinct-shingle
+    count. s is the shingle string, or with hashed=True its certified
+    64-bit hash (see exact_jaccard_pairs). The string form is the
+    artifact curate_index_build persists."""
     if hashed and _hash_injectivity_certified(docs, n):
         sh = shingled_docs(docs, n)
     else:
@@ -450,9 +463,38 @@ def exact_jaccard_pairs(
     # here: 7.8 s → 3.9 s for the index build at sf0.1). Shingle
     # arrays are never empty by construction (greatest(...,0) keeps
     # one shingle even for short docs), so outer explode is identical.
-    inv = sh.select(
+    return sh.select(
         "doc_id", F.size("shingles").alias("n"), F.explode_outer("shingles").alias("s")
     )
+
+
+def cocount_pairs(
+    inv: DataFrame,
+    threshold: float,
+    max_df: int | None = None,
+    history: DataFrame | None = None,
+    history_df: DataFrame | None = None,
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard ≥ threshold) from the co-count self-join
+    of the inverted index `inv` (shingle_index rows) — the core of
+    exact_jaccard_pairs, whose docstring covers the df cap, the cached
+    index and the cost model.
+
+    history=None (the batch case): pairs of `inv` docs, doc_a < doc_b.
+    `history` = shingle_index rows of an already-curated corpus (the
+    incremental case): doc_b is always an `inv` doc, doc_a a history
+    doc or a smaller-id `inv` doc, so doc_b is the pairwise keeper
+    rule's loser either way. The df cap then counts history ∪ inv —
+    what the batch rule would see on the combined corpus; `history_df`
+    (s, df — the census curate_index_build persists) supplies the
+    history part without a history-wide groupBy."""
+    frac = Fraction(threshold).limit_denominator(10**6)
+    p, q = frac.numerator, frac.denominator
+    new_inv = inv
+    if history is not None:
+        inv = inv.withColumn("is_hist", F.lit(False)).unionByName(
+            history.select("doc_id", "n", "s").withColumn("is_hist", F.lit(True))
+        )
     if max_df is not None:
         # Apply the cap as a broadcast ANTI-join on the DROP-list, not
         # a shuffled semi-join on the keep-list. The keep-list is the
@@ -468,7 +510,21 @@ def exact_jaccard_pairs(
         # the broadcast ceiling; past it, fall back to the shuffled
         # keep-list semi-join (identical semantics: every index row's
         # shingle appears in the census, so anti(df>D) == semi(df<=D)).
-        dfs = inv.groupBy("s").agg(F.count(F.lit(1)).alias("__df"))
+        if history_df is None:
+            dfs = inv.groupBy("s").agg(F.count(F.lit(1)).alias("__df"))
+        else:
+            dfs = (
+                new_inv.groupBy("s")
+                .agg(F.count(F.lit(1)).alias("__dfn"))
+                .join(history_df, "s", "full_outer")
+                .select(
+                    "s",
+                    (
+                        F.coalesce(F.col("__dfn"), F.lit(0))
+                        + F.coalesce(F.col("df"), F.lit(0))
+                    ).alias("__df"),
+                )
+            )
         hot = scoped_cache(dfs.filter(F.col("__df") > max_df).select("s"))
         if hot.count() <= _MAX_HOT_BROADCAST_ROWS:
             inv = inv.join(F.broadcast(hot), "s", "left_anti")
@@ -483,12 +539,18 @@ def exact_jaccard_pairs(
     # map-side (the r4 semi-join shuffled the pre-cap index, hot key
     # included — SCALING.md's 2× skew ratio was exactly that).
     inv = scoped_cache(inv.repartition("s"))
-    inv.count()  # materialize — see docstring
+    inv.count()  # materialize — see exact_jaccard_pairs' docstring
     a, b = inv.alias("a"), inv.alias("b")
+    if history is None:
+        order, tag = F.col("a.doc_id") < F.col("b.doc_id"), []
+    else:
+        b = inv.filter(~F.col("is_hist")).alias("b")
+        order = F.col("a.is_hist") | (F.col("a.doc_id") < F.col("b.doc_id"))
+        tag = [F.col("a.is_hist")]
     raw = a.join(
         b,
         (F.col("a.s") == F.col("b.s"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
+        & order
         & (
             F.lit(q) * F.least(F.col("a.n"), F.col("b.n"))
             >= F.lit(p) * F.greatest(F.col("a.n"), F.col("b.n"))
@@ -499,6 +561,7 @@ def exact_jaccard_pairs(
         F.col("b.doc_id").alias("doc_b"),
         F.col("a.n").alias("na"),
         F.col("b.n").alias("nb"),
+        *tag,
     ).agg(F.count(F.lit(1)).alias("c"))
     jaccard = F.col("c").cast("double") / (
         F.col("na") + F.col("nb") - F.col("c")

@@ -41,9 +41,7 @@ from .text import TOKEN_COUNT_SQL, token_count_col
 PACK_BUDGET = 1024  # tokens per training row
 
 
-def _with_stream_starts(
-    toks: DataFrame, starts: dict[str, str], checkpoint: str = "local"
-) -> DataFrame:
+def _with_stream_starts(toks: DataFrame, starts: dict[str, str]) -> DataFrame:
     """Add, for each (out_col -> val_col) in `starts`, the column
     `out_col` = exclusive prefix sum of `val_col` in doc_id order —
     the distributed 3-phase prefix sum shared by the packing layout
@@ -75,14 +73,13 @@ def _with_stream_starts(
     # an executor loss between the checkpoint and the final action
     # fails the job with no recompute path. On local[*] (this harness)
     # executor==driver and the distinction is moot; a long multi-hour
-    # cluster pipeline should set a checkpoint dir and pass
-    # checkpoint="reliable" — same semantics, lineage-safe blocks
-    # (registry.checkpointed; r8, the r7 trade-off note made a knob).
+    # cluster pipeline should set a checkpoint dir on its session
+    # (the CLI's --checkpoint-dir) — registry.checkpointed then writes
+    # lineage-safe blocks with the same semantics.
     parts = checkpointed(
         toks.repartitionByRange("doc_id").withColumn(
             "__pid", F.spark_partition_id()
-        ),
-        checkpoint,
+        )
     )
     # Phase 2: parallel per-partition cumsum (exclusive). All prefix
     # sums ride ONE window spec — one sort, N sum expressions.
@@ -119,11 +116,9 @@ def _with_stream_starts(
     )
 
 
-def _with_stream_start(
-    toks: DataFrame, val_col: str, checkpoint: str = "local"
-) -> DataFrame:
+def _with_stream_start(toks: DataFrame, val_col: str) -> DataFrame:
     """Single-column form of `_with_stream_starts` (adds `start_tok`)."""
-    return _with_stream_starts(toks, {"start_tok": val_col}, checkpoint)
+    return _with_stream_starts(toks, {"start_tok": val_col})
 
 
 def _layout_from_laid(laid: DataFrame, budget: int = PACK_BUDGET) -> DataFrame:
@@ -141,16 +136,12 @@ def _layout_from_laid(laid: DataFrame, budget: int = PACK_BUDGET) -> DataFrame:
     )
 
 
-def packed_layout(
-    docs: DataFrame, budget: int = PACK_BUDGET, checkpoint: str = "local"
-) -> DataFrame:
+def packed_layout(docs: DataFrame, budget: int = PACK_BUDGET) -> DataFrame:
     """(doc_id, n_tokens, start_tok, bin_id, bin_offset, straddles)
     for every doc, in doc_id order semantics (order-insensitive rows).
     """
     toks = docs.select("doc_id", token_count_col(F.col("text")).alias("n_tokens"))
-    return _layout_from_laid(
-        _with_stream_start(toks, "n_tokens", checkpoint), budget
-    )
+    return _layout_from_laid(_with_stream_start(toks, "n_tokens"), budget)
 
 
 _PACKING_ORACLE = f"""
@@ -277,7 +268,6 @@ def contiguous_sequences(
     docs: DataFrame,
     seq_len: int = SEQ_LEN,
     eos: str = EOS_TOKEN,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """(seq_id, seq_tokens, seq_text, doc_starts): the fixed-length
     training rows of the EOS-joined doc_id-ordered token stream. Every
@@ -292,9 +282,7 @@ def contiguous_sequences(
     toks = docs.select("doc_id", F.split(F.col("text"), " ").alias("t")).select(
         "doc_id", "t", (F.size("t") + F.lit(1)).cast("bigint").alias("n_units")
     )
-    return _contig_from_laid(
-        _with_stream_start(toks, "n_units", checkpoint), seq_len, eos
-    )
+    return _contig_from_laid(_with_stream_start(toks, "n_units"), seq_len, eos)
 
 
 def contiguous_sequences_tokens(
@@ -302,7 +290,6 @@ def contiguous_sequences_tokens(
     tokens_col: str = "tokens",
     seq_len: int = SEQ_LEN,
     eos: str = EOS_TOKEN,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """contiguous_sequences over a PRE-TOKENIZED corpus — `tokens_col`
     is an array<string> column (e.g. bpe_encode's `tokens`), so the
@@ -314,9 +301,7 @@ def contiguous_sequences_tokens(
     toks = docs.select("doc_id", F.col(tokens_col).alias("t")).select(
         "doc_id", "t", (F.size("t") + F.lit(1)).cast("bigint").alias("n_units")
     )
-    return _contig_from_laid(
-        _with_stream_start(toks, "n_units", checkpoint), seq_len, eos
-    )
+    return _contig_from_laid(_with_stream_start(toks, "n_units"), seq_len, eos)
 
 
 def _contig_from_laid(

@@ -61,31 +61,22 @@ def _release_scoped_caches() -> None:
             pass
 
 
-def checkpointed(df: DataFrame, mode: str = "local") -> DataFrame:
-    """Materialize `df` with truncated lineage (r8, VERDICT r7
-    next-round #7 — the reliability knob for stage handoffs).
+def checkpointed(df: DataFrame) -> DataFrame:
+    """Materialize `df` with truncated lineage — the stage-handoff
+    materialization. The mode follows the session:
 
-    mode="local" (default): `.localCheckpoint()` — executor-local,
-    non-replicated blocks; fastest, but an executor loss between the
-    checkpoint and the final action fails the job with no recompute
-    path. The right choice on local[*] (executor == driver) and for
-    short-lived jobs.
-
-    mode="reliable": `.checkpoint()` — blocks written to the
-    SparkContext's checkpoint directory (HDFS/object store on a
-    cluster), lineage-safe across executor loss; requires the caller
-    to have set `spark.sparkContext.setCheckpointDir(...)`."""
-    if mode == "local":
+    * no checkpoint directory (the default): `.localCheckpoint()` —
+      executor-local, non-replicated blocks; fastest, but an executor
+      loss between the checkpoint and the final action fails the job
+      with no recompute path. Right on local[*] (executor == driver)
+      and for short-lived jobs.
+    * `spark.sparkContext.setCheckpointDir(...)` called (the CLI's
+      `--checkpoint-dir`): `.checkpoint()` — blocks written to that
+      directory (HDFS/object store on a cluster), lineage-safe across
+      executor loss."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint()
-    if mode == "reliable":
-        if df.sparkSession.sparkContext.getCheckpointDir() is None:
-            raise ValueError(
-                "checkpoint='reliable' needs a checkpoint directory: "
-                "call spark.sparkContext.setCheckpointDir("
-                "'<shared-path>') before the pipeline"
-            )
-        return df.checkpoint()
-    raise ValueError(f"checkpoint must be local|reliable, got {mode!r}")
+    return df.checkpoint()
 
 
 BUILDER_SQL: dict[str, str] = {}

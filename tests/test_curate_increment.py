@@ -84,6 +84,45 @@ def test_empty_history_equals_batch_chain(spark):
     assert inc_ids == batch_ids and len(inc_ids) > 0
 
 
+def test_incremental_hot_list_respects_broadcast_ceiling(spark, monkeypatch):
+    """The incremental near-dup join (cocount_pairs with a history)
+    caps hot shingles like the batch join: past
+    dedup._MAX_HOT_BROADCAST_ROWS it plans the shuffled keep-list
+    semi-join instead of broadcasting the drop-list, with the same
+    drops."""
+    from mrbf_spark.functions import dedup
+    from mrbf_spark.registry import release_scoped_caches
+
+    hot = "the same boilerplate text repeated verbatim across every shard"
+    history = _docs(spark, [(1, _base_text(1), "en"), (2, hot, "en")])
+    new = _docs(
+        spark,
+        # 10: near-dup of history doc 1 (last word changed, J = 0.8)
+        [(10, _base_text(1).replace("kilo1", "lima"), "en")]
+        # 20-23: verbatim copies of history doc 2 — every shingle has
+        # df 5 > max_df, so these pairs are capped away
+        + [(20 + i, hot, "en") for i in range(4)]
+        + [(30, "zulu yankee xray whiskey victor uniform tango sierra", "en")],
+    )
+
+    def run():
+        pairs = dedup.cocount_pairs(
+            dedup.shingle_index(new), 0.5, max_df=2,
+            history=dedup.shingle_index(history),
+        )
+        got = {r["doc_b"] for r in pairs.collect()}
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        release_scoped_caches()
+        return got, plan
+
+    bcast, bcast_plan = run()
+    monkeypatch.setattr(dedup, "_MAX_HOT_BROADCAST_ROWS", 0)
+    semi, semi_plan = run()
+    assert bcast == semi == {10}
+    assert "LeftAnti" in bcast_plan and "LeftSemi" not in bcast_plan
+    assert "LeftSemi" in semi_plan and "LeftAnti" not in semi_plan
+
+
 @pytest.mark.slow
 def test_history_index_equals_recompute(spark, tmp_path):
     """curate_increment(history_index=path) must be BYTE-IDENTICAL to

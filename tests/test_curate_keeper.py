@@ -102,7 +102,7 @@ def test_cluster_keeper_duckdb_parity(spark):
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     cur, _ = curate_corpus(
-        docs, None, jaccard_tau=0.5, jaccard_max_df=200,
+        docs, None, jaccard_tau=0.5,
         neardup_keeper="cluster", semantic=False,
     )
     release_scoped_caches()

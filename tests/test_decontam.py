@@ -307,7 +307,7 @@ def test_curate_decontam_cut_mode(spark):
         ],
         "doc_id long, text string, lang string",
     )
-    kw = dict(semantic=False, jaccard_max_df=None, min_tokens=2)
+    kw = dict(semantic=False, min_tokens=2)
     cut_docs, census = curate_corpus(
         corpus, ev, decontam_action="cut", **kw
     )
@@ -318,10 +318,35 @@ def test_curate_decontam_cut_mode(spark):
     assert rows[2] == "totally clean words only nothing shared"
 
     drop_docs, census2 = curate_corpus(
-        corpus, ev, decontam_action="drop", contam_threshold=0.01, **kw
+        corpus, ev, decontam_action="drop", **kw
     )
     release_scoped_caches()
     assert [r["doc_id"] for r in drop_docs.collect()] == [2]
+
+
+def test_curate_cli_cut_census_line(spark, tmp_path, capsys):
+    """`curate --decontam-action cut` prints the cut stage's count as
+    docs cut: the stage drops no doc, so no survivor delta is shown."""
+    from mrbf_spark.__main__ import main
+
+    src, evp, out = (str(tmp_path / d) for d in ("corpus", "eval", "out"))
+    spark.createDataFrame(
+        [
+            (1, "keep this alpha beta gamma document here ok", "en"),
+            (2, "totally clean words only nothing shared", "en"),
+        ],
+        "doc_id long, text string, lang string",
+    ).write.parquet(src)
+    spark.createDataFrame(
+        [(0, "alpha beta gamma", "en")], "doc_id long, text string, lang string"
+    ).write.parquet(evp)
+    assert main(["curate", "--input", src, "--eval", evp, "--out", out,
+                 "--decontam-action", "cut", "--no-semantic",
+                 "--min-tokens", "2"]) == 0
+    lines = capsys.readouterr().out.splitlines()
+    assert "decontaminate_cut\t1 docs cut, none dropped" in lines, lines
+    assert "neardup_jaccard\t2  (-0)" in lines, lines
+    assert spark.read.parquet(out).count() == 2
 
 
 def test_decontam_cli(spark, tmp_path, capsys):

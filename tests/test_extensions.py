@@ -1015,7 +1015,7 @@ def test_curate_corpus_drops_each_planted_defect_exactly(spark):
     )
 
     curated, census = curate_corpus(
-        docs, eval_docs, jaccard_tau=0.5, jaccard_max_df=None
+        docs, eval_docs, jaccard_tau=0.5
     )
     got = {r["doc_id"] for r in curated.select("doc_id").collect()}
     release_scoped_caches()

@@ -131,7 +131,7 @@ def test_curate_repetition_gate(spark):
         "doc_id long, text string, lang string",
     )
     cur, census = curate_corpus(
-        docs, None, repetition=True, semantic=False, jaccard_max_df=None
+        docs, None, repetition=True, semantic=False
     )
     release_scoped_caches()
     stages = dict(census)
@@ -140,9 +140,7 @@ def test_curate_repetition_gate(spark):
     assert [r["doc_id"] for r in cur.collect()] == [1]
 
     # gate off (the default): both docs survive to the near-dup stage
-    cur2, census2 = curate_corpus(
-        docs, None, semantic=False, jaccard_max_df=None
-    )
+    cur2, census2 = curate_corpus(docs, None, semantic=False)
     release_scoped_caches()
     assert "repetition_gate" not in dict(census2)
     assert cur2.count() == 2

@@ -3,7 +3,8 @@
 Usage: python tools/dump_plans.py <out_dir> [sf_dir] [suffix] [name ...]
 
 Writes <out_dir>/<query>_<suffix>.txt (suffix default "before").
-Used for the optimization-round plan evidence (plans/r09/).
+Regenerates the plan evidence the r09/r10 optimization notes cite; those
+dumps are not committed.
 """
 
 from __future__ import annotations
