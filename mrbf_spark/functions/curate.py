@@ -33,6 +33,7 @@ helpers and the same co-count join against an immutable history.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..registry import (
@@ -561,8 +562,15 @@ def curate_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("long").alias("doc_id"),
         F.lit(None).cast("long").alias("n"),
     )
+    # an Arrow table plans as a LocalTableScan, no Python-worker job
     census_part = spark.createDataFrame(
-        [(s, int(c)) for s, c in census], "stage string, n long"
+        pa.table(
+            {
+                "stage": pa.array([s for s, _ in census], pa.string()),
+                "n": pa.array([c for _, c in census], pa.int64()),
+            }
+        ),
+        "stage string, n long",
     ).select(
         F.lit("census").alias("part"),
         "stage",

@@ -216,12 +216,11 @@ def quality_rules_duckdb_sql() -> str:
 # regex expressions over the text column already being scanned),
 # freeing pii_redaction's slot for the promoted curate_corpus.
 # r7 joins in the REPETITION half of the Gopher battery
-# (functions/repetition.py) on doc_id — that family needs per-doc
-# unit-multiset aggregation, so the entry's plan is no longer a pure
-# zero-shuffle projection: it is one projection branch plus the
-# repetition subplan's doc-keyed aggregates, joined on doc_id. Every
-# shuffle in the joined branch is doc-local (see repetition.py's 100 TB
-# note), so the entry stays embarrassingly parallel across documents.
+# (functions/repetition.py) on doc_id. That branch is one map-only
+# Arrow kernel whose task state is one document's unit multisets, so
+# the only shuffle left in the entry is the doc_id join of the two
+# per-row branches (see repetition.py's 100 TB note) and the entry
+# stays embarrassingly parallel across documents.
 def _quality_signals_sql() -> str:
     from .repetition import repetition_duckdb_sql
 

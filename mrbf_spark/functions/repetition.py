@@ -28,27 +28,31 @@ is an exact integer cross-multiplication (DEN * num <= NUM * den) —
 no float ever enters a rule, so the DuckDB twin agrees bit-for-bit.
 Empty denominators pass vacuously, exactly as in quality_rules.
 
-Words/lines use the same definitions as quality_rules (_WS split,
-non-blank after trim); paragraphs split on a blank line ('\\n\\n').
-N-gram keys are words joined by a single space; their word-character
-length is length(key) - (n-1) since words contain no whitespace.
-The most-frequent tie breaks (count DESC, key ASC) — a pure function
-of the table.
+Words use quality_rules' definition (_WS split, empty pieces
+dropped); lines split on '\\n' and paragraphs on a blank line
+('\\n\\n'), and a line or paragraph is blank when it is empty after
+stripping SPACES only, as Spark's and DuckDB's trim() do (a tab-only
+line is a line). N-gram keys are words joined by a single space; their
+word-character length is length(key) - (n-1) since words contain no
+whitespace. The most-frequent tie breaks (count DESC, key ASC) on the
+joined key in code-point (= UTF-8 byte) order — a pure function of the
+table.
 
-100 TB shape: one documents scan explodes to per-doc units (lines,
-paragraphs, n=2..10 grams — ~9x the token count), then every shuffle
-is keyed by (doc_id, kind, key) or (doc_id, position): state never
-exceeds one document's own unit multiset, so parallelism is per-doc
-and skew is bounded by max document length, not corpus size. No
-driver collects, no cross-document joins. This is deliberately NOT
-the O(L^2) higher-order-function formulation — a million-line doc
-would quadratically stall a single task there; the explode+groupBy
-form stays linear-ish (hash-aggregate) per doc.
+100 TB shape: one documents scan and one map-only Arrow kernel
+(`mapInArrow`) — no shuffle, no join, no driver collect. A task's
+state is one document's own units (its lines, paragraphs and 2..10-gram
+multisets, ~9x its token count), counted with hash maps, so the
+operator is linear in document length and embarrassingly parallel
+across documents; skew is bounded by the longest document, never by
+corpus shape or by how many documents share a text.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from collections import Counter
+from itertools import accumulate
+
+from pyspark.sql import DataFrame
 
 # NOTE: quality_rules is imported lazily inside each function —
 # quality_rules' registered quality_signals entry imports THIS module
@@ -65,270 +69,121 @@ PARA_CHAR_MAX = (1, 5)
 TOP_MAX = {2: (1, 5), 3: (9, 50), 4: (4, 25)}
 DUP_MAX = {5: (3, 20), 6: (7, 50), 7: (13, 100), 8: (3, 25), 9: (11, 100), 10: (1, 10)}
 
+# (ratio column, rule column, threshold) in output order; _doc_ratios
+# emits each signal's (numerator, denominator) in this order
+_SIGNALS = (
+    ("dup_line_frac_q", "r_dup_line", LINE_FRAC_MAX),
+    ("dup_line_char_q", "r_dup_line_char", LINE_CHAR_MAX),
+    ("dup_para_frac_q", "r_dup_para", PARA_FRAC_MAX),
+    ("dup_para_char_q", "r_dup_para_char", PARA_CHAR_MAX),
+    *((f"top{n}_char_q", f"r_top{n}", TOP_MAX[n]) for n in TOP_NS),
+    *((f"dup{n}_char_q", f"r_dup{n}", DUP_MAX[n]) for n in DUP_NS),
+)
 
-def _base(docs: DataFrame) -> DataFrame:
-    from .quality_rules import _WS
 
-    words = F.filter(F.split(F.col("text"), _WS), lambda x: x != F.lit(""))
-    lines = F.filter(F.split(F.col("text"), "\\n"), lambda l: F.trim(l) != F.lit(""))
-    paras = F.filter(
-        F.split(F.col("text"), "\\n\\n"), lambda p: F.trim(p) != F.lit("")
-    )
-    return docs.select(
+def _unit_dups(units: list[str]) -> list[tuple[int, int]]:
+    """[(dup units, units), (dup chars, chars)] of one doc's lines or
+    paragraphs; a unit is dup when its exact text occurs >= 2 times,
+    and every occurrence counts."""
+    dup_u = dup_ch = 0
+    for key, c in Counter(units).items():
+        if c >= 2:
+            dup_u += c
+            dup_ch += c * len(key)
+    return [(dup_u, len(units)), (dup_ch, sum(map(len, units)))]
+
+
+def _gram_covers(words: list[str]) -> list[int]:
+    """top{n}_cover for TOP_NS, then dup{n}_cover for DUP_NS, of one
+    doc. N-grams are counted as word tuples (a tuple and its
+    space-joined key determine each other); only the top-n tie
+    candidates are joined, to break the tie on the key. Duplicated
+    n-gram coverage walks the starts in order and adds each
+    duplicated occurrence's not-yet-covered word characters (prefix
+    sums), which is the position-set union in O(words)."""
+    pre = list(accumulate(map(len, words), initial=0))
+    covers = []
+    for n in (*TOP_NS, *DUP_NS):
+        grams = list(zip(*(words[j:] for j in range(n))))
+        cnt = Counter(grams)
+        if n in TOP_NS:
+            c = max(cnt.values(), default=0)
+            key = min((" ".join(g) for g, k in cnt.items() if k == c), default="")
+            covers.append(c * (len(key) - (n - 1)))
+            continue
+        cover = end = 0
+        for i, g in enumerate(grams):
+            if cnt[g] >= 2:
+                cover += pre[i + n] - pre[max(i, end)]
+                end = i + n
+        covers.append(cover)
+    return covers
+
+
+def _doc_ratios(text: str | None, ws) -> list[tuple[int, int]]:
+    """(numerator, denominator) of each _SIGNALS entry for one doc; a
+    NULL text is the empty doc (the twin's COALESCE convention)."""
+    text = text or ""
+    words = [w for w in ws.split(text) if w]
+    lines = [u for u in text.split("\n") if u.strip(" ")]
+    paras = [u for u in text.split("\n\n") if u.strip(" ")]
+    swl = sum(map(len, words))
+    return [
+        *_unit_dups(lines),
+        *_unit_dups(paras),
+        *((cover, swl) for cover in _gram_covers(words)),
+    ]
+
+
+def _signal_batches(it):
+    """mapInArrow kernel: (doc_id, text) batches → doc_id, the 13 1e6
+    fixed-point ratios (-1 on an empty denominator), the 13 rules
+    (DEN * num <= NUM * den, vacuous pass on den = 0) and rep_pass —
+    Python integers throughout, so every value is exact."""
+    import re
+
+    import pyarrow as pa
+
+    from .quality_rules import FIXED, _WS
+
+    ws = re.compile(_WS)
+    names = [
         "doc_id",
-        words.alias("w"),
-        lines.alias("ln"),
-        paras.alias("pa"),
-        # coalesce mirrors the twin's COALESCE(list_sum(...), 0): a
-        # NULL text must yield swl=0 (vacuous rule passes) on BOTH
-        # engines, not NULL-on-one/0-on-the-other
-        F.coalesce(
-            F.aggregate(
-                F.transform(words, lambda x: F.length(x).cast("long")),
-                F.lit(0).cast("long"),
-                lambda a, x: a + x,
-            ),
-            F.lit(0).cast("long"),
-        ).alias("swl"),
-    )
-
-
-def _unit_structs(arr: Column, kind: str, n: int) -> Column:
-    """array<struct<kind,n,pos,key,wlen>> over the unit strings in
-    `arr` (two-arg transform lambda supplies the position)."""
-    return F.transform(
-        arr,
-        lambda x, i: F.struct(
-            F.lit(kind).alias("kind"),
-            F.lit(n).cast("int").alias("n"),
-            i.cast("long").alias("pos"),
-            x.alias("key"),
-            (F.length(x) - (n - 1)).cast("long").alias("wlen"),
-        ),
-    )
-
-
-def _exploded_units(base: DataFrame) -> DataFrame:
-    """(doc_id, kind, n, pos, key, wlen) for EVERY unit — lines,
-    paragraphs, single tokens (kind='tk', the coverage lookup side),
-    and n-grams for all configured n.
-
-    Construction cost drove this design (measured at sf0.1): building
-    n-gram keys with per-element `slice`+`array_join` lambdas runs
-    INTERPRETED (higher-order functions never enter whole-stage
-    codegen) at ~2 µs/unit — 5 s for 2.5 M units. Instead the tokens
-    are exploded once and every n-gram key is a codegen'd
-    `concat_ws(word, lead(word,1), …)` — all nine n values ride ONE
-    doc-keyed window sort (the `_with_stream_starts` one-sort-many-
-    expressions trick), and the per-row struct array explodes with a
-    null-gate for positions too close to the document end. Lines and
-    paragraphs stay HOF-built (a handful of units per doc — noise).
-    The shuffle introduced by the window is doc-keyed, same bound as
-    every other shuffle in this module."""
-    toks = base.select("doc_id", F.posexplode("w")).select(
-        "doc_id",
-        F.col("pos").cast("long").alias("wp"),
-        F.col("col").alias("word"),
-    )
-    all_ns = (*TOP_NS, *DUP_NS)
-    max_n = max(all_ns)
-    wspec = W.partitionBy("doc_id").orderBy("wp")
-    leads = toks.select(
-        "*",
-        *[
-            F.lead("word", j).over(wspec).alias(f"_w{j}")
-            for j in range(1, max_n)
-        ],
-    )
-
-    def g_struct(n: int) -> Column:
-        key = F.concat_ws(
-            " ", F.col("word"), *[F.col(f"_w{j}") for j in range(1, n)]
+        *(q for q, _, _ in _SIGNALS),
+        *(r for _, r, _ in _SIGNALS),
+        "rep_pass",
+    ]
+    for batch in it:
+        docs = [_doc_ratios(t, ws) for t in batch.column("text").to_pylist()]
+        qs, rules = [], []
+        for j, (_, _, (num, den)) in enumerate(_SIGNALS):
+            nd = [d[j] for d in docs]
+            qs.append(pa.array([n * FIXED // d if d else -1 for n, d in nd], pa.int64()))
+            rules.append([not d or den * n <= num * d for n, d in nd])
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("doc_id"),
+                *qs,
+                *(pa.array(r, pa.bool_()) for r in rules),
+                pa.array([all(r) for r in zip(*rules)], pa.bool_()),
+            ],
+            names=names,
         )
-        # valid iff the (n-1)-ahead token exists in the same doc; the
-        # window lead is partition-bounded so this is exactly wp <= W-n
-        return F.when(
-            F.col(f"_w{n - 1}").isNotNull(),
-            F.struct(
-                F.lit(f"g{n}").alias("kind"),
-                F.lit(n).cast("int").alias("n"),
-                F.col("wp").alias("pos"),
-                key.alias("key"),
-                (F.length(key) - (n - 1)).cast("long").alias("wlen"),
-            ),
-        )
-
-    ng = (
-        leads.select(
-            "doc_id",
-            F.explode(F.array(*[g_struct(n) for n in all_ns])).alias("u"),
-        )
-        .filter(F.col("u").isNotNull())
-        .select("doc_id", "u.*")
-    )
-    tk = toks.select(
-        "doc_id",
-        F.lit("tk").alias("kind"),
-        F.lit(1).cast("int").alias("n"),
-        F.col("wp").alias("pos"),
-        F.col("word").alias("key"),
-        F.length("word").cast("long").alias("wlen"),
-    )
-    lnpa = base.select(
-        "doc_id",
-        F.explode(
-            F.concat(
-                _unit_structs(F.col("ln"), "ln", 1),
-                _unit_structs(F.col("pa"), "pa", 1),
-            )
-        ).alias("u"),
-    ).select("doc_id", "u.*")
-    return ng.unionByName(tk).unionByName(lnpa)
 
 
 def repetition_signals(docs: DataFrame) -> DataFrame:
     """Per-doc repetition metrics + per-threshold booleans + rep_pass.
     Input needs (doc_id, text); output keyed by doc_id (one row per
     input row, including zero-word docs)."""
-    from ..registry import scoped_cache
-    from .quality_rules import FIXED
-
-    base = _base(docs)
-    # cache the one-scan unit explosion: five consumers (counts, the
-    # coverage occurrence join, the token lookup, and their branches)
-    # would otherwise each re-derive every unit kind. Scoped — the
-    # caller releases.
-    ex = scoped_cache(_exploded_units(base))
-    # ... and MATERIALIZE it (r10, VERDICT r9 next-round #4): the
-    # consumers all sit under ONE action, so a lazy cache is raced —
-    # each branch independently re-runs the tokenize+window explode
-    # until some task's partition lands in storage (the measured ~2×
-    # cost simhash_pairs documents for the same shape). One count()
-    # makes every branch read cached units.
-    ex.count()
-    units = ex.filter(F.col("kind") != "tk")
-    cnts = units.groupBy("doc_id", "kind", "n", "key").agg(
-        F.count("*").alias("c"), F.min("wlen").alias("wlen")
-    )
-
-    # lines/paragraphs: dup multiset fractions by count and by chars
-    dup = F.when(F.col("c") >= 2, F.col("c")).otherwise(F.lit(0).cast("long"))
-    dupch = F.when(F.col("c") >= 2, F.col("c") * F.col("wlen")).otherwise(
-        F.lit(0).cast("long")
-    )
-    lp = (
-        cnts.filter(F.col("kind").isin("ln", "pa"))
-        .groupBy("doc_id", "kind")
-        .agg(
-            F.sum("c").alias("tot_u"),
-            F.sum(dup).alias("dup_u"),
-            F.sum(F.col("c") * F.col("wlen")).alias("tot_ch"),
-            F.sum(dupch).alias("dup_ch"),
-        )
-    )
-    pick = lambda k, c: F.max(F.when(F.col("kind") == k, F.col(c)))  # noqa: E731
-    lpw = lp.groupBy("doc_id").agg(
-        *[
-            pick(k, c).alias(f"{k}_{c}")
-            for k in ("ln", "pa")
-            for c in ("tot_u", "dup_u", "tot_ch", "dup_ch")
+    schema = ", ".join(
+        [
+            f"doc_id {docs.schema['doc_id'].dataType.simpleString()}",
+            *(f"{q} bigint" for q, _, _ in _SIGNALS),
+            *(f"{r} boolean" for _, r, _ in _SIGNALS),
+            "rep_pass boolean",
         ]
     )
-
-    # top n-gram coverage (n in TOP_NS): occurrences x word-char length
-    # of the (count DESC, key ASC) winner
-    win = W.partitionBy("doc_id", "kind").orderBy(F.col("c").desc(), "key")
-    top = (
-        cnts.filter(F.col("kind").isin(*[f"g{n}" for n in TOP_NS]))
-        .withColumn("rn", F.row_number().over(win))
-        .filter(F.col("rn") == 1)
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.max(
-                    F.when(F.col("kind") == f"g{n}", F.col("c") * F.col("wlen"))
-                ).alias(f"top{n}_cover")
-                for n in TOP_NS
-            ],
-        )
-    )
-
-    # duplicated n-gram coverage (n in DUP_NS): union of covered word
-    # positions, then sum of those words' lengths
-    dupk = cnts.filter(
-        (F.col("n") >= min(DUP_NS)) & (F.col("c") >= 2)
-    ).select("doc_id", "kind", "n", "key")
-    occ = (
-        units.join(dupk, ["doc_id", "kind", "n", "key"])
-        .select(
-            "doc_id",
-            "kind",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + F.col("n") - 1)
-            ).alias("wp"),
-        )
-        .distinct()
-    )
-    toks = ex.filter(F.col("kind") == "tk").select(
-        "doc_id",
-        F.col("pos").alias("wp"),
-        F.col("wlen").alias("wordlen"),
-    )
-    cov = (
-        occ.join(toks, ["doc_id", "wp"])
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.sum(
-                    F.when(F.col("kind") == f"g{n}", F.col("wordlen")).otherwise(
-                        F.lit(0).cast("long")
-                    )
-                ).alias(f"dup{n}_cover")
-                for n in DUP_NS
-            ]
-        )
-    )
-
-    out = (
-        base.select("doc_id", "swl")
-        .join(lpw, "doc_id", "left")
-        .join(top, "doc_id", "left")
-        .join(cov, "doc_id", "left")
-    )
-    z = lambda c: F.coalesce(F.col(c), F.lit(0).cast("long"))  # noqa: E731
-    fixq = lambda num, den: F.coalesce(  # noqa: E731
-        F.expr(f"(({num}) * {FIXED}) div nullif({den}, 0)"),
-        F.lit(-1).cast("long"),
-    )
-    # rule: DEN * num <= NUM * den, vacuous pass on den = 0
-    rule = lambda num, den, nd: (den == 0) | (  # noqa: E731
-        nd[1] * num <= nd[0] * den
-    )
-    cols: dict[str, Column] = {}
-    rules: dict[str, Column] = {}
-    for k, label, fr_nd, ch_nd in (
-        ("ln", "line", LINE_FRAC_MAX, LINE_CHAR_MAX),
-        ("pa", "para", PARA_FRAC_MAX, PARA_CHAR_MAX),
-    ):
-        cols[f"dup_{label}_frac_q"] = fixq(f"{k}_dup_u", f"{k}_tot_u")
-        cols[f"dup_{label}_char_q"] = fixq(f"{k}_dup_ch", f"{k}_tot_ch")
-        rules[f"r_dup_{label}"] = rule(z(f"{k}_dup_u"), z(f"{k}_tot_u"), fr_nd)
-        rules[f"r_dup_{label}_char"] = rule(
-            z(f"{k}_dup_ch"), z(f"{k}_tot_ch"), ch_nd
-        )
-    for n in TOP_NS:
-        cols[f"top{n}_char_q"] = fixq(f"coalesce(top{n}_cover, 0)", "swl")
-        rules[f"r_top{n}"] = rule(z(f"top{n}_cover"), F.col("swl"), TOP_MAX[n])
-    for n in DUP_NS:
-        cols[f"dup{n}_char_q"] = fixq(f"coalesce(dup{n}_cover, 0)", "swl")
-        rules[f"r_dup{n}"] = rule(z(f"dup{n}_cover"), F.col("swl"), DUP_MAX[n])
-
-    res = out.select(
-        "doc_id",
-        *[v.alias(k) for k, v in cols.items()],
-        *[v.alias(k) for k, v in rules.items()],
-    )
-    return res.withColumn("rep_pass", F.expr(" AND ".join(rules)))
+    return docs.select("doc_id", "text").mapInArrow(_signal_batches, schema)
 
 
 def repetition_duckdb_sql(src: str = "documents") -> str:

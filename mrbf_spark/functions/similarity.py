@@ -16,6 +16,7 @@ smaller than float32 input noise.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
@@ -185,11 +186,14 @@ def _hyperplanes(dim: int) -> np.ndarray:
 def _matrix_df(spark: SparkSession, mat: np.ndarray) -> DataFrame:
     """One-row (mat: array<array<double>>) DataFrame carrying a small
     driver-side matrix into the plan as DATA (broadcast-cross-joined),
-    keeping literal bloat out of the expression tree. Doubles pass
-    through createDataFrame bit-exactly."""
-    return spark.createDataFrame(
-        [([[float(x) for x in row] for row in mat],)], "mat array<array<double>>"
-    )
+    keeping literal bloat out of the expression tree. Built from an
+    Arrow table, it plans as a LocalTableScan (a Python-list frame is
+    a Scan ExistingRDD that runs a Python-worker job), and the doubles
+    pass through bit-exactly."""
+    m = np.asarray(mat, dtype=np.float64)
+    rows = _double_list(m, pa, np)
+    one = pa.ListArray.from_arrays(pa.array([0, len(m)], pa.int32()), rows)
+    return spark.createDataFrame(pa.table({"mat": one}), "mat array<array<double>>")
 
 
 def with_matrix(df: DataFrame, spark: SparkSession, mat: np.ndarray) -> DataFrame:

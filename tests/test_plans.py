@@ -142,6 +142,35 @@ def test_bloom_build_has_one_python_stage_and_no_round_robin(spark, monkeypatch)
     assert "Python" not in out and "Exchange" not in out
 
 
+def test_repetition_signals_is_one_map_only_arrow_stage(spark):
+    """The Gopher repetition battery is per-document work: one
+    MapInArrow over the scan, with no shuffle, window or cache."""
+    from mrbf_spark.functions.repetition import repetition_signals
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    plan = physical_plan(repetition_signals(docs))
+    assert plan.count("MapInArrow") == 1
+    for op in ("Exchange", "Window", "InMemoryTableScan"):
+        assert op not in plan, op
+
+
+def test_matrix_frame_is_a_local_table_and_bit_exact(spark):
+    """with_matrix's one-row matrix frame plans as a LocalTableScan
+    (no Python-worker job to build it) and round-trips every double,
+    -0.0 and subnormals included, bit for bit."""
+    import numpy as np
+
+    from mrbf_spark.functions.similarity import _matrix_df
+
+    mat = np.random.RandomState(3).randn(6, 5)
+    mat[0, :3] = (-0.0, 5e-324, np.finfo(np.float64).max)
+    df = _matrix_df(spark, mat)
+    plan = physical_plan(df)
+    assert plan.startswith("LocalTableScan") and "ExistingRDD" not in plan
+    got = np.array(df.collect()[0]["mat"], dtype=np.float64)
+    assert got.shape == mat.shape and got.tobytes() == mat.tobytes()
+
+
 def test_topk_uses_window_not_global_sort(spark):
     plan = physical_plan(topk_per_group(spark, SF_SMOKE))
     assert "RunningWindowFunction" in plan or "Window" in plan
